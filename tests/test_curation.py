@@ -295,7 +295,7 @@ def test_batch_curated_matches_engine(built_index):
 
 def test_batch_curated_hidden_narrows_deepening_probe(spark):
     """Hidden docs must be excluded from the typo-deepening probe count
-    in batch mode, like engine._narrowed_count: hiding most cost-1 hits
+    in batch mode, like engine._deepen_level: hiding most cost-1 hits
     forces the query to deepen."""
     from typesense_spark.index import build_index
     from typesense_spark.search import SearchRequest, search

@@ -579,7 +579,7 @@ def test_batch_search_full_surface_with_typos_and_synonyms_dict(built_index):
 
 def test_batch_search_weighted_fields_matches_per_query(spark, corpus_df):
     """query_by_weights in batch mode: per-field weighted best, parity
-    with engine._score_tokens' weighted branch."""
+    with engine.search's weighted scoring."""
     ix = build_index(
         spark, corpus_df, fields=["content", "lang"],
         key_cols=["repo", "path", "commit"], num_buckets=4, block_size=32,
@@ -708,7 +708,7 @@ def test_batch_typo_deepening_with_weighted_fields(spark, corpus_df):
 
 def test_batch_typo_deepening_counts_filtered_results(spark):
     """Batch deepening must count NARROWED results (per-query filters
-    applied), like engine._narrowed_count: a query whose cost-1 hits
+    applied), like engine._deepen_level: a query whose cost-1 hits
     are outside its filter keeps deepening; the same query without a
     filter stops at cost 1 — in the SAME batch."""
     from typesense_spark.index import build_index

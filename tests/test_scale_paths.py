@@ -2,13 +2,20 @@
 Spark-join typo expansion vs driver dict, WAND pruning actually prunes,
 corpus validation splits."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from typesense_spark.index.validate import split_valid
-from typesense_spark.search.expand import expand_terms_spark, expand_token
+from typesense_spark.search.expand import (
+    _candidates_plan,
+    expand_token,
+    expand_tokens_batch,
+)
 
 
-def test_expand_terms_spark_matches_driver(built_index):
+def test_spark_expander_matches_expand_token(built_index):
+    """One-token expansions on the Spark expander equal the driver
+    spec, per typo budget and prefix setting."""
     terms_df = built_index.terms.where(F.col("field") == "content")
     term_df = {r["term"]: r["df"] for r in terms_df.collect()}
     for token, typos, prefix in [
@@ -18,11 +25,8 @@ def test_expand_terms_spark_matches_driver(built_index):
         ("retur", 2, True),
     ]:
         driver = expand_token(token, term_df, typos, prefix)
-        spark_side = sorted(
-            (r["term"], r["cost"])
-            for r in expand_terms_spark(terms_df, token, typos, prefix).collect()
-        )
-        assert spark_side == driver, (token, spark_side, driver)
+        spark_side = expand_tokens_batch(terms_df, [(token, prefix)], typos)
+        assert spark_side[(token, prefix)] == driver, (token, spark_side, driver)
 
 
 def test_wand_actually_prunes_blocks(built_index):
@@ -45,20 +49,14 @@ def test_wand_actually_prunes_blocks(built_index):
     ix = build_index(spark, df, fields=["content"], id_col="doc_id",
                      num_buckets=4, block_size=16)
     tdf = {r["term"]: r["df"] for r in ix.terms.collect()}
-    cand2 = expand_query(["hot", "tiny"], tdf, 0, False)
+    specs2 = [("hot", False), ("tiny", False)]
+    cand2 = expand_query(specs2, tdf, 0)
     terms2 = sorted({t for c in cand2.values() for t, _ in c})
     total2 = ix.candidate_postings(terms2, ["content"]).count()
-    survived2 = prune_blocks(
-        ix, ["hot", "tiny"], cand2, ("content",), k=3, min_blocks=0
-    ).count()
+    survived2 = prune_blocks(ix, specs2, cand2, ("content",), k=3, min_blocks=0).count()
     assert survived2 < total2  # metadata filter removed real blocks
 
     tokens = ["import", "return", "merge0"]
-    term_df = {
-        r["term"]: r["df"]
-        for r in built_index.terms.where(F.col("field") == "content").collect()
-    }
-    cand = expand_query(tokens, term_df, 0, False)
     # and results are still exact (vs exhaustive)
     naive = search(
         built_index,
@@ -133,10 +131,12 @@ def test_spark_expand_routing_matches_driver_path(built_index):
     assert sorted(spark_batch) == sorted(driver_batch)
 
 
-def test_expand_query_spark_matches_expand_query(built_index):
+def test_spark_expander_matches_expand_query(built_index):
+    """The two expanders share one contract: a multi-spec expansion on
+    the Spark expander equals the driver expand_query map, key for key."""
     from pyspark.sql import functions as F
 
-    from typesense_spark.search.expand import expand_query, expand_query_spark
+    from typesense_spark.search.expand import expand_query
 
     terms_df = (
         built_index.terms.where(F.col("field") == "content")
@@ -144,10 +144,8 @@ def test_expand_query_spark_matches_expand_query(built_index):
         .agg(F.sum("df").alias("df"))
     )
     term_df = {r["term"]: r["df"] for r in terms_df.collect()}
-    tokens = ["impor", "retur", "zygo"]
-    assert expand_query_spark(terms_df, tokens, 2, True) == expand_query(
-        tokens, term_df, 2, True
-    )
+    specs = [("impor", False), ("retur", False), ("zygo", True)]
+    assert expand_tokens_batch(terms_df, specs, 2) == expand_query(specs, term_df, 2)
 
 
 def test_osa_matches_duckdb_damerau_at_cost_1():
@@ -184,7 +182,7 @@ def test_osa_matches_duckdb_damerau_at_cost_1():
 def test_osa_spark_expansion_matches_driver(built_index):
     from pyspark.sql import functions as F
 
-    from typesense_spark.search.expand import expand_query, expand_query_spark
+    from typesense_spark.search.expand import expand_query
 
     terms_df = (
         built_index.terms.where(F.col("field") == "content")
@@ -192,11 +190,11 @@ def test_osa_spark_expansion_matches_driver(built_index):
         .agg(F.sum("df").alias("df"))
     )
     term_df = {r["term"]: r["df"] for r in terms_df.collect()}
-    tokens = ["imoprt", "retrun"]  # transpositions of import/return
-    spark_side = expand_query_spark(terms_df, tokens, 1, False, "osa")
-    driver_side = expand_query(tokens, term_df, 1, False, "osa")
+    specs = [("imoprt", False), ("retrun", False)]  # transpositions of import/return
+    spark_side = expand_tokens_batch(terms_df, specs, 1, "osa")
+    driver_side = expand_query(specs, term_df, 1, "osa")
     assert spark_side == driver_side
-    assert any(t == "import" for t, _ in driver_side["imoprt"])
+    assert any(t == "import" for t, _ in driver_side[("imoprt", False)])
 
 
 def test_rank_tokens_by_max_score_parity(spark):
@@ -206,7 +204,7 @@ def test_rank_tokens_by_max_score_parity(spark):
     from pyspark.sql import functions as F
 
     from typesense_spark.index import build_index
-    from typesense_spark.search.expand import expand_query, expand_query_spark
+    from typesense_spark.search.expand import expand_query
 
     # 'merga' is rare but high-score; three other variants are common
     # but low-score — with the 3-per-cost cap, FREQUENCY drops merga
@@ -225,12 +223,13 @@ def test_rank_tokens_by_max_score_parity(spark):
     )
     term_df = {r["term"]: r["df"] for r in agg.collect()}
     term_ms = {r["term"]: r["max_score"] for r in agg.collect()}
-    by_freq = expand_query(["merg"], term_df, 1, False)
-    by_score = expand_query(["merg"], term_df, 1, False, rank=term_ms)
-    spark_score = expand_query_spark(agg, ["merg"], 1, False, rank_col="max_score")
+    spec = [("merg", False)]
+    by_freq = expand_query(spec, term_df, 1)
+    by_score = expand_query(spec, term_df, 1, rank=term_ms)
+    spark_score = expand_tokens_batch(agg, spec, 1, rank_col="max_score")
     assert by_score == spark_score
-    assert "merga" in dict(by_score["merg"])  # high-score candidate kept
-    assert "merga" not in dict(by_freq["merg"])  # frequency cap drops it
+    assert "merga" in dict(by_score[spec[0]])  # high-score candidate kept
+    assert "merga" not in dict(by_freq[spec[0]])  # frequency cap drops it
     assert by_score != by_freq
 
 
@@ -258,18 +257,17 @@ def test_spark_expand_empty_tokens(built_index):
 
 
 def test_prefix_expansion_no_global_window(built_index):
-    """The prefix top-K on the scale path is a distributed
-    TakeOrderedAndProject, never a single-partition row_number window
-    (r2 VERDICT #5): every window in the plan must carry a partition
-    spec (the per-cost typo window partitions by cost)."""
+    """The prefix top-K on the scale path is never a single-partition
+    row_number window (r2 VERDICT #5): every window in the plan must
+    carry a partition spec (the prefix windows partition by token)."""
     terms_df = built_index.terms.where(F.col("field") == "content")
     plan = (
-        expand_terms_spark(terms_df, "zygo", 0, prefix=True)
+        _candidates_plan(terms_df, [("zygo", True)], 0, "levenshtein", "df")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
-    assert "TakeOrderedAndProject" in plan  # the distributed prefix top-K
+    assert "Window [" in plan
     # physical Window prints `Window [exprs], [partitionSpec], [orderSpec]`;
     # an empty partition spec (the single-partition shape) prints `], [], [`
     for line in plan.splitlines():
@@ -341,31 +339,33 @@ def test_wand_engagement_no_count_job(built_index, monkeypatch):
         return orig(self)
 
     monkeypatch.setattr(DataFrame, "count", spy)
-    cand = expand_query(["import", "return"], term_df, 0, False)
+    specs = [("import", False), ("return", False)]
+    cand = expand_query(specs, term_df, 0)
     # below-crossover shape: the estimate must short-circuit with ZERO
     # Spark jobs of any kind (old code burned one count job here)
     blocks = prune_blocks(
-        built_index, ["import", "return"], cand, ("content",),
-        k=10, min_blocks=10**9,
+        built_index, specs, cand, ("content",), k=10, min_blocks=10**9,
     )
     assert calls == [], "engagement decision ran a count job"
     assert "max_contrib" in blocks.columns  # unpruned blocks relation
 
 
-def test_expand_terms_spark_two_phase_cost_window(built_index):
-    """r3 VERDICT #5: the per-token scale path caps candidates with a
-    local (cost, physical-partition) phase before the final per-cost
-    window, so the ≤3-partition window never sees the full survivor
-    set. Both windows must carry a partition spec; results unchanged."""
-    from typesense_spark.search.expand import expand_terms_spark
-
+def test_spark_expander_two_phase_cost_window(built_index):
+    """r3 VERDICT #5: a one-token fuzzy expansion caps candidates with a
+    local (tok, cost, physical-partition) phase before the final
+    (tok, cost) window, so the ≤3-partition window never sees the full
+    survivor set. Both windows must carry a partition spec."""
     terms_df = built_index.terms.where(F.col("field") == "content")
-    df = expand_terms_spark(terms_df, "improt", 2, prefix=False)
+    df = _candidates_plan(terms_df, [("improt", False)], 2, "levenshtein", "df")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "SPARK_PARTITION_ID" in plan.upper() or "spark_partition_id" in plan
-    for line in plan.splitlines():
-        if "Window [" in line:
-            assert "], [], [" not in line, f"global window found: {line}"
+    assert "SPARK_PARTITION_ID()" in plan
+    windows = [line for line in plan.splitlines() if "Window [" in line]
+    for line in windows:
+        assert "], [], [" not in line, f"global window found: {line}"
+    # the tree prints top-down: the final cap (rn2) sits above the local
+    # per-partition phase (rn1) it reads from
+    caps = [w for w in windows if "AS rn1#" in w or "AS rn2#" in w]
+    assert ["AS rn2#" in w for w in caps] == [True, False], caps
 
 
 def test_batch_deepening_no_driver_actions(built_index, monkeypatch):
@@ -426,6 +426,53 @@ def test_batch_single_vector_fast_path(built_index):
     assert len(agg_lines) == 2, plan
     for line in agg_lines:
         assert "vec_id" not in line and "aidx" not in line, line
+
+
+def _logical_nodes(df) -> list:
+    """Every node of the optimized logical plan down to its leaves —
+    cached relations (the index tables) are leaves, so their build
+    lineage is not included."""
+    out, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        dict(q="import return", num_typos=0, prefix_last=False, facet_by=("lang",)),
+        dict(q="import return merge0", mode="or", num_typos=0, prefix_last=False,
+             filter_by="lang := python"),
+        dict(q="improt", num_typos=2, prefix_last=True),
+    ],
+    ids=["and2_facet", "or3_filter", "typo_prefix"],
+)
+def test_search_matched_plan_shape(built_index, kw):
+    """search()'s matched plan for the interactive query shapes — the
+    single-query twin of test_batch_single_vector_fast_path: the
+    candidate map attaches as a literal map expression (no driver-built
+    relation, no broadcast join carries it), and unweighted scoring is
+    exactly two aggregations (per-token max, per-doc sum)."""
+    from typesense_spark.search import SearchRequest, search
+    from typesense_spark.search.engine import _score_cache
+
+    res = search(built_index, SearchRequest(fields=("content",), **kw))
+    # the drop-tokens count persisted the scored rows; release them so
+    # the plan below shows the scoring lineage, not the cache scan
+    for cached in _score_cache.values():
+        for df in cached:
+            df.unpersist()
+    nodes = _logical_nodes(res.matched.select("doc_id", "score_milli"))
+    names = [n.nodeName() for n in nodes]
+    lines = [n.simpleString(100) for n in nodes]
+    assert names.count("Aggregate") == 2, lines
+    assert not {"LocalRelation", "LogicalRDD"} & set(names), lines
+    assert not [x for x in lines if x.startswith("Join") and "broadcast" in x], lines
+    assert any(x.startswith("Generate explode(element_at(map(") for x in lines), lines
 
 
 def test_engine_deepening_one_probe_job(built_index, monkeypatch):

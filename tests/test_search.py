@@ -31,6 +31,7 @@ BATTERY = [
     ("zygomorphik", {"num_typos": 2}, {"num_typos": 2}),   # typo cost 1-2
     ("zygo", {"num_typos": 0, "prefix_last": True}, {"prefix_last": True}),  # prefix
     ("import zzznotaterm", {"num_typos": 0}, {}),          # drop-tokens fallback
+    ("zzznotaterm import", {"num_typos": 0}, {}),          # d = n left-drop
     ("merge0 index0", {"num_typos": 0, "mode": "or"}, {"mode": "or"}),  # OR
 ]
 
@@ -40,6 +41,30 @@ def test_rank_identical_to_oracle(built_index, oracle_index, q, ekw, okw):
     got = engine_topk(built_index, q=q, per_page=10, **ekw)
     want = oracle_topk(oracle_index, q, k=10, **okw)
     assert got == want, f"query {q!r}: {got} != {want}"
+
+
+@pytest.mark.parametrize("q", ["zygo zygo", "merge1 merge1"])
+def test_repeated_token_prefix_on_last_position_only(built_index, oracle_index, q):
+    """Prefix applies to the LAST query position only (reference
+    src/index.cpp:1697-1702), so a repeated token's earlier copy stays a
+    whole-token match: search(), batch_search() and the oracle return
+    identical hits."""
+    from typesense_spark.search.batch import batch_search
+
+    got = engine_topk(built_index, q=q, num_typos=0, per_page=10)
+    want = oracle_topk(oracle_index, q, k=10)
+    batch = [
+        (r["doc_id"], r["score_milli"])
+        for r in batch_search(
+            built_index, [("q", q)], fields=("content",), num_typos=0, k=10,
+            drop_tokens_threshold=10,
+        )
+        .orderBy("rank")
+        .collect()
+    ]
+    assert got, q
+    assert got == want, f"search {got} != oracle {want}"
+    assert batch == want, f"batch_search {batch} != oracle {want}"
 
 
 def test_prefix_on_by_default(built_index, oracle_index):

@@ -163,3 +163,39 @@ def test_versioned_delete_rewrites_stream_tables(spark, built_index, tmp_path):
 
     with pytest.raises(ValueError, match="indexed fields"):
         snapshots.delete_docs_versioned(spark, root, [victim], ["content", "lang"])
+
+
+def test_versioned_delete_array_field(spark, tmp_path_factory):
+    """Copy-on-write delete on an index with an array<string> field:
+    victims and survivors tokenize through the same entry point as the
+    build, so array values repack instead of failing."""
+    from typesense_spark.index import build_index
+    from typesense_spark.search import SearchRequest, search
+
+    df = spark.createDataFrame(
+        [
+            (1, ["red apple", "green pear"]),
+            (2, ["blue sky"]),
+            (3, ["red wine", "red rose"]),
+        ],
+        schema="doc_id long, tags array<string>",
+    )
+    root = str(tmp_path_factory.mktemp("snap_array"))
+    bkw = dict(block_size=32, salt_threshold=100, n_salts=4)
+    ix = build_index(spark, df, fields=["tags"], id_col="doc_id", num_buckets=4, **bkw)
+    assert snapshots.commit_index(root, ix, n_groups=2, build_kw=bkw) == 1
+
+    out = snapshots.delete_docs_versioned(spark, root, [3])
+    assert out["version"] == 2 and out["rebuilt_groups"]
+
+    def hits(version=None):
+        req = SearchRequest(q="red", fields=("tags",), num_typos=0)
+        ix_v = snapshots.load_index(spark, root, version=version)
+        return {
+            (r["doc_id"], r["score_milli"]) for r in search(ix_v, req).hits.collect()
+        }
+
+    before, after = hits(1), hits()
+    assert {d for d, _ in before} == {1, 3}
+    # the survivor keeps its exact score (frozen stats), the victim is gone
+    assert after == {h for h in before if h[0] == 1}

@@ -940,8 +940,7 @@ def _batch_full_vectors():
     string work in BOTH implementations; everything dynamic (tokenize,
     BM25, expansion, fallback cutoff) is recomputed independently in SQL.
     Returns [(vid, qid, aidx, is_syn, tokens)] and {qid: [excluded]}."""
-    from typesense_spark.search.batch import _attempt_plan
-    from typesense_spark.search.engine import parse_query
+    from typesense_spark.search.engine import _attempt_plan, parse_query
     from typesense_spark.search.synonyms import synonym_reduction
 
     store = _batch_full_store()
@@ -1188,7 +1187,7 @@ def batch_grouped_oracle() -> str:
 # (cost 1, the corpus's ONE rare term) and 'data' (cost 2, frequent) —
 # the threshold stops d1 at cost 1, while d2's lang filter leaves too
 # few cost-1 hits so it deepens to cost 2 (the probe counts NARROWED
-# results, like the engine's _narrowed_count / reference
+# results, like the engine's _deepen_level / reference
 # src/index.cpp:947-950 which stops once FILTERED results reach the
 # threshold). d3 runs the level probe under a two-token AND; d4's
 # expansion has no cost-2 candidates (maxc=1), covering the

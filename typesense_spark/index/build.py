@@ -15,9 +15,11 @@ Scale design (10^12-file target):
 - doc_id assignment is a two-phase distributed rank (range-partition by
   natural key → partition-local row_number + broadcast offsets); no
   single-partition window.
-- tokenize → tf runs in Arrow-batched ``mapInPandas`` (the deliberate
-  numpy tokenize_mapper below — vectorized, not per-row Python); a
-  pure-JVM expression variant exists and is proven identical in tests.
+- tokenize → tf runs in Arrow-batched ``mapInArrow``
+  (:func:`tokenize_tf` — byte-LUT numpy tokenizer for ASCII rows, the
+  pinned Python tokenizer per row otherwise; array fields through
+  ``mapInPandas``); a pure-JVM expression variant exists and is proven
+  identical in tests.
 - per-(term,doc) BM25 contributions are quantized to int64 at build
   time (see ``scoring``), so query-time scoring is an exact long sum.
 - hot terms (df > salt_threshold) are salted into ``n_salts`` subgroups
@@ -248,8 +250,10 @@ def _tokenize_groups_ascii(doc_ids_np, offsets, values):
     Returns None (no tokens) or a dict of numpy/arrow arrays shared by
     the TF batch builder (:func:`_tokenize_batch_ascii`) and the
     partial-stats builder (:func:`_stats_batch_ascii`). Output
-    equivalence with the per-row ``tokenize_mapper`` (pinned spec) is
-    asserted in tests/test_index_build.py.
+    equivalence with the pinned Python tokenizer is asserted end to
+    end: the engine↔oracle tests in tests/test_search.py index through
+    this path, and the oracle tokenizes with
+    :func:`typesense_spark.tokenizer.tokenize`.
     """
     import pyarrow as pa
 
@@ -664,8 +668,8 @@ def stats_rows(docs: DataFrame, fld: str, score_col: str | None) -> DataFrame:
 
 
 def _tokenize_rows_python(doc_ids, texts, store_positions, fld):
-    """Per-row fallback (non-ASCII rows): the pinned-spec Python path,
-    identical to the original ``tokenize_mapper`` body."""
+    """Per-row fallback (non-ASCII rows): the pinned Python tokenizer,
+    grouped per (doc, term) with delta+varint packed positions."""
     import pyarrow as pa
 
     from typesense_spark.tokenizer import tokenize
@@ -720,14 +724,13 @@ def _tokenize_rows_python(doc_ids, texts, store_positions, fld):
 def tokenize_mapper_arrow(fld: str, store_positions: bool):
     """mapInArrow tokenize + per-doc grouping + position packing.
 
-    The r6 rework of :func:`tokenize_mapper` (guide §4.2): ASCII rows —
-    the overwhelmingly common case — run the fully vectorized
+    ASCII rows — the overwhelmingly common case — run the fully vectorized
     :func:`_tokenize_batch_ascii` (byte LUT + Arrow buffer slicing +
     dictionary-encode grouping); rows containing any non-ASCII byte
     fall back per row to the pinned Python tokenizer, preserving the
-    full unicode-fold spec. Output rows are identical to the old
-    mapper's up to ordering (downstream is aggregation/shuffle —
-    order-free).
+    full unicode-fold spec. Tokenization, (doc, term) grouping, tf, dl
+    and position packing all happen in this one pass over the corpus
+    scan, so no doc-level shuffle exists anywhere in the build.
     """
     import pyarrow as pa
 
@@ -797,73 +800,9 @@ def tokenize_tf(docs: DataFrame, fld: str, store_positions: bool) -> DataFrame:
     )
 
 
-def tokenize_mapper(fld: str, store_positions: bool):
-    """Map-side tokenize + per-doc term grouping + position packing.
-
-    The scale-critical design choice of the whole build: tokenization,
-    (doc, term) grouping, tf, dl, AND position delta+varint packing all
-    happen in ONE Arrow-batched pass over the corpus scan — NO doc-level
-    shuffle exists anywhere. The only wide shuffle in the build is the
-    final repartition-by-(term, salt) of compact rows whose positions
-    are already bytes. (The earlier explode → groupBy(doc, term) →
-    collect_list design shipped ~1 wide row per token occurrence
-    through two shuffles; it was shuffle-I/O-bound and did not scale
-    8→32 cores.) Uses the pinned Python tokenizer, so unicode folding
-    is identical to the oracle by construction.
-    """
-    from typesense_spark.tokenizer import tokenize
-
-    def gen(batches):
-        for pdf in batches:
-            doc_ids: list[int] = []
-            terms: list[str] = []
-            tfs: list[int] = []
-            dls: list[int] = []
-            flat_vals: list[int] = []
-            counts: list[int] = []
-            for doc_id, content in zip(pdf["doc_id"], pdf[fld]):
-                toks = tokenize(content or "")
-                dl = len(toks)
-                if dl == 0:
-                    continue
-                per: dict[str, list[int]] = {}
-                for t, p in toks:
-                    per.setdefault(t, []).append(p)
-                for t, ps in per.items():
-                    doc_ids.append(int(doc_id))
-                    terms.append(t)
-                    tfs.append(len(ps))
-                    dls.append(dl)
-                    if store_positions:
-                        counts.append(len(ps) + 1)
-                        flat_vals.append(len(ps))
-                        flat_vals.append(ps[0])
-                        for a, b in zip(ps, ps[1:]):
-                            flat_vals.append(b - a)
-            if store_positions and terms:
-                pos_bins = codec.varint_encode_split(
-                    np.asarray(flat_vals, dtype=np.uint64),
-                    np.asarray(counts, dtype=np.int64),
-                )
-            else:
-                pos_bins = [b""] * len(terms)
-            yield pd.DataFrame(
-                {
-                    "field": fld,
-                    "doc_id": pd.array(doc_ids, dtype="int64"),
-                    "term": terms,
-                    "tf": pd.array(tfs, dtype="int64"),
-                    "dl": pd.array(dls, dtype="int64"),
-                    "pos_bin": pos_bins,
-                }
-            )
-
-    return gen
-
-
 def tokenize_mapper_array(fld: str, store_positions: bool):
     """B5 array-string tokenize: one Arrow-batched pass like
-    :func:`tokenize_mapper`, but positions restart per element and are
+    :func:`tokenize_mapper_arrow`, but positions restart per element and are
     stored as ``elem_idx * ELEM_STRIDE + local_pos`` (see ELEM_STRIDE).
     dl / tf / df aggregate jointly across elements (pinned — the
     reference's tf is per-token occurrences over the whole array too)."""

@@ -301,10 +301,9 @@ def delete_docs_versioned(
 
     from typesense_spark.index.build import (
         FieldStats,
-        TF_SCHEMA,
         pack_pipeline,
         term_bucket_expr,
-        tokenize_mapper,
+        tokenize_tf,
     )
 
     m = read_manifest(root)
@@ -327,9 +326,7 @@ def delete_docs_versioned(
 
     touched: set[int] = set()
     for fld in fields:
-        tf = victims.select("doc_id", fld).mapInPandas(
-            tokenize_mapper(fld, False), schema=TF_SCHEMA
-        )
+        tf = tokenize_tf(victims, fld, False)
         rows = (
             tf.select(term_bucket_expr(F.col("term"), num_buckets).alias("b"))
             .distinct()
@@ -344,12 +341,7 @@ def delete_docs_versioned(
     def _repack(docs_df: DataFrame, group: int | None) -> DataFrame:
         """Survivor docs → packed postings against the FROZEN dictionary
         (optionally restricted to one commit group's buckets)."""
-        tf_parts = [
-            docs_df.select("doc_id", fld).mapInPandas(
-                tokenize_mapper(fld, True), schema=TF_SCHEMA
-            )
-            for fld in fields
-        ]
+        tf_parts = [tokenize_tf(docs_df, fld, True) for fld in fields]
         tf_g = tf_parts[0]
         for p in tf_parts[1:]:
             tf_g = tf_g.unionByName(p)

@@ -19,12 +19,14 @@ this pure-Python DP all agree); rank ties broken by term ASC for
 determinism; a doc scores each query token as the MAX BM25 contribution
 over that token's candidates.
 
-Two implementations:
-- driver path (here): expand against a collected {term: df} dict —
-  fine up to tens of millions of terms;
-- scale path: :func:`expand_terms_spark` — an ``F.levenshtein`` join
-  against the terms DataFrame with a per-cost ranked window, for
-  dictionaries too large to collect.
+Two expanders with one contract — a list of (token, prefix?) specs in,
+{(token, prefix?): [(term, cost)]} out:
+- driver path: :func:`expand_query` against a collected {term: df}
+  dict — fine up to tens of millions of terms;
+- scale path: :func:`expand_tokens_batch` — one length-bucketed
+  ``F.levenshtein`` join against the terms DataFrame with two-phase
+  ranked windows, for dictionaries too large to collect.
+``engine._expand`` routes between them for single and batch search.
 """
 
 from __future__ import annotations
@@ -126,106 +128,28 @@ def expand_token(
         )[:MAX_CANDIDATES_PREFIX]
         for _, t in pref:
             # a term reachable both ways keeps the MIN cost (prefix = 0),
-            # matching the Spark-join path's groupBy(term).min(cost)
+            # like expand_tokens_batch's prefix merge
             out[t] = 0
     return sorted(out.items())
 
 
 def expand_query(
-    tokens: list[str],
+    specs: list[tuple[str, bool]],
     term_df: dict[str, int],
     num_typos: int = 2,
-    prefix_last: bool = True,
     distance: str = "levenshtein",
     rank: dict[str, int] | None = None,
-) -> dict[str, list[tuple[str, int]]]:
-    """All query tokens → candidate map (prefix applies to last token)."""
+) -> dict[tuple[str, bool], list[tuple[str, int]]]:
+    """Every (token, prefix?) spec → candidate map, driver side — the
+    same contract as :func:`expand_tokens_batch`. Keying by the spec,
+    not the token, keeps a repeated token's copies apart: only the
+    last-position copy is prefix-expanded."""
     return {
-        tok: expand_token(
-            tok, term_df, num_typos,
-            prefix=prefix_last and i == len(tokens) - 1, distance=distance,
-            rank=rank,
+        (tok, pref): expand_token(
+            tok, term_df, num_typos, prefix=pref, distance=distance, rank=rank
         )
-        for i, tok in enumerate(tokens)
+        for tok, pref in specs
     }
-
-
-def expand_terms_spark(
-    terms_df: DataFrame,
-    token: str,
-    num_typos: int = 2,
-    prefix: bool = False,
-    distance: str = "levenshtein",
-    rank_col: str = "df",
-) -> DataFrame:
-    """Scale path: the same expansion as a Spark plan over the terms table.
-
-    Returns (term, cost). ``F.levenshtein`` with a threshold is
-    Catalyst-optimized; the rank caps use a per-cost window. The length
-    pre-filter (|len(term) - len(token)| ≤ max_cost is a Levenshtein
-    lower bound) lets codegen skip the DP for most of the dictionary.
-    The per-cost window only ever sees the ≤max_cost survivors, so the
-    3-partition shuffle it implies is over a tiny set, not the dictionary.
-    """
-    max_cost = bounded_typo_cost(token, num_typos)
-    pre = terms_df.where(
-        (F.length("term") >= len(token) - max_cost)
-        & (F.length("term") <= len(token) + max_cost)
-    )
-    rk = F.col(rank_col)
-    if distance == "osa":
-        # no JVM builtin for OSA; keep codegen for the coarse filter:
-        # a transposition is at most two plain edits, so lev ≤ 2·osa
-        # and osa ≤ max_cost ⟹ lev ≤ 2·max_cost — filter on that in
-        # the JVM, then run the exact OSA DP on the tiny survivor set
-        # in an Arrow-batched pandas UDF
-        from pyspark.sql.functions import pandas_udf
-
-        # lambda (no type hints): module-wide `from __future__ import
-        # annotations` turns hints into strings pyspark can't resolve
-        osa_udf = pandas_udf(lambda terms: terms.map(lambda t: osa(t, token)), "int")
-
-        cand = (
-            pre.where(F.levenshtein(F.col("term"), F.lit(token)) <= 2 * max_cost)
-            .select("term", rank_col, osa_udf(F.col("term")).alias("cost"))
-            .where(F.col("cost") <= max_cost)
-        )
-    else:
-        cand = pre.select(
-            "term", rank_col, F.levenshtein(F.col("term"), F.lit(token)).alias("cost")
-        ).where(F.col("cost") <= max_cost)
-    # two-phase per-cost top-3 (r3 VERDICT #5, same shape as the batch
-    # path's prefix cap): the local phase bounds each (cost, physical
-    # partition) to MAX_CANDIDATES rows, so the final per-cost window —
-    # which necessarily funnels into ≤ max_cost+1 partitions — only ever
-    # sees ≤ 3·n_partitions pre-capped rows, never the full ≤max_cost
-    # survivor set of a 5e9-term dictionary
-    w1 = Window.partitionBy("cost", F.spark_partition_id()).orderBy(
-        rk.desc(), F.col("term")
-    )
-    w2 = Window.partitionBy("cost").orderBy(rk.desc(), F.col("term"))
-    typo = (
-        cand.withColumn("rn1", F.row_number().over(w1))
-        .where((F.col("cost") == 0) | (F.col("rn1") <= MAX_CANDIDATES))
-        .withColumn("rn", F.row_number().over(w2))
-        .where((F.col("cost") == 0) | (F.col("rn") <= MAX_CANDIDATES))
-        .select("term", "cost")
-    )
-    if not prefix:
-        return typo
-    # distributed top-K (TakeOrderedAndProject: per-partition top-K,
-    # tiny driver merge) — NOT a global row_number window, which funnels
-    # every prefix match into one task; a 1-2 char prefix over a 5e9-term
-    # dictionary is exactly the shape that must not single-partition
-    # (r2 VERDICT #5). Plan asserted in tests/test_scale_paths.py.
-    pref = (
-        terms_df.where(F.col("term").startswith(token) & (F.col("term") != token))
-        .select("term", rank_col)
-        .orderBy(rk.desc(), F.col("term"))
-        .limit(MAX_CANDIDATES_PREFIX)
-        .select("term", F.lit(0).alias("cost"))
-    )
-    return typo.unionByName(pref).groupBy("term").agg(F.min("cost").alias("cost"))
 
 
 def expand_tokens_batch(
@@ -235,32 +159,68 @@ def expand_tokens_batch(
     distance: str = "levenshtein",
     rank_col: str = "df",
 ) -> dict[tuple[str, bool], list[tuple[str, int]]]:
-    """Expand EVERY unique (token, prefix?) of a query batch in ONE
-    Spark plan (r2 VERDICT #7: ``batch_search`` issued one
-    ``expand_query_spark`` plan+collect per query — N driver
-    round-trips for an N-query batch).
+    """Expand EVERY unique (token, prefix?) spec in ONE Spark plan — the
+    scale path for dictionaries too large to collect, shared by single
+    and batch search (O(1) driver round-trips for an N-query batch).
+    Only the bounded candidate sets are collected (≤ 3·num_typos + 11
+    rows per token), never the dictionary.
+
+    Semantics per token are exactly :func:`expand_token` (asserted in
+    tests); returns {(tok, prefix): [(term, cost)]}.
+    """
+    if not token_specs:
+        return {}
+    merged: dict[tuple[str, str], dict[str, int]] = {}
+    for r in _candidates_plan(
+        terms_df, token_specs, num_typos, distance, rank_col
+    ).collect():
+        merged.setdefault((r["tok"], r["src"]), {})[r["term"]] = int(r["cost"])
+    out = {}
+    for tok, pref in token_specs:
+        m = dict(merged.get((tok, "typo"), {}))
+        if pref:
+            # a term reachable both ways keeps the MIN cost (prefix = 0)
+            m.update(merged.get((tok, "pref"), {}))
+        out[(tok, pref)] = sorted(m.items())
+    return out
+
+
+def _candidates_plan(
+    terms_df: DataFrame,
+    token_specs: list[tuple[str, bool]],
+    num_typos: int,
+    distance: str,
+    rank_col: str,
+) -> DataFrame:
+    """The plan behind :func:`expand_tokens_batch`: (tok, term, cost,
+    src) rows, ``src`` = 'typo' (serves every spec of the token) or
+    'pref' (prefix specs only).
 
     Set-oriented shape: the token table broadcasts, exploded to one row
     per permitted candidate LENGTH (|len(term) − len(tok)| ≤ max_cost is
     a Levenshtein lower bound), and equi-joins the dictionary on
     ``length(term)`` — a hash join that computes the distance only
     inside matching length buckets, one plan for ANY number of tokens.
-    Candidate caps use windows partitioned by (tok, cost) — thousands
-    of batch tokens spread across partitions, never a global window;
-    the prefix top-10 is two-phase (per-physical-partition local top,
-    then per-token final top). Only the bounded candidate sets are
-    collected (≤ 3·num_typos + 11 rows per token).
-
-    Semantics per token are exactly :func:`expand_token` (asserted in
-    tests); returns {(tok, prefix): [(term, cost)]}.
+    Every candidate cap is two-phase: a local top per (key, physical
+    partition) first, then the final window per key — so a one-token
+    expansion, whose per-cost window funnels into ≤ max_cost+1
+    partitions, only ever sees ≤ cap·n_partitions pre-capped rows (r3
+    VERDICT #5), and a 1-char prefix over a huge dictionary never
+    funnels every match into one task. No window is global.
     """
     spark = terms_df.sparkSession
-    out: dict[tuple[str, bool], list[tuple[str, int]]] = {
-        spec: [] for spec in token_specs
-    }
-    if not token_specs:
-        return out
     rk = F.col(rank_col)
+
+    def _two_phase_cap(df: DataFrame, keys: list[str], cap: int, keep) -> DataFrame:
+        order = (rk.desc(), F.col("term"))
+        w1 = Window.partitionBy(*keys, F.spark_partition_id()).orderBy(*order)
+        w2 = Window.partitionBy(*keys).orderBy(*order)
+        return (
+            df.withColumn("rn1", F.row_number().over(w1))
+            .where(keep | (F.col("rn1") <= cap))
+            .withColumn("rn2", F.row_number().over(w2))
+            .where(keep | (F.col("rn2") <= cap))
+        )
 
     # cost-0 tokens (num_typos=0, or the len<3 cost cap) need no edit
     # distance at all: a plain equi-join on the term — for a typo-free
@@ -292,9 +252,11 @@ def expand_tokens_batch(
             F.broadcast(lens), F.length(F.col("term")) == F.col("tlen")
         )
         if distance == "osa":
-            # JVM lev ≤ 2·max_cost prefilter (a transposition is ≤ 2
-            # plain edits), exact OSA on the survivors in an Arrow-
-            # batched UDF — same construction as expand_terms_spark
+            # no JVM builtin for OSA; keep codegen for the coarse filter:
+            # a transposition is at most two plain edits, so lev ≤ 2·osa
+            # and osa ≤ max_cost ⟹ lev ≤ 2·max_cost — filter on that in
+            # the JVM, then run the exact OSA DP on the tiny survivor set
+            # in an Arrow-batched pandas UDF
             from pyspark.sql.functions import pandas_udf
 
             osa_udf = pandas_udf(
@@ -311,24 +273,22 @@ def expand_tokens_batch(
             cand = joined.withColumn(
                 "cost", F.levenshtein(F.col("term"), F.col("tok"))
             ).where(F.col("cost") <= F.col("max_cost"))
-        w = Window.partitionBy("tok", "cost").orderBy(rk.desc(), F.col("term"))
         parts.append(
-            cand.withColumn("rn", F.row_number().over(w))
-            .where((F.col("cost") == 0) | (F.col("rn") <= MAX_CANDIDATES))
-            .select("tok", "term", "cost")
+            _two_phase_cap(
+                cand, ["tok", "cost"], MAX_CANDIDATES, F.col("cost") == 0
+            ).select("tok", "term", "cost")
         )
     typo = parts[0]
     for p in parts[1:]:
         typo = typo.unionByName(p)
+    plan = typo.withColumn("src", F.lit("typo"))
 
     pref_tokens = sorted({tok for tok, pref in token_specs if pref})
-    plan = typo
     if pref_tokens:
         # ONE scan of the dictionary for ALL prefix tokens: each term
         # explodes to its prefixes at the batch's distinct token
         # lengths (≤ a dozen values — map-side, no extra scan per
-        # length), then a broadcast equi-join on the prefix string.
-        # (The r3-pre shape unioned one terms scan PER length.)
+        # length), then a broadcast equi-join on the prefix string
         lengths = sorted({len(t) for t in pref_tokens})
         pfx = F.array_compact(
             F.array(
@@ -345,76 +305,8 @@ def expand_tokens_batch(
             terms_df.select("term", rk, F.explode(pfx).alias("_pfx"))
             .join(F.broadcast(ptoks), F.col("_pfx") == F.col("tok"))
         )
-        # two-phase per-token top-10: local top per physical partition
-        # bounds the final window's partition size (a 1-char prefix over
-        # a 5e9-term dictionary must not funnel into one task)
-        w1 = Window.partitionBy("tok", F.spark_partition_id()).orderBy(
-            rk.desc(), F.col("term")
-        )
-        w2 = Window.partitionBy("tok").orderBy(rk.desc(), F.col("term"))
-        pref_top = (
-            pref_cand.withColumn("rn1", F.row_number().over(w1))
-            .where(F.col("rn1") <= MAX_CANDIDATES_PREFIX)
-            .withColumn("rn2", F.row_number().over(w2))
-            .where(F.col("rn2") <= MAX_CANDIDATES_PREFIX)
-            .select("tok", "term", F.lit(0).alias("cost"))
-        )
-        # tag rows: typo rows serve both prefix and non-prefix specs;
-        # prefix rows only prefix specs — resolved per spec below
-        plan = typo.withColumn("src", F.lit("typo")).unionByName(
-            pref_top.withColumn("src", F.lit("pref"))
-        )
-    else:
-        plan = typo.withColumn("src", F.lit("typo"))
-
-    merged: dict[tuple[str, str], dict[str, int]] = {}
-    for r in plan.collect():
-        m = merged.setdefault((r["tok"], r["src"]), {})
-        t, c = r["term"], int(r["cost"])
-        if t not in m or c < m[t]:
-            m[t] = c
-    for tok, pref in token_specs:
-        m = dict(merged.get((tok, "typo"), {}))
-        if pref:
-            for t, c in merged.get((tok, "pref"), {}).items():
-                if t not in m or c < m[t]:
-                    m[t] = c
-        out[(tok, pref)] = sorted(m.items())
-    return out
-
-
-def expand_query_spark(
-    terms_df: DataFrame,
-    tokens: list[str],
-    num_typos: int = 2,
-    prefix_last: bool = True,
-    distance: str = "levenshtein",
-    rank_col: str = "df",
-) -> dict[str, list[tuple[str, int]]]:
-    """Same contract as :func:`expand_query`, but the dictionary stays
-    distributed: every token's expansion is one branch of a single
-    union plan, and only the BOUNDED candidate sets are collected
-    (≤ num_typos·MAX_CANDIDATES + MAX_CANDIDATES_PREFIX + 1 per token —
-    a handful of rows), never the dictionary itself. This is the
-    default query path once the dictionary exceeds the driver-collect
-    threshold (engine._get_term_df scale note)."""
-    if not tokens:
-        return {}  # e.g. q='' or exclusion-only queries — match driver path
-    branches = [
-        expand_terms_spark(
-            terms_df, tok, num_typos,
-            prefix=prefix_last and i == len(tokens) - 1, distance=distance,
-            rank_col=rank_col,
-        ).select(F.lit(i).alias("qidx"), "term", "cost")
-        for i, tok in enumerate(tokens)
-    ]
-    plan = branches[0]
-    for b in branches[1:]:
-        plan = plan.unionByName(b)
-    cand: dict[str, dict[str, int]] = {tok: {} for tok in tokens}
-    for r in plan.collect():
-        tok = tokens[r["qidx"]]
-        t, c = r["term"], int(r["cost"])
-        if t not in cand[tok] or c < cand[tok][t]:
-            cand[tok][t] = c
-    return {tok: sorted(m.items()) for tok, m in cand.items()}
+        pref_top = _two_phase_cap(
+            pref_cand, ["tok"], MAX_CANDIDATES_PREFIX, F.lit(False)
+        ).select("tok", "term", F.lit(0).alias("cost"), F.lit("pref").alias("src"))
+        plan = plan.unionByName(pref_top)
+    return plan

@@ -35,14 +35,15 @@ from pyspark.sql import functions as F
 
 def prune_blocks(
     index,
-    tokens: list[str],
-    cand_map: dict[str, list[tuple[str, int]]],
+    specs: list[tuple[str, bool]],
+    cand_map: dict[tuple[str, bool], list[tuple[str, int]]],
     fields,
     k: int,
     min_blocks: int = 256,
     keep_ids: DataFrame | None = None,
 ) -> DataFrame:
-    """Return the pruned postings-block DataFrame for an OR query.
+    """Return the pruned postings-block DataFrame for an OR query over
+    the query's (token, prefix?) ``specs`` (``engine._specs``).
 
     ``keep_ids``: optional filter keep-set (doc_id). The reference
     evaluates filters FIRST and searches within them
@@ -53,7 +54,7 @@ def prune_blocks(
     plan. Soundness is unchanged: τ lower-bounds the k-th best filtered
     full score (it is the exact score of k specific filtered docs), and
     a pruned block only drops docs whose total score bound is < τ."""
-    tok_terms = {tok: [t for t, _ in cand_map.get(tok, [])] for tok in tokens}
+    tok_terms = {s: [t for t, _ in cand_map.get(s, [])] for s in specs}
     all_terms = sorted({t for ts in tok_terms.values() for t in ts})
     if not all_terms:
         return index.candidate_postings([], list(fields))
@@ -85,9 +86,9 @@ def prune_blocks(
         tok: max((term_ub.get(t, 0) for t in ts), default=0)
         for tok, ts in tok_terms.items()
     }
-    # duplicates in the token list each contribute to a doc's score →
+    # duplicates in the spec list each contribute to a doc's score →
     # count every instance in the global upper bound (conservative)
-    total_ub = sum(tok_ub.get(t, 0) for t in tokens)
+    total_ub = sum(tok_ub.get(s, 0) for s in specs)
 
     # lower-bound pass (two probes):
     # 1. seed docs = top-k of the heaviest token alone (cheap scan);
@@ -96,7 +97,7 @@ def prune_blocks(
     #    seed (metadata filter). Exact achieved scores approach the sum
     #    of upper bounds, so τ can exceed any single token's ub — the
     #    one-token partial bound never prunes other tokens' blocks.
-    heavy = max(tokens, key=lambda t: tok_ub.get(t, 0))
+    heavy = max(specs, key=lambda s: tok_ub.get(s, 0))
     heavy_terms = tok_terms.get(heavy) or all_terms
     from typesense_spark.index.build import decode_postings
 
@@ -115,8 +116,8 @@ def prune_blocks(
         for s in seeds:
             c = (F.col("min_doc_id") <= s) & (F.col("max_doc_id") >= s)
             cover = c if cover is None else (cover | c)
-        term_tok = [(t, tok) for tok, ts in tok_terms.items() for t in ts]
-        tmap = index.spark.createDataFrame(term_tok, schema="term string, qtok string")
+        term_tok = [(t, j) for j, ts in enumerate(tok_terms.values()) for t in ts]
+        tmap = index.spark.createDataFrame(term_tok, schema="term string, qtok int")
         exact = (
             decode_postings(blocks.where(cover))
             .where(F.col("doc_id").isin(seeds))

@@ -29,8 +29,9 @@ Reference parity (``/root/reference/src/tokenizer.cpp:4-112``):
 Implementations (proven identical by ``tests/test_tokenizer.py``):
 
 1. :func:`tokenize` — pure Python, shared by the oracle and the engine
-   driver (query parsing), and by the index build's Arrow-batched
-   ``tokenize_mapper`` (so the INDEX always uses the full pinned spec).
+   driver (query parsing), and by the index build's per-row fallback
+   for non-ASCII rows and array fields (``build.tokenize_tf``; ASCII
+   rows take its byte-LUT numpy fast path to the same tokens).
 2. :func:`explode_tokens` — pure Spark SQL expressions (JVM whole-stage
    codegen; the ops hot path). Folding uses a 1:1 char translate table
    generated from the SAME ``_fold_char`` (see :func:`fold_table`);
