@@ -332,6 +332,32 @@ def test_request_validation_limits(built_index):
             search(built_index, SearchRequest(q="import", fields=("content",), **bad))
 
 
+def test_group_limit_cap_single_and_batch(built_index):
+    """group_limit > 99 is rejected with the same error by search() and
+    by both batch grouping entry points (the check lives in the group
+    ranking they share)."""
+    import pytest
+
+    from typesense_spark.search import SearchRequest, search
+    from typesense_spark.search.batch import batch_grouped, batch_grouped_curated
+
+    kw = dict(fields=("content",), num_typos=0)
+    msg = "group_limit must be <= 99"
+    with pytest.raises(ValueError, match=msg):
+        search(
+            built_index,
+            SearchRequest(q="import", group_by=("lang",), group_limit=100, **kw),
+        )
+    qset = [("a", "import")]
+    with pytest.raises(ValueError, match=msg):
+        batch_grouped(built_index, qset, ("lang",), group_limit=100, **kw)
+    with pytest.raises(ValueError, match=msg):
+        batch_grouped_curated(
+            built_index, qset, ("lang",), group_limit=100,
+            pinned={"a": {1: 1}}, **kw,
+        )
+
+
 def test_array_positions_per_element_at_rest(spark):
     """B5 complete (r2 VERDICT #7): stored array-field positions encode
     (element index, local position) via ELEM_STRIDE — proximity windows

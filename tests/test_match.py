@@ -3,9 +3,11 @@
 
 from typesense_spark.search.match import (
     highlight,
+    match_rescore,
     match_score,
     packed_match_score,
-    proximity_rescore,
+    proximity_score,
+    text_match_score,
 )
 
 
@@ -48,8 +50,9 @@ def test_packed_score_layout():
 def test_proximity_rescore_spark(built_index):
     from pyspark.sql import functions as F
 
-    cands = built_index.docs.select("doc_id").limit(50)
-    scored = proximity_rescore(built_index, cands, ["import", "return"], ["content"])
+    cands = built_index.docs.select(F.lit("q").alias("qid"), "doc_id").limit(50)
+    specs = {"q": [("import", 0, 0), ("return", 1, 0)]}
+    scored = match_rescore(built_index, cands, specs, ["content"], "proximity")
     rows = scored.collect()
     assert rows
     for r in rows:
@@ -69,6 +72,52 @@ def test_proximity_rescore_spark(built_index):
             plists[t].append(p)
     present = [v for v in plists.values() if v]
     assert packed_match_score(present) == rows[0]["match_score"]
+
+
+def _entries(*rows):
+    return [{"slot": s, "cost": c, "positions": p} for s, c, p in rows]
+
+
+def test_scorer_single_list_rules():
+    """A one-list doc: proximity runs the sweep (distance 100),
+    text-match scores the reference's single-token Match(1, 0) and
+    carries the cost byte."""
+    one = _entries((0, 1, [4, 9]))
+    assert proximity_score(one) == (1 << 16) | (255 << 8) | 100
+    assert text_match_score(one) == (1 << 16) | (254 << 8) | 0
+
+
+def test_scorer_min_cost_wins_equal_cost_unions():
+    """Per slot the min-cost candidate's positions are used; equal-cost
+    candidates union their positions; costs sum over matched slots."""
+    entries = _entries(
+        (0, 2, [1]),       # costlier candidate for slot 0 — ignored
+        (0, 1, [50]),
+        (0, 1, [20]),      # equal-cost: positions union with [50]
+        (1, 0, [22]),
+        (1, 1, [21]),      # costlier candidate for slot 1 — ignored
+    )
+    # slot 0 → [20, 50], slot 1 → [22]: best window {20, 22}, spread 2
+    assert text_match_score(entries) == (2 << 16) | ((255 - 1) << 8) | 98
+    assert proximity_score(entries) == (2 << 16) | (255 << 8) | 98
+    # the min-cost rule, not arrival order: the same rows reversed
+    assert text_match_score(entries[::-1]) == text_match_score(entries)
+
+
+def test_scorer_window_cap_keeps_first_ten_slots():
+    """With more than 10 lists the cap keeps the first 10 in slot (tid)
+    order, whatever order collect_list delivered them in."""
+    # slots 0..9 sit far apart (spread > window), slots 10/11 cluster
+    far = [(i, 0, [i * 100]) for i in range(10)]
+    near = [(10, 0, [5000]), (11, 0, [5001])]
+    entries = _entries(*(near + far[::-1]))
+    # only slots 0..9 are seen: no two within the window → Match(1, 100)
+    for score in (proximity_score, text_match_score):
+        assert score(entries) >> 16 == 1
+        assert score(entries) & 0xFF == 100
+    # dropping slots 0 and 1 brings the cluster into the first ten
+    for score in (proximity_score, text_match_score):
+        assert score(_entries(*(near + far[2:]))) >> 16 == 2
 
 
 def test_highlight_marks_terms():

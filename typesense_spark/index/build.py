@@ -549,60 +549,74 @@ def _stats_rows_python(doc_ids, texts, scores, fld):
     return out
 
 
-def stats_mapper_arrow(fld: str, has_score: bool):
-    """mapInArrow partial-stats mapper over (doc_id, fld[, score])
-    batches — the r6 stats/dictionary pass (see STATS_SCHEMA note)."""
+def _text_routes(batches, has_side: bool):
+    """The per-batch router the tokenize and stats mappers share, over
+    (doc_id, text[, side]) Arrow batches → (doc_ids, texts, offsets,
+    values, side) work items. Null texts fill to ""; a non-string
+    column goes whole to the per-row fallback (``texts`` set), as do
+    the rows holding any byte >= 0x80, which preserves the full
+    unicode-fold spec; the ASCII rest — the overwhelmingly common case
+    — goes to the vectorized path as its Arrow ``offsets``/``values``
+    buffers (``texts`` None). ``side`` is the optional third column
+    (the static score) as int64, sliced alongside the doc ids."""
     import pyarrow as pa
 
-    def gen(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            arr = batch.column(1)
-            doc_ids_np = batch.column(0).to_numpy(zero_copy_only=False)
-            scores_np = (
-                batch.column(2).to_numpy(zero_copy_only=False).astype(np.int64)
-                if has_score
-                else None
-            )
-            if arr.null_count:
-                import pyarrow.compute as pc
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        arr = batch.column(1)
+        doc_ids_np = batch.column(0).to_numpy(zero_copy_only=False)
+        side = (
+            batch.column(2).to_numpy(zero_copy_only=False).astype(np.int64)
+            if has_side
+            else None
+        )
+        if arr.null_count:
+            import pyarrow.compute as pc
 
-                arr = pc.fill_null(arr, "")
-            if not pa.types.is_string(arr.type):
-                yield from _stats_rows_python(
-                    doc_ids_np, arr.to_pylist(), scores_np, fld
-                )
-                continue
-            offsets, values = _binary_buffers(arr)
-            offsets = offsets.astype(np.int64)
-            if not (values >= 0x80).any():
-                row_hi = None
-            else:
-                hi = np.zeros(values.size + 1, dtype=np.int64)
-                np.cumsum(values >= 0x80, out=hi[1:])
-                row_hi = (hi[offsets[1:]] - hi[offsets[:-1]]) > 0
-            if row_hi is not None and row_hi.any():
-                idx = np.flatnonzero(row_hi)
-                texts = [arr[int(i)].as_py() for i in idx]
-                yield from _stats_rows_python(
-                    doc_ids_np[idx],
-                    texts,
-                    scores_np[idx] if scores_np is not None else None,
-                    fld,
-                )
-                ascii_idx = np.flatnonzero(~row_hi)
-                if ascii_idx.size == 0:
-                    continue
-                sub = arr.take(pa.array(ascii_idx, type=pa.int64()))
-                offsets, values = _binary_buffers(sub)
-                offsets = offsets.astype(np.int64)
-                doc_ids_np = doc_ids_np[ascii_idx]
-                if scores_np is not None:
-                    scores_np = scores_np[ascii_idx]
-            yield from _stats_batch_ascii(
-                doc_ids_np, offsets, values, scores_np, fld
+            arr = pc.fill_null(arr, "")
+        if not pa.types.is_string(arr.type):
+            yield doc_ids_np, arr.to_pylist(), None, None, side
+            continue
+        offsets, values = _binary_buffers(arr)
+        offsets = offsets.astype(np.int64)
+        # the per-row localisation only runs when the whole batch has
+        # at least one byte >= 0x80 (one cheap reduction otherwise)
+        if not (values >= 0x80).any():
+            row_hi = None
+        else:
+            hi = np.zeros(values.size + 1, dtype=np.int64)
+            np.cumsum(values >= 0x80, out=hi[1:])
+            row_hi = (hi[offsets[1:]] - hi[offsets[:-1]]) > 0
+        if row_hi is not None and row_hi.any():
+            idx = np.flatnonzero(row_hi)
+            texts = [arr[int(i)].as_py() for i in idx]
+            yield doc_ids_np[idx], texts, None, None, (
+                side[idx] if side is not None else None
             )
+            ascii_idx = np.flatnonzero(~row_hi)
+            if ascii_idx.size == 0:
+                continue
+            sub = arr.take(pa.array(ascii_idx, type=pa.int64()))
+            offsets, values = _binary_buffers(sub)
+            offsets = offsets.astype(np.int64)
+            doc_ids_np = doc_ids_np[ascii_idx]
+            if side is not None:
+                side = side[ascii_idx]
+        yield doc_ids_np, None, offsets, values, side
+
+
+def stats_mapper_arrow(fld: str, has_score: bool):
+    """mapInArrow partial-stats mapper over (doc_id, fld[, score])
+    batches — the r6 stats/dictionary pass (see STATS_SCHEMA note),
+    routed by :func:`_text_routes`."""
+
+    def gen(batches):
+        for doc_ids, texts, offsets, values, scores in _text_routes(batches, has_score):
+            if texts is not None:
+                yield from _stats_rows_python(doc_ids, texts, scores, fld)
+            else:
+                yield from _stats_batch_ascii(doc_ids, offsets, values, scores, fld)
 
     return gen
 
@@ -728,57 +742,18 @@ def tokenize_mapper_arrow(fld: str, store_positions: bool):
     :func:`_tokenize_batch_ascii` (byte LUT + Arrow buffer slicing +
     dictionary-encode grouping); rows containing any non-ASCII byte
     fall back per row to the pinned Python tokenizer, preserving the
-    full unicode-fold spec. Tokenization, (doc, term) grouping, tf, dl
-    and position packing all happen in this one pass over the corpus
-    scan, so no doc-level shuffle exists anywhere in the build.
+    full unicode-fold spec (the split is :func:`_text_routes`).
+    Tokenization, (doc, term) grouping, tf, dl and position packing all
+    happen in this one pass over the corpus scan, so no doc-level
+    shuffle exists anywhere in the build.
     """
-    import pyarrow as pa
 
     def gen(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            arr = batch.column(1)
-            doc_ids_np = batch.column(0).to_numpy(zero_copy_only=False)
-            if arr.null_count:
-                import pyarrow.compute as pc
-
-                arr = pc.fill_null(arr, "")
-            if not pa.types.is_string(arr.type):
-                out = _tokenize_rows_python(
-                    doc_ids_np, arr.to_pylist(), store_positions, fld
-                )
-                if out is not None:
-                    yield out
-                continue
-            offsets, values = _binary_buffers(arr)
-            offsets = offsets.astype(np.int64)
-            # rows with any byte >= 0x80 take the unicode fallback; the
-            # per-row localisation only runs when the whole batch has
-            # at least one such byte (one cheap reduction otherwise)
-            if not (values >= 0x80).any():
-                row_hi = None
-            else:
-                hi = np.zeros(values.size + 1, dtype=np.int64)
-                np.cumsum(values >= 0x80, out=hi[1:])
-                row_hi = (hi[offsets[1:]] - hi[offsets[:-1]]) > 0
-            if row_hi is not None and row_hi.any():
-                idx = np.flatnonzero(row_hi)
-                texts = [arr[int(i)].as_py() for i in idx]
-                out = _tokenize_rows_python(
-                    doc_ids_np[idx], texts, store_positions, fld
-                )
-                if out is not None:
-                    yield out
-                ascii_idx = np.flatnonzero(~row_hi)
-                if ascii_idx.size == 0:
-                    continue
-                sub = arr.take(pa.array(ascii_idx, type=pa.int64()))
-                offsets, values = _binary_buffers(sub)
-                offsets = offsets.astype(np.int64)
-                doc_ids_np = doc_ids_np[ascii_idx]
-            out = _tokenize_batch_ascii(
-                doc_ids_np, offsets, values, store_positions, fld
+        for doc_ids, texts, offsets, values, _ in _text_routes(batches, False):
+            out = (
+                _tokenize_rows_python(doc_ids, texts, store_positions, fld)
+                if texts is not None
+                else _tokenize_batch_ascii(doc_ids, offsets, values, store_positions, fld)
             )
             if out is not None:
                 yield out
