@@ -4,6 +4,7 @@ search (Q12)."""
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from typesense_spark.index import build_index
@@ -670,6 +671,47 @@ def test_batch_facet_counts_match_engine(built_index):
         ]
         got = sorted(by_qid.get(qid, []), key=lambda x: (-x[1], x[0]))
         assert got == want, (qid, got, want)
+
+
+def test_batch_wildcard_and_exclusion_only_match_engine(built_index):
+    """A wildcard qid ('*', or an exclusion-only query such as
+    '-import', which parse_query promotes to '*') matches the doc
+    universe minus its excludes, scored 0 — in batch_search and
+    batch_facet_counts exactly as in engine.search, next to an ordinary
+    query in the same batch."""
+    from typesense_spark.search.batch import batch_facet_counts
+
+    qset = [("w", "*"), ("x", "-import"), ("y", "* -return"), ("n", "import")]
+    kw = dict(fields=("content",), num_typos=0)
+    _batch_vs_engine(built_index, qset, kw, kw)
+    out = batch_facet_counts(built_index, qset, "lang", **kw)
+    by_qid = {}
+    for r in out.collect():
+        by_qid.setdefault(r["qid"], []).append((r["facet_value"], r["facet_count"]))
+    for qid, q in qset:
+        res = search(built_index, SearchRequest(q=q, facet_by=("lang",), **kw))
+        want = [(r["facet_value"], r["facet_count"]) for r in res.facets["lang"].collect()]
+        got = sorted(by_qid.get(qid, []), key=lambda x: (-x[1], x[0]))
+        assert want and got == want, (qid, got, want)
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [dict(mode="AND"), dict(typo_distance="OSA"), dict(rank_tokens_by="score")],
+    ids=["mode", "typo_distance", "rank_tokens_by"],
+)
+def test_request_enums_rejected(built_index, bad):
+    """An unknown mode / typo_distance / rank_tokens_by raises instead
+    of silently running a default — on search() and, for the keywords
+    it takes, batch_search()."""
+    from typesense_spark.search.batch import batch_search
+
+    name = next(iter(bad))
+    with pytest.raises(ValueError, match=name):
+        search(built_index, SearchRequest(q="import", fields=("content",), **bad))
+    if name != "rank_tokens_by":
+        with pytest.raises(ValueError, match=name):
+            batch_search(built_index, [("a", "import")], fields=("content",), **bad)
 
 
 def test_batch_typo_deepening_matches_per_query(built_index):

@@ -559,3 +559,29 @@ def test_batch_rerank_text_match_matches_engine(built_index):
             for r in res.hits.collect()
         ]
         assert sorted(by_qid.get(qid, [])) == want, (qid, by_qid.get(qid), want)
+
+
+def test_text_match_respects_deepening_stop_level(spark):
+    """Typo deepening stops at cost 0 here — all 12 docs hold the exact
+    `zzz`, past typo_tokens_threshold=5 — so `aab` (cost 1 for `aaa`)
+    is not used for scoring, and the text-match rank must not count it
+    either: the one-token `zzz` docs (higher BM25) lead, on search()
+    and batch_rerank_text_match alike."""
+    from typesense_spark.index import build_index
+    from typesense_spark.search import SearchRequest, search
+    from typesense_spark.search.batch import batch_rerank_text_match
+
+    rows = [(i, "aab zzz") for i in range(6)] + [(100 + i, "zzz") for i in range(6)]
+    ix = build_index(
+        spark, spark.createDataFrame(rows, schema="doc_id long, content string"),
+        fields=["content"], id_col="doc_id", num_buckets=2,
+    )
+    kw = dict(
+        fields=("content",), mode="or", num_typos=2, typo_tokens_threshold=5,
+        drop_tokens_threshold=0,
+    )
+    want = [105, 104, 103, 102, 101, 100, 5, 4, 3, 2, 1, 0]
+    res = search(ix, SearchRequest(q="aaa zzz", per_page=12, rank_by_text_match=True, **kw))
+    assert [r["doc_id"] for r in res.hits.orderBy("rank").collect()] == want
+    out = batch_rerank_text_match(ix, [("q", "aaa zzz")], k=12, **kw)
+    assert [r["doc_id"] for r in out.orderBy("rank").collect()] == want

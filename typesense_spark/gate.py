@@ -1187,7 +1187,7 @@ def batch_grouped_oracle() -> str:
 # (cost 1, the corpus's ONE rare term) and 'data' (cost 2, frequent) —
 # the threshold stops d1 at cost 1, while d2's lang filter leaves too
 # few cost-1 hits so it deepens to cost 2 (the probe counts NARROWED
-# results, like the engine's _deepen_level / reference
+# results, like the reference
 # src/index.cpp:947-950 which stops once FILTERED results reach the
 # threshold). d3 runs the level probe under a two-token AND; d4's
 # expansion has no cost-2 candidates (maxc=1), covering the

@@ -1145,6 +1145,16 @@ def decode_postings(postings: DataFrame) -> DataFrame:
     return postings.select(*cols).mapInArrow(gen, schema=DECODED_SCHEMA)
 
 
+def sql_literal(v) -> str:
+    """A SQL literal for a str or int value. A long IN list or literal
+    map built as ONE SQL expression costs one py4j call instead of
+    several per value (``Column.isin`` over 570 terms measured ~0.3 s
+    of driver time on a 4-core local session)."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return str(int(v))
+
+
 @dataclass
 class Index:
     """Handle over the built index tables (in-memory or on-disk)."""
@@ -1165,10 +1175,9 @@ class Index:
     def candidate_postings(self, terms: list[str], fields: list[str]) -> DataFrame:
         """Partition-pruned scan: term_bucket IN (...) AND term IN (...)."""
         buckets = sorted({_term_bucket_py(t, self.num_buckets) for t in terms})
+        in_terms = F.expr(f"term IN ({', '.join(map(sql_literal, terms))})") if terms else F.lit(False)
         return self.postings.where(
-            F.col("term_bucket").isin(buckets)
-            & F.col("term").isin(terms)
-            & F.col("field").isin(fields)
+            F.col("term_bucket").isin(buckets) & in_terms & F.col("field").isin(fields)
         )
 
     def decoded(
