@@ -866,3 +866,25 @@ def test_batch_search_chunked_matches_unchunked(built_index):
     for chunk in batch_search_chunked(built_index, qset, chunk_queries=2, **kw):
         got.extend(tuple(r) for r in chunk.collect())
     assert sorted(got) == want
+
+
+def test_batch_search_chunked_filters_match_unchunked(built_index):
+    """A filters dict over the whole log goes to every chunk; entries
+    for qids outside a chunk are ignored, so the chunked result equals
+    the unchunked one (the last chunk is a one-query batch)."""
+    from typesense_spark.search.batch import batch_search, batch_search_chunked
+
+    qset = [
+        ("q0", "import"),
+        ("q1", "return"),
+        ("q2", "import return"),
+        ("q3", "merge0"),
+        ("q4", "import"),
+    ]
+    filt = {"q0": "lang := python", "q2": "lang := go", "q4": "lang := go"}
+    kw = dict(fields=("content",), num_typos=0, k=5, filters=filt)
+    want = sorted(tuple(r) for r in batch_search(built_index, qset, **kw).collect())
+    got = []
+    for chunk in batch_search_chunked(built_index, qset, chunk_queries=2, **kw):
+        got.extend(tuple(r) for r in chunk.collect())
+    assert want and sorted(got) == want

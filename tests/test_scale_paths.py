@@ -428,12 +428,13 @@ def test_batch_single_vector_fast_path(built_index):
         assert "vec_id" not in line and "aidx" not in line, line
 
 
-def test_batch_candidate_map_size_switch(built_index, monkeypatch):
-    """Both sides of _QIDX_LITERAL_MAX: a small batch attaches its
-    candidate rows as a literal map over the narrow decode; a batch
-    above it keeps the broadcast join over the spread decode."""
+def test_candidate_map_one_query_literal_batch_broadcast(built_index, monkeypatch):
+    """Both sides of the attach switch: a one-query call attaches its
+    candidate rows as a literal map over the narrow decode, however
+    many rows its typo and prefix candidates make; a batch of two
+    keeps the broadcast join over the spread decode."""
     from typesense_spark.index.build import Index
-    from typesense_spark.search.batch import _QIDX_LITERAL_MAX, _batch_matched
+    from typesense_spark.search.batch import _batch_matched
 
     spreads = []
     orig = Index.decoded
@@ -443,14 +444,16 @@ def test_batch_candidate_map_size_switch(built_index, monkeypatch):
         return orig(self, terms, fields, spread=spread)
 
     monkeypatch.setattr(Index, "decoded", spy)
-    n_big = _QIDX_LITERAL_MAX // 2 + 1  # two candidate rows per query
-    for n, big in ((2, False), (n_big, True)):
+    for qs, kw, big in (
+        # typo candidates on nine tokens + prefix candidates: 65 rows
+        ([("q0", "mergea mergeb mergec merged mergee mergef mergeg mergeh mergei merg")],
+         dict(num_typos=2, prefix_last=True), False),
+        ([("q0", "import"), ("q1", "return")], dict(num_typos=0, prefix_last=False), True),
+    ):
         spreads.clear()
-        qs = [(f"q{i}", "import return") for i in range(n)]
-        m = _batch_matched(built_index, qs, fields=("content",), num_typos=0,
-                           prefix_last=False)
+        m = _batch_matched(built_index, qs, fields=("content",), mode="or", **kw)
         lines = [x.simpleString(100) for x in _logical_nodes(m)]
-        assert spreads == [big], (n, spreads)
+        assert spreads == [big], (qs, spreads)
         joins = [x for x in lines if x.startswith("Join") and "broadcast" in x]
         assert bool(joins) == big, lines
         assert any(x.startswith(("LocalRelation", "LogicalRDD")) for x in lines) == big, lines
