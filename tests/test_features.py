@@ -175,7 +175,8 @@ def test_expand_tokens_batch_matches_expand_token(built_index):
     merge) — for plain Levenshtein AND the OSA metric."""
     from pyspark.sql import functions as F
 
-    from typesense_spark.search.expand import expand_token, expand_tokens_batch
+    from typesense_spark.oracle import expand_token
+    from typesense_spark.search.expand import expand_tokens_batch
 
     terms_df = built_index.terms.where(F.col("field") == "content")
     term_df = {r["term"]: r["df"] for r in terms_df.collect()}

@@ -3,6 +3,7 @@ tokenization (decode round-trip through the compressed blocks),
 hot-term salting, partition-count invariance.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from typesense_spark.index.build import assign_doc_ids, decode_postings
@@ -122,3 +123,20 @@ def test_save_load_roundtrip_search_identity(built_index, tmp_path):
         assert (loaded.stats[k].n_docs, loaded.stats[k].sum_dl) == (
             built_index.stats[k].n_docs, built_index.stats[k].sum_dl,
         )
+
+
+@pytest.mark.parametrize("text_type", ["string", "array<string>"])
+def test_null_score_col_rejected_at_build(spark, text_type):
+    """A doc with a null ``score_col`` value fails the build with a
+    ValueError naming the column and the doc, on both the vectorized
+    (scalar) and the JVM (array) stats route — never a silently wrong
+    max_score (int64 min, or a null that breaks max_score ranking)."""
+    from typesense_spark.index import build_index
+
+    rows = [(1, "alpha beta", 5), (2, "gamma beta", None), (3, "alpha delta", 7)]
+    if text_type != "string":
+        rows = [(d, t.split(), p) for d, t, p in rows]
+    df = spark.createDataFrame(rows, schema=f"doc_id long, text {text_type}, pts long")
+    with pytest.raises(ValueError, match=r"score_col 'pts' is null for doc_id 2$"):
+        build_index(spark, df, fields=["text"], id_col="doc_id", num_buckets=2,
+                    score_col="pts")

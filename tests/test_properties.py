@@ -90,3 +90,64 @@ def test_contrib_quantization_sane(tf, dl, df, n):
     # monotone in tf (same doc, more occurrences never scores lower)
     c2 = scoring.contrib_milli(tf + 1, dl, df, n, avgdl)
     assert c2 >= c
+
+
+# small alphabets (one of them non-ASCII, one multi-byte) make typo and
+# prefix neighbours common; small df / max_score ranges make rank ties,
+# and max_score takes the int64 extremes
+_ALPHA = "abcéж"
+_term = st.text(_ALPHA, min_size=1, max_size=6)
+_rank = st.one_of(st.integers(-2, 2), st.sampled_from([-(2**63), 2**63 - 1]))
+
+
+@given(
+    st.dictionaries(_term, st.tuples(st.integers(1, 3), _rank),
+                    min_size=1, max_size=60),
+    st.lists(st.one_of(_term, st.text(_ALPHA, min_size=1, max_size=2)),
+             min_size=1, max_size=4),
+    st.sampled_from(["levenshtein", "osa"]),
+    st.integers(0, 2),
+    st.booleans(),
+    st.sampled_from(["df", "max_score"]),
+    st.data(),
+)
+@settings(max_examples=300, deadline=None)
+def test_term_dict_kernel_matches_spec(entries, tokens, distance, num_typos,
+                                       prefix, rank_by, data):
+    """The vectorized expander equals the linear-scan spec
+    (``oracle.expand_query``) candidate for candidate: costs, per-cost
+    caps, (−rank, term) order with term-ASC tie-breaks, the bounded cost
+    of 1-2 char tokens, prefix top-10 and prefix-wins-min-cost — for
+    both distances and both candidate orderings."""
+    from typesense_spark import oracle
+    from typesense_spark.search.expand import TermDict, expand_query
+
+    terms = list(entries)
+    # tokens are near the dictionary as often as not: a term, or one
+    # edit away from one
+    tokens += [data.draw(st.sampled_from(terms)) for _ in range(2)]
+    tokens.append(data.draw(st.sampled_from(terms))[::-1])
+    td = TermDict(terms, [entries[t][0] for t in terms], [entries[t][1] for t in terms])
+    specs = [(t, prefix) for t in tokens]
+    rank = {t: entries[t][1] for t in terms} if rank_by == "max_score" else None
+    want = oracle.expand_query(
+        specs, {t: entries[t][0] for t in terms}, num_typos, distance, rank=rank
+    )
+    assert expand_query(specs, td, num_typos, distance, rank_by) == want
+    assert dict(td) == {t: entries[t][0] for t in terms}
+
+
+def test_term_dict_rank_at_int64_extremes():
+    """A max_score of int64 min ranks last, in the typo caps and in the
+    prefix top-10 (a negated int64 min would wrap to rank first)."""
+    from typesense_spark import oracle
+    from typesense_spark.search.expand import TermDict, expand_query
+
+    terms = ["aa"] + [f"a{c}" for c in "bcdefghijkl"]
+    ms = [0] + [-(2**63)] + [2**63 - 1] * 10
+    td = TermDict(terms, [1] * len(terms), ms)
+    specs = [("ax", False), ("a", True)]
+    got = expand_query(specs, td, 1, rank_by="max_score")
+    assert got == oracle.expand_query(specs, dict.fromkeys(terms, 1), 1,
+                                      rank=dict(zip(terms, ms)))
+    assert "ab" not in dict(got[("ax", False)]) and "ab" not in dict(got[("a", True)])

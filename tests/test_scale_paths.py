@@ -6,11 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from typesense_spark.index.validate import split_valid
-from typesense_spark.search.expand import (
-    _candidates_plan,
-    expand_token,
-    expand_tokens_batch,
-)
+from typesense_spark.oracle import expand_token
+from typesense_spark.search.expand import _candidates_plan, expand_tokens_batch
 
 
 def test_spark_expander_matches_expand_token(built_index):
@@ -30,8 +27,8 @@ def test_spark_expander_matches_expand_token(built_index):
 
 
 def test_wand_actually_prunes_blocks(built_index):
+    from typesense_spark.oracle import expand_query
     from typesense_spark.search.engine import SearchRequest, search
-    from typesense_spark.search.expand import expand_query
     from typesense_spark.search.wand import prune_blocks
 
     # Block-max pruning needs contribution VARIANCE across blocks
@@ -136,7 +133,7 @@ def test_spark_expander_matches_expand_query(built_index):
     the Spark expander equals the driver expand_query map, key for key."""
     from pyspark.sql import functions as F
 
-    from typesense_spark.search.expand import expand_query
+    from typesense_spark.oracle import expand_query
 
     terms_df = (
         built_index.terms.where(F.col("field") == "content")
@@ -182,7 +179,7 @@ def test_osa_matches_duckdb_damerau_at_cost_1():
 def test_osa_spark_expansion_matches_driver(built_index):
     from pyspark.sql import functions as F
 
-    from typesense_spark.search.expand import expand_query
+    from typesense_spark.oracle import expand_query
 
     terms_df = (
         built_index.terms.where(F.col("field") == "content")
@@ -204,7 +201,7 @@ def test_rank_tokens_by_max_score_parity(spark):
     from pyspark.sql import functions as F
 
     from typesense_spark.index import build_index
-    from typesense_spark.search.expand import expand_query
+    from typesense_spark.oracle import expand_query
 
     # 'merga' is rare but high-score; three other variants are common
     # but low-score — with the 3-per-cost cap, FREQUENCY drops merga
@@ -610,3 +607,111 @@ def test_minhash_lsh_plan_census_pinned(spark, built_index):
     assert "CartesianProduct" not in phys
     _assert_no_global_window(phys)
     assert _logical_census(df) == MINHASH_CENSUS, phys
+
+
+def test_term_dict_collected_once_per_index_and_field_set(spark, monkeypatch):
+    """The columnar term dictionary (df + max_score) is collected by ONE
+    action per (Index, field set) and held on the Index: frequency and
+    max_score ranking, typo and prefix specs, single and batch search
+    all expand over that one object."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from typesense_spark.index import build_index
+    from typesense_spark.search import SearchRequest, search
+    from typesense_spark.search.batch import batch_search
+    from typesense_spark.search.engine import _get_term_df
+    from typesense_spark.search.expand import TermDict
+
+    rows = [(i, f"merge{i % 4} title{i}", f"body{i % 3} merge{i % 2}", i) for i in range(12)]
+    df = spark.createDataFrame(rows, schema="doc_id long, title string, body string, pts long")
+    ix = build_index(spark, df, fields=["title", "body"], id_col="doc_id",
+                     num_buckets=2, score_col="pts")
+    actions = []
+    orig = DataFrame.toArrow
+
+    def spy(self):
+        actions.append(1)
+        return orig(self)
+
+    monkeypatch.setattr(DataFrame, "toArrow", spy)
+    for rank_by in ("frequency", "max_score"):
+        for q, typos in (("mrege", 2), ("merg", 0), ("title1 mreg", 1)):
+            search(ix, SearchRequest(q=q, fields=("title", "body"), num_typos=typos,
+                                     rank_tokens_by=rank_by)).hits.collect()
+    batch_search(ix, [("a", "mrege"), ("b", "body")], fields=("body", "title"),
+                 num_typos=1).collect()
+    assert len(actions) == 1
+    td = ix.term_dicts[("body", "title")]
+    assert isinstance(td, TermDict) and td.max_score is not None
+    assert _get_term_df(ix, ("title", "body")) is td
+    assert td["merge0"] == 3 + 6  # df summed over the queried fields
+
+    search(ix, SearchRequest(q="mrege", fields=("title",), num_typos=1)).hits.collect()
+    assert len(actions) == 2 and set(ix.term_dicts) == {("body", "title"), ("title",)}
+
+
+def test_or_drop_tokens_skips_subset_fallbacks_without_jobs(built_index, oracle_index,
+                                                           monkeypatch):
+    """OR mode, no deepening: every fallback vector of a 3-token query
+    draws only on attempt-0 specs (prefix off), so it can neither add a
+    doc nor raise a score — none is scored, so search() runs no count
+    or collect job (no persisted attempt-0 relation to count), and the
+    hits still equal the oracle's."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from typesense_spark import oracle
+    from typesense_spark.search import SearchRequest, search
+    from typesense_spark.search.engine import _get_term_df, _use_spark_expand
+
+    # warm the legitimate one-time caches (dictionary size + dictionary)
+    _use_spark_expand(built_index, ("content",))
+    _get_term_df(built_index, ("content",))
+
+    counts, collects = [], []
+    orig_count, orig_collect = DataFrame.count, DataFrame.collect
+
+    def spy_count(self):
+        counts.append(1)
+        return orig_count(self)
+
+    def spy_collect(self):
+        collects.append(1)
+        return orig_collect(self)
+
+    monkeypatch.setattr(DataFrame, "count", spy_count)
+    monkeypatch.setattr(DataFrame, "collect", spy_collect)
+    res = search(
+        built_index,
+        SearchRequest(q="zygomorphic xylographer merge42", fields=("content",),
+                      num_typos=0, mode="or", prefix_last=False,
+                      drop_tokens_threshold=10),
+    )
+    assert counts == [] and collects == [], "expected no job inside search()"
+    tokens = ["zygomorphic", "xylographer", "merge42"]
+    assert res.attempts == [tokens]
+    got = [(r["doc_id"], r["score_milli"]) for r in orig_collect(res.hits)]
+    assert got
+    assert got == oracle.search(oracle_index, tokens, prefix_last=False, mode="or", k=10)
+
+
+def test_or_drop_tokens_moved_prefix_matches_oracle(spark):
+    """With prefix_last, a right-drop moves the prefix to a new last
+    token: that fallback is not a subset of attempt 0 and must still be
+    scored when attempt 0 has fewer than 10 hits — here it adds the
+    'rarely' docs — while the left-drop subset vector is skipped."""
+    from typesense_spark import oracle
+    from typesense_spark.index import build_index
+    from typesense_spark.search import SearchRequest, search
+
+    rows = [(1, "rare tok"), (2, "other zzz")]
+    rows += [(10 + i, "rarely seen " + "pad " * i) for i in range(12)]
+    df = spark.createDataFrame(rows, schema="doc_id long, content string")
+    ix = build_index(spark, df, fields=["content"], id_col="doc_id", num_buckets=2)
+    res = search(ix, SearchRequest(q="rare other", fields=("content",), num_typos=0,
+                                   mode="or", prefix_last=True))
+    got = [(r["doc_id"], r["score_milli"]) for r in res.hits.collect()]
+    want = oracle.search(oracle.build(rows), ["rare", "other"], prefix_last=True,
+                         mode="or", k=10)
+    assert got == want
+    assert {d for d, _ in got} & set(range(10, 22)), "moved prefix added no doc"
+    assert ["rare"] in res.attempts and ["other"] not in res.attempts

@@ -156,7 +156,7 @@ def _cand_sql(
     tokens: list[str], num_typos: int, prefix_last: bool,
     distfn: str = "levenshtein",
 ) -> str:
-    """Candidate CTE mirroring expand.expand_query exactly (caps, ranks).
+    """Candidate CTE mirroring oracle.expand_query exactly (caps, ranks).
     ``distfn='damerau_levenshtein'`` oracles the OSA metric: DuckDB's
     function is the UNRESTRICTED Damerau variant, which coincides with
     the reference's OSA at distance ≤ 1 (the typo_osa gate pins
@@ -975,7 +975,7 @@ def q_batch_full(spark, sf_dir):
 
 def batch_full_oracle() -> str:
     """DuckDB SQL for the full-surface batch gate: per-vector candidate
-    expansion (typo caps + prefix top-10, mirroring expand.expand_token),
+    expansion (typo caps + prefix top-10, mirroring oracle.expand_token),
     per-vector AND scoring, the drop-tokens cumulative-count cutoff as a
     window computation, synonym-variant max-score merge, and per-query
     exclusions — all recomputed from the raw documents view."""
@@ -1219,7 +1219,7 @@ def q_batch_deepen(spark, sf_dir):
 
 def batch_deepen_oracle() -> str:
     """DuckDB mirror of the batch deepening pipeline: per-query typo
-    expansion WITH costs (same per-cost caps as expand.expand_token),
+    expansion WITH costs (same per-cost caps as oracle.expand_token),
     per-level AND scoring via a levels cross join, NARROWED per-level
     result counts, the engine's stop rule (min level < max_cost whose
     count reaches the threshold, else full depth), and top-k at the

@@ -35,10 +35,12 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 import time
 from dataclasses import dataclass, field as dc_field
 import numpy as np
 import pandas as pd
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -558,7 +560,8 @@ def _text_routes(batches, has_side: bool):
     unicode-fold spec; the ASCII rest — the overwhelmingly common case
     — goes to the vectorized path as its Arrow ``offsets``/``values``
     buffers (``texts`` None). ``side`` is the optional third column
-    (the static score) as int64, sliced alongside the doc ids."""
+    (the static score) as int64, sliced alongside the doc ids; a null
+    in it raises :func:`_null_score` for the first such doc."""
     import pyarrow as pa
 
     for batch in batches:
@@ -566,11 +569,13 @@ def _text_routes(batches, has_side: bool):
             continue
         arr = batch.column(1)
         doc_ids_np = batch.column(0).to_numpy(zero_copy_only=False)
-        side = (
-            batch.column(2).to_numpy(zero_copy_only=False).astype(np.int64)
-            if has_side
-            else None
-        )
+        side = None
+        if has_side:
+            col = batch.column(2)
+            if col.null_count:
+                first = col.is_null().to_numpy(zero_copy_only=False).argmax()
+                raise ValueError(_null_score(batch.schema.names[2], doc_ids_np[first]))
+            side = col.to_numpy(zero_copy_only=False).astype(np.int64)
         if arr.null_count:
             import pyarrow.compute as pc
 
@@ -606,6 +611,17 @@ def _text_routes(batches, has_side: bool):
         yield doc_ids_np, None, offsets, values, side
 
 
+def _null_score(score_col: str, doc_id) -> str:
+    """The build's error for a doc without a static score (the reference
+    likewise rejects a doc missing its default sorting field): raised in
+    the stats mapper (scalar fields) or by ``raise_error`` (array
+    fields), then re-raised by ``build_index`` as a ValueError."""
+    return f"score_col {score_col!r} is null for doc_id {doc_id}"
+
+
+_NULL_SCORE_RE = re.compile(r"score_col '[^']*' is null for doc_id -?\d+")
+
+
 def stats_mapper_arrow(fld: str, has_score: bool):
     """mapInArrow partial-stats mapper over (doc_id, fld[, score])
     batches — the r6 stats/dictionary pass (see STATS_SCHEMA note),
@@ -628,8 +644,17 @@ def stats_rows(docs: DataFrame, fld: str, score_col: str | None) -> DataFrame:
     if dict(docs.dtypes).get(fld, "").startswith("array"):
         tfa = tokenize_tf(docs, fld, False)
         if score_col is not None:
+            sc = F.col(score_col)
+            msg = F.concat(
+                F.lit(_null_score(score_col, "")), F.col("doc_id").cast("string")
+            )
             tfa = tfa.join(
-                docs.select("doc_id", F.col(score_col).cast("long").alias("_sc")),
+                docs.select(
+                    "doc_id",
+                    F.when(sc.isNull(), F.raise_error(msg))
+                    .otherwise(sc.cast("long"))
+                    .alias("_sc"),
+                ),
                 "doc_id",
             )
         doc_rows = (
@@ -674,7 +699,7 @@ def stats_rows(docs: DataFrame, fld: str, score_col: str | None) -> DataFrame:
     if score_col is not None:
         cols.append(score_col)
     src = docs.select(*[F.col(c) for c in cols[:2]], *(
-        [F.col(score_col).cast("long")] if score_col is not None else []
+        [F.col(score_col).cast("long").alias(score_col)] if score_col is not None else []
     ))
     return src.mapInArrow(
         stats_mapper_arrow(fld, score_col is not None), schema=STATS_SCHEMA
@@ -1171,6 +1196,9 @@ class Index:
     # block packing granularity, recorded so the query side can estimate
     # block counts from df alone (WAND engagement heuristic — no count job)
     block_size: int = 128
+    # collected term dictionaries (expand.TermDict) per sorted field set,
+    # filled on first use by engine._get_term_df
+    term_dicts: dict = dc_field(default_factory=dict, init=False, repr=False, compare=False)
 
     def candidate_postings(self, terms: list[str], fields: list[str]) -> DataFrame:
         """Partition-pruned scan: term_bucket IN (...) AND term IN (...)."""
@@ -1387,8 +1415,16 @@ def build_index(
                 F.count("*").alias("n"), F.sum("df").alias("s")
             ).withColumn("_src", F.lit("terms"))
         )
+    # the first job over the stats rows: a null score_col value fails it
+    try:
+        probe_rows = probe.collect()
+    except PySparkException as e:
+        null_score = _NULL_SCORE_RE.search(str(e))
+        if null_score is None:
+            raise
+        raise ValueError(null_score.group(0)) from None
     stats: dict[str, FieldStats] = {}
-    for r in probe.collect():
+    for r in probe_rows:
         if r["_src"] == "attrs":
             stats[r["field"]] = FieldStats(n_docs=int(r["n"]), sum_dl=int(r["s"]))
         else:

@@ -3,11 +3,15 @@ implementation of the pinned tokenizer + BM25 + retrieval semantics.
 
 Used by pytest golden tests (FIXTURES.md F3): the Spark engine must be
 rank-identical (doc ids AND quantized scores) to this oracle on every
-query. It shares :mod:`typesense_spark.tokenizer` and the expansion
-spec in :mod:`typesense_spark.search.expand`, but reimplements scoring
-and set logic with plain dicts/loops — no Spark, no SQL, no numpy in
-the scoring path (``math`` doubles are the same IEEE ops the pack UDF
-uses; exactness comes from the int64 quantization, scoring.py).
+query. It shares :mod:`typesense_spark.tokenizer` and the distances
+and caps of :mod:`typesense_spark.search.expand`, but reimplements
+expansion, scoring and set logic with plain dicts/loops — no Spark, no
+SQL, no numpy in the scoring path (``math`` doubles are the same IEEE
+ops the pack UDF uses; exactness comes from the int64 quantization,
+scoring.py). :func:`expand_token` is the expansion spec: a linear scan
+of the whole dictionary, one DP per term, which both engine expanders
+(``expand.TermDict`` and ``expand.expand_tokens_batch``) are tested
+against; the engine never calls it.
 """
 
 from __future__ import annotations
@@ -16,8 +20,77 @@ import math
 from dataclasses import dataclass, field
 
 from typesense_spark import scoring
-from typesense_spark.search.expand import expand_query
+from typesense_spark.search.expand import (
+    MAX_CANDIDATES,
+    MAX_CANDIDATES_PREFIX,
+    bounded_typo_cost,
+    levenshtein,
+    osa,
+)
 from typesense_spark.tokenizer import tokenize
+
+DISTANCES = {"levenshtein": levenshtein, "osa": osa}
+
+
+def expand_token(
+    token: str,
+    term_df: dict[str, int],
+    num_typos: int = 2,
+    prefix: bool = False,
+    distance: str = "levenshtein",
+    rank: dict[str, int] | None = None,
+) -> list[tuple[str, int]]:
+    """One query token → [(candidate_term, cost)], per the pinned spec.
+    ``distance='osa'`` switches to the reference's Damerau-OSA metric
+    (transpositions cost 1). ``rank`` overrides the per-term ordering
+    value (default df = the reference's FREQUENCY token_ordering; pass
+    the dictionary's max_score map for MAX_SCORE,
+    ``include/art.h:124-127``)."""
+    dist = DISTANCES[distance]
+    rankv = rank if rank is not None else term_df
+    out: dict[str, int] = {}
+    if token in term_df:
+        out[token] = 0
+    max_cost = bounded_typo_cost(token, num_typos)
+    if max_cost > 0:
+        by_cost: dict[int, list[tuple[int, str]]] = {}
+        for t in term_df:
+            if abs(len(t) - len(token)) > max_cost or t == token:
+                continue
+            c = dist(t, token)
+            if 1 <= c <= max_cost:
+                by_cost.setdefault(c, []).append((-rankv[t], t))
+        for c in sorted(by_cost):
+            for _, t in sorted(by_cost[c])[:MAX_CANDIDATES]:
+                out.setdefault(t, c)
+    if prefix:
+        pref = sorted(
+            ((-rankv[t], t) for t in term_df if t.startswith(token) and t != token)
+        )[:MAX_CANDIDATES_PREFIX]
+        for _, t in pref:
+            # a term reachable both ways keeps the MIN cost (prefix = 0),
+            # like expand_tokens_batch's prefix merge
+            out[t] = 0
+    return sorted(out.items())
+
+
+def expand_query(
+    specs: list[tuple[str, bool]],
+    term_df: dict[str, int],
+    num_typos: int = 2,
+    distance: str = "levenshtein",
+    rank: dict[str, int] | None = None,
+) -> dict[tuple[str, bool], list[tuple[str, int]]]:
+    """Every (token, prefix?) spec → candidate map — the contract of
+    both engine expanders. Keying by the spec,
+    not the token, keeps a repeated token's copies apart: only the
+    last-position copy is prefix-expanded."""
+    return {
+        (tok, pref): expand_token(
+            tok, term_df, num_typos, prefix=pref, distance=distance, rank=rank
+        )
+        for tok, pref in specs
+    }
 
 
 @dataclass

@@ -540,11 +540,22 @@ def _batch_matched(
     def _fallback(v) -> bool:
         return 0 < v[1] < _SYN_BASE
 
-    first = [v for v in vectors if not _fallback(v)]
+    # OR mode sums non-negative token maxima (idf > 0, scoring.py; field
+    # weights >= 0), so without deepening a fallback drawing only on its
+    # query's attempt-0 specs can neither add a doc nor raise a score:
+    # skip it, and with it the persist and count job deciding on it
+    to_score = vectors
+    if mode == "or" and not deepen_on and min(query_by_weights, default=0) >= 0:
+        a0 = {qx: set(_specs(toks, prefix_last)) for qx, aidx, toks in vectors if aidx == 0}
+        to_score = [
+            v for v in vectors
+            if not (_fallback(v) and set(_specs(v[2], prefix_last)) <= a0[v[0]])
+        ]
+    first = [v for v in to_score if not _fallback(v)]
     scored, levels = _score(first)
     merge = any(v[1] >= _SYN_BASE for v in first)
     needy: list[int] = []
-    if any(map(_fallback, vectors)):
+    if any(map(_fallback, to_score)):
         counts: dict[int, int] = {}
         if scored is not None:
             scored = _persist_scored(scored)
@@ -553,9 +564,9 @@ def _batch_matched(
                 r["qix"]: r["c"]
                 for r in organic.groupBy("qix").agg(F.count("*").alias("c")).collect()
             }
-        needy = sorted({v[0] for v in vectors if _fallback(v) and counts.get(v[0], 0) < drop})
+        needy = sorted({v[0] for v in to_score if _fallback(v) and counts.get(v[0], 0) < drop})
     if needy:
-        fb, _ = _score([v for v in vectors if _fallback(v) and v[0] in needy])
+        fb, _ = _score([v for v in to_score if _fallback(v) and v[0] in needy])
         cohort = fb
         rest = None
         if scored is not None:

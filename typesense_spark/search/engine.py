@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from typesense_spark.index.build import Index
 from typesense_spark.search.curation import claimants, splice_groups, splice_hits
-from typesense_spark.search.expand import expand_query, expand_tokens_batch
+from typesense_spark.search.expand import TermDict, expand_query, expand_tokens_batch
 from typesense_spark.tokenizer import tokenize_terms
 
 DEFAULT_PER_PAGE = 10  # reference: src/core_api.cpp:351
@@ -281,24 +281,6 @@ def _terms_agg(index: Index, fields: tuple[str, ...]) -> DataFrame:
     )
 
 
-def _get_term_rank(index: Index, fields: tuple[str, ...]) -> dict[str, int]:
-    """Driver-side {term: max_score} for rank_tokens_by='max_score'
-    (cached; same size bound as the df dict)."""
-    if "max_score" not in index.terms.columns:
-        raise ValueError(
-            "rank_tokens_by='max_score' needs an index built with score_col"
-        )
-    cache = getattr(index, "_term_rank_cache", None)
-    if cache is None:
-        cache = {}
-        index._term_rank_cache = cache
-    key = tuple(sorted(fields))
-    if key not in cache:
-        rows = _terms_agg(index, fields).collect()
-        cache[key] = {r["term"]: int(r["max_score"]) for r in rows}
-    return cache[key]
-
-
 def _n_terms(index: Index, fields: tuple[str, ...]) -> int:
     """Dictionary size for the queried fields (cached per field set) —
     the routing signal between driver-dict and Spark-join expansion."""
@@ -317,23 +299,27 @@ def _use_spark_expand(index: Index, fields: tuple[str, ...]) -> bool:
     return _n_terms(index, fields) > threshold
 
 
-def _get_term_df(index: Index, fields: tuple[str, ...]) -> dict[str, int]:
-    """Driver-side term dictionary {term: df} (cached per field set).
+def _get_term_df(index: Index, fields: tuple[str, ...]) -> TermDict:
+    """The field set's columnar term dictionary — term, df and, when
+    the index has it, max_score — collected by ONE action the first
+    time it is asked for and held on the Index (``Index.term_dicts``).
+    Read as a {term: df} mapping by WAND's block estimate and the
+    benches; both candidate orderings expand over it.
 
     Only reachable below EXPAND_COLLECT_THRESHOLD; above it ``_expand``
     routes expansion through ``expand.expand_tokens_batch`` (an
     F.levenshtein join against the distributed terms table), so no
-    full-dictionary ``collect()`` exists on the scale path.
+    full-dictionary collect exists on the scale path.
     """
-    cache = getattr(index, "_term_df_cache", None)
-    if cache is None:
-        cache = {}
-        index._term_df_cache = cache
     key = tuple(sorted(fields))
-    if key not in cache:
-        rows = _terms_agg(index, fields).collect()
-        cache[key] = {r["term"]: int(r["df"]) for r in rows}
-    return cache[key]
+    if key not in index.term_dicts:
+        t = _terms_agg(index, fields).toArrow()
+        index.term_dicts[key] = TermDict(
+            t.column("term").to_pylist(),
+            t.column("df").to_numpy(),
+            t.column("max_score").to_numpy() if "max_score" in t.column_names else None,
+        )
+    return index.term_dicts[key]
 
 
 def _specs(tokens: list[str], prefix_last: bool) -> list[tuple[str, bool]]:
@@ -375,26 +361,25 @@ def _expand(
     """The one expansion router for single and batch search: expands
     the specs not yet in ``cand_map`` into it and returns it, so
     drop-token attempts and erased vectors reuse earlier expansions.
-    Below EXPAND_COLLECT_THRESHOLD the collected dictionary expands
-    every spec driver-side in microseconds; above it one Spark plan
-    (``expand_tokens_batch``) expands them all without collecting the
-    dictionary."""
+    Below EXPAND_COLLECT_THRESHOLD the collected columnar dictionary
+    expands every spec driver-side (``expand_query``: a bisect per
+    prefix, one vectorized DP per typo length bucket); above it one
+    Spark plan (``expand_tokens_batch``) expands them all without
+    collecting the dictionary."""
     missing = sorted(set(specs) - set(cand_map))
     if not missing:
         return cand_map
-    by_score = rank_tokens_by == "max_score"
+    rank_by = "max_score" if rank_tokens_by == "max_score" else "df"
     if _use_spark_expand(index, fields):
         cand_map.update(
             expand_tokens_batch(
-                _terms_agg(index, fields), missing, num_typos, distance,
-                rank_col="max_score" if by_score else "df",
+                _terms_agg(index, fields), missing, num_typos, distance, rank_by
             )
         )
     else:
         cand_map.update(
             expand_query(
-                missing, _get_term_df(index, fields), num_typos, distance,
-                rank=_get_term_rank(index, fields) if by_score else None,
+                missing, _get_term_df(index, fields), num_typos, distance, rank_by
             )
         )
     return cand_map
