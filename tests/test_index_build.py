@@ -140,3 +140,149 @@ def test_null_score_col_rejected_at_build(spark, text_type):
     with pytest.raises(ValueError, match=r"score_col 'pts' is null for doc_id 2$"):
         build_index(spark, df, fields=["text"], id_col="doc_id", num_buckets=2,
                     score_col="pts")
+
+
+def test_batch_ending_in_empty_row_keeps_last_token(spark):
+    """An Arrow batch whose last row is empty must not clip the last
+    byte of the row before it ("wine" once indexed as "win")."""
+    from typesense_spark.index import build_index
+    from typesense_spark.search import SearchRequest, search
+
+    df = spark.createDataFrame(
+        [(1, "red wine"), (2, "")], schema="doc_id long, body string"
+    ).coalesce(1)
+    ix = build_index(spark, df, fields=["body"], id_col="doc_id", num_buckets=2)
+    assert sorted(r["term"] for r in ix.terms.collect()) == ["red", "wine"]
+    res = search(ix, SearchRequest(q="wine", fields=("body",), num_typos=0))
+    assert [r["doc_id"] for r in res.hits.collect()] == [1]
+
+
+def test_multi_field_build_with_all_null_field(spark):
+    """A field that is null on every doc (an all-empty batch) builds as
+    an empty field instead of crashing the build."""
+    from typesense_spark.index import build_index
+    from typesense_spark.search import SearchRequest, search
+
+    df = spark.createDataFrame(
+        [(1, "red wine", None), (2, "blue sky", None)],
+        schema="doc_id long, body string, title string",
+    )
+    ix = build_index(spark, df, fields=["body", "title"], id_col="doc_id",
+                     num_buckets=2)
+    assert ix.stats["body"].n_docs == 2
+    assert ix.stats["title"].n_docs == 0
+    res = search(ix, SearchRequest(q="wine", fields=("body", "title"), num_typos=0))
+    assert [r["doc_id"] for r in res.hits.collect()] == [1]
+
+
+def _route_rows():
+    """Docs for the tokenize-route tests as element lists: ASCII and
+    non-ASCII (folded and CJK) text, punctuation-only tokens, null and
+    empty elements, null and empty arrays. In one partition at 7 rows
+    per Arrow batch: batch 0 ends on an empty row, batch 1 is all
+    empty, batch 2 is all non-ASCII, the rest mix both."""
+    import random
+
+    rng = random.Random(8)
+    words = ["red", "Wine", "(free)", "c++", "!!!", "--", "9x", "",
+             "café", "Müller", "世界", "straße", "Привет,", "ＫＥＹ", "—"]
+
+    def elem():
+        r = rng.random()
+        if r < 0.08:
+            return None
+        return " ".join(rng.choice(words) for _ in range(rng.randint(0, 6)))
+
+    rows = [[elem() for _ in range(rng.randint(1, 3))] for _ in range(6)] + [[""]]
+    rows += [None, [], [""], [None, ""], [None], [], None]
+    rows += [["世界 café"], ["Привет, мир!"], ["naïve — résumé…", None, "ёлка"],
+             ["你好 世界。"], ["Müller"], ["straße straße"], ["ＫＥＹ ｖａｌｕｅ１"]]
+    rows += [None if rng.random() < 0.1 else [elem() for _ in range(rng.randint(0, 4))]
+             for _ in range(30)]
+    return rows
+
+
+@pytest.mark.parametrize("text_type", ["string", "array<string>"])
+def test_tokenize_route_matches_spec(spark, text_type):
+    """tokenize_tf and stats_rows — one route for every field type —
+    equal a spec built from ``tokenize()`` per element (positions
+    ``elem_idx * ELEM_STRIDE + pos`` for arrays; tf and dl joint across
+    elements), over batches mixing ASCII and non-ASCII rows and ending
+    on empty rows."""
+    from typesense_spark.index import codec
+    from typesense_spark.index.build import ELEM_STRIDE, stats_rows, tokenize_tf
+
+    rows = _route_rows()
+    is_array = text_type != "string"
+    if not is_array:
+        rows = [None if r is None else " ".join(e or "" for e in r) for r in rows]
+    data = [(i, r, 10 * i - 50) for i, r in enumerate(rows)]
+    df = spark.createDataFrame(
+        data, schema=f"doc_id long, body {text_type}, pts long"
+    ).coalesce(1)
+
+    want_tf, want_df, want_cf, want_mtf, want_msc, want_dl = {}, {}, {}, {}, {}, {}
+    for doc, r, pts in data:
+        elems = (r or []) if is_array else [r]
+        per = {}
+        for ei, text in enumerate(elems):
+            for t, p in tokenize(text):
+                per.setdefault(t, []).append(ei * ELEM_STRIDE + p)
+        dl = sum(len(ps) for ps in per.values())
+        if dl:
+            want_dl[doc] = dl
+        for t, ps in per.items():
+            want_tf[(doc, t)] = (len(ps), dl, ps)
+            want_df[t] = want_df.get(t, 0) + 1
+            want_cf[t] = want_cf.get(t, 0) + len(ps)
+            want_mtf[t] = max(want_mtf.get(t, 0), len(ps))
+            want_msc[t] = max(want_msc.get(t, pts), pts)
+    assert any(not t.isascii() for t in want_df)  # the spec source ran
+
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        tf_rows = tokenize_tf(df, "body", True).collect()
+        s_rows = stats_rows(df, "body", "pts").collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+    got_tf = {}
+    for r in tf_rows:
+        vals = [int(v) for v in codec.varint_decode(r["pos_bin"])]
+        assert vals[0] == r["tf"]
+        ps, acc = [], 0
+        for i, v in enumerate(vals[1:]):
+            acc = v if i == 0 else acc + v
+            ps.append(acc)
+        assert (r["doc_id"], r["term"]) not in got_tf
+        got_tf[(r["doc_id"], r["term"])] = (r["tf"], r["dl"], ps)
+    assert got_tf == want_tf
+
+    got_dl = {r["doc_id"]: r["dl"] for r in s_rows if r["term"] is None}
+    assert got_dl == want_dl
+    assert len(got_dl) == sum(1 for r in s_rows if r["term"] is None)
+    got_df, got_cf, got_mtf, got_msc = {}, {}, {}, {}
+    for r in s_rows:
+        if r["term"] is None:
+            continue
+        t = r["term"]
+        got_df[t] = got_df.get(t, 0) + r["df"]
+        got_cf[t] = got_cf.get(t, 0) + r["cf"]
+        got_mtf[t] = max(got_mtf.get(t, 0), r["max_tf"])
+        got_msc[t] = max(got_msc.get(t, r["max_score"]), r["max_score"])
+    assert (got_df, got_cf, got_mtf, got_msc) == (want_df, want_cf, want_mtf, want_msc)
+
+
+def test_array_field_tokenizes_in_one_arrow_pass(spark):
+    """An array field takes the same single mapInArrow pass as a scalar
+    one: no per-row pandas mapper, no JVM re-aggregation of TF rows."""
+    from typesense_spark.index.build import stats_rows, tokenize_tf
+
+    df = spark.createDataFrame(
+        [(1, ["red wine", "red rose"], 5)], schema="doc_id long, tags array<string>, pts long"
+    )
+    for out in (tokenize_tf(df, "tags", True), stats_rows(df, "tags", "pts")):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan, plan
+        assert "MapInPandas" not in plan and "Aggregate" not in plan, plan

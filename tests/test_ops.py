@@ -261,3 +261,22 @@ def test_scrub_pii_counts_and_placeholders(spark):
     assert "<EMAIL>" in r[1]["scrubbed"] and "<IPV4>" in r[1]["scrubbed"]
     assert "@" not in r[1]["scrubbed"]
     assert r[2]["scrubbed"] == "clean text" and r[2]["n_email"] == 0
+
+
+def test_shingles_use_pinned_tokenizer_on_unicode(spark):
+    """Jaccard / MinHash shingles are k-grams over the pinned
+    tokenizer's terms, unicode folds and passthrough included — the
+    same terms SimHash's explode_tokens sees."""
+    texts = [
+        "Müller café 世界 straße",
+        "Привет, мир! naïve — résumé… ok",
+        "ＫＥＹ ünïcode Тест42 ёлка 你好 世界。",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), schema="doc_id long, text string")
+    got = {}
+    for r in dedup.token_shingles(df, "text").collect():
+        got.setdefault(r["doc_id"], set()).add(r["shingle"])
+    for i, t in enumerate(texts):
+        terms = tokenize_terms(t)
+        want = {" ".join(terms[j : j + 3]) for j in range(len(terms) - 2)}
+        assert got.get(i, set()) == want, t

@@ -1,11 +1,11 @@
 """Tokenizer parity: pinned spec (reference src/tokenizer.cpp:4-112)
-across the pure-Python, pandas, and Spark-SQL implementations.
+across the pure-Python and Spark-SQL implementations (the build's
+vectorized route is checked against the same spec in
+tests/test_index_build.py).
 Vectors per FIXTURES.md F5 / reference test/tokenizer_test.cpp.
 """
 
-import pandas as pd
-
-from typesense_spark.tokenizer import explode_tokens, tokenize, tokenize_pandas
+from typesense_spark.tokenizer import explode_tokens, tokenize
 
 VECTORS = [
     # punctuation stripped in place, not a split point
@@ -38,13 +38,6 @@ VECTORS = [
 def test_pure_python_vectors():
     for raw, expected in VECTORS:
         assert tokenize(raw) == expected, raw
-
-
-def test_pandas_matches_python():
-    s = pd.Series([raw for raw, _ in VECTORS])
-    out = tokenize_pandas(s)
-    for (raw, expected), got in zip(VECTORS, out):
-        assert got == expected, raw
 
 
 def test_spark_matches_python_unicode(spark):

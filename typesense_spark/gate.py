@@ -826,8 +826,8 @@ _UNI_TERMS = ["merge", "mullerzq", "Приветzq", "ёлка42", "世界qz"]
 
 def q_unicode_tokens(spark, sf_dir):
     """B4 unicode branch end-to-end: docs with planted multi-script
-    suffixes go through build_index (pandas tokenize path — corpus is
-    non-ASCII), and the decoded postings must carry the passthrough
+    suffixes go through build_index (every row non-ASCII, so the build's
+    Python-spec token source), and the decoded postings must carry the passthrough
     terms verbatim alongside the base corpus' ASCII terms."""
     from typesense_spark.index import build_index
 

@@ -5,7 +5,7 @@ hash shuffle + hot-term salting — the reference routes docs
 ``seq_id % num_memory_shards``, ``/root/reference/src/collection.cpp:290``,
 and has NO term-level skew handling because each trie is single-node),
 parallel batch index B2 (Spark task parallelism), tokenize+positions
-B4/B5 (JVM codegen, ``src/index.cpp:526-606``), posting insert +
+B4/B5 (Arrow-batched numpy, ``src/index.cpp:526-606``), posting insert +
 compression B6/B10 (``src/art.cpp:411-433``, ``src/sorted_array.cpp:22-69``
 → delta+varint blocks with per-block max metadata = block-max WAND upper
 bounds; the reference's per-term analogue is ``leaf->max_score``,
@@ -15,11 +15,11 @@ Scale design (10^12-file target):
 - doc_id assignment is a two-phase distributed rank (range-partition by
   natural key → partition-local row_number + broadcast offsets); no
   single-partition window.
-- tokenize → tf runs in Arrow-batched ``mapInArrow``
-  (:func:`tokenize_tf` — byte-LUT numpy tokenizer for ASCII rows, the
-  pinned Python tokenizer per row otherwise; array fields through
-  ``mapInPandas``); a pure-JVM expression variant exists and is proven
-  identical in tests.
+- tokenize → tf runs in ONE Arrow-batched ``mapInArrow`` route for
+  every field type (:func:`tokenize_tf` / :func:`stats_rows`): ASCII
+  rows take a byte-LUT numpy tokenizer, rows holding non-ASCII bytes
+  the pinned Python tokenizer, and both feed one (doc, term) grouping;
+  ``array<string>`` fields flatten into elements on the same route.
 - per-(term,doc) BM25 contributions are quantized to int64 at build
   time (see ``scoring``), so query-time scoring is an exact long sum.
 - hot terms (df > salt_threshold) are salted into ``n_salts`` subgroups
@@ -39,7 +39,6 @@ import re
 import time
 from dataclasses import dataclass, field as dc_field
 import numpy as np
-import pandas as pd
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -221,11 +220,11 @@ TF_SCHEMA = T.StructType(
 )
 
 
-# ASCII tokenize lookup table (vectorized fast path): kept chars map to
-# their lowercased selves, the two separators (space / newline — the
-# pinned split set) both map to 0x20, everything else maps to 0 and is
-# deleted in place — exactly the `_FULL_STRIP_RE` + split semantics of
-# tokenizer.tokenize's ASCII branch (positions = raw slot index,
+# ASCII tokenize lookup table (the byte-LUT token source): kept chars
+# map to their lowercased selves, the two separators (space / newline —
+# the pinned split set) both map to 0x20, everything else maps to 0 and
+# is deleted in place — exactly the `_FULL_STRIP_RE` + split semantics
+# of tokenizer.tokenize's ASCII branch (positions = raw slot index,
 # keep_empty: empty slots consume positions but emit no term).
 _TOKEN_LUT = np.zeros(256, dtype=np.uint8)
 for _c in range(ord("a"), ord("z") + 1):
@@ -238,42 +237,42 @@ _TOKEN_LUT[ord(" ")] = 0x20
 _TOKEN_LUT[ord("\n")] = 0x20
 
 
-def _tokenize_groups_ascii(doc_ids_np, offsets, values):
-    """Vectorized tokenize + (doc, term) grouping core for one all-ASCII
-    Arrow batch — zero per-row / per-token Python loops.
+def _ascii_tokens(offsets, values, drop=None):
+    """Byte-LUT token source over ASCII text rows — zero per-row /
+    per-token Python loops.
 
-    Pipeline (all numpy / pyarrow.compute):
-      byte LUT (lowercase, strip-in-place, unify separators) → boolean
-      compaction → separator positions → token slot boundaries → Arrow
-      string array built over the compacted byte buffer (no copies per
-      token) → dictionary-encode → stable fused-key argsort-group by
-      (row, term code).
+    Pipeline (numpy): byte LUT (lowercase, strip-in-place, unify
+    separators) → boolean compaction → separator positions → token slot
+    boundaries → Arrow string array built over the compacted byte
+    buffer (no copies per token). Rows flagged in ``drop`` (the ones the
+    spec fallback tokenizes instead) are blanked first.
 
-    Returns None (no tokens) or a dict of numpy/arrow arrays shared by
-    the TF batch builder (:func:`_tokenize_batch_ascii`) and the
-    partial-stats builder (:func:`_stats_batch_ascii`). Output
-    equivalence with the pinned Python tokenizer is asserted end to
-    end: the engine↔oracle tests in tests/test_search.py index through
-    this path, and the oracle tokenizes with
-    :func:`typesense_spark.tokenizer.tokenize`.
+    Returns (row, pos, tokens) for every raw slot, empty slots included:
+    they consume positions, and :func:`_group_tokens` drops them.
     """
     import pyarrow as pa
 
-    n_docs = doc_ids_np.size
+    n_rows = offsets.size - 1
     mapped = _TOKEN_LUT[values]
-    keep = mapped != 0
-    cleaned = mapped[keep]
-    # kept bytes per doc via one reduceat pass (a full-length bool
-    # cumsum is 4-15x slower on this memory-bandwidth-bound box)
+    if drop is not None:
+        mapped[np.repeat(drop, np.diff(offsets))] = 0
+    # kept bytes per row via one reduceat pass (a full-length bool
+    # cumsum measured 4-15x slower); the trailing False gives rows
+    # starting at the buffer end (empty rows) a valid start, so no
+    # start is clipped onto the last non-empty row's bytes
+    keep = np.empty(values.size + 1, dtype=bool)
+    np.not_equal(mapped, 0, out=keep[:-1])
+    keep[-1] = False
+    cleaned = mapped[keep[:-1]]
     st = offsets[:-1]
-    kept_per_doc = np.add.reduceat(keep, np.minimum(st, max(values.size - 1, 0)))
-    kept_per_doc[st == offsets[1:]] = 0  # reduceat misreads empty segments
-    new_off = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(kept_per_doc, out=new_off[1:])  # doc boundaries, cleaned space
+    kept_per_row = np.add.reduceat(keep, st)
+    kept_per_row[st == offsets[1:]] = 0  # reduceat misreads empty segments
+    new_off = np.zeros(n_rows + 1, dtype=np.int64)
+    np.cumsum(kept_per_row, out=new_off[1:])  # row boundaries, cleaned space
 
     seps = cleaned == 0x20
     sep_pos = np.flatnonzero(seps)
-    # slots per doc = separators inside the doc span + 1
+    # slots per row = separators inside the row span + 1
     slots = (
         np.searchsorted(sep_pos, new_off[1:])
         - np.searchsorted(sep_pos, new_off[:-1])
@@ -282,27 +281,65 @@ def _tokenize_groups_ascii(doc_ids_np, offsets, values):
     total_slots = int(slots.sum())
     starts = np.sort(np.concatenate([new_off[:-1], sep_pos + 1]))
     ends = np.sort(np.concatenate([sep_pos, new_off[1:]]))
-    token_doc = np.repeat(np.arange(n_docs), slots)
-    first_slot = np.zeros(n_docs, dtype=np.int64)
+    first_slot = np.zeros(n_rows, dtype=np.int64)
     np.cumsum(slots[:-1], out=first_slot[1:])
     pos = np.arange(total_slots) - np.repeat(first_slot, slots)
-    token_lens = ends - starts
 
     # tokens are adjacent once separators are dropped → one offsets
     # array over the separator-free buffer IS the token string array
-    tok_values = cleaned[~seps]
     off_tok = np.zeros(total_slots + 1, dtype=np.int64)
-    np.cumsum(token_lens, out=off_tok[1:])
-    tokens_arr = pa.Array.from_buffers(
+    np.cumsum(ends - starts, out=off_tok[1:])
+    tokens = pa.Array.from_buffers(
         pa.utf8(),
         total_slots,
-        [None, pa.py_buffer(off_tok.astype(np.int32)), pa.py_buffer(tok_values)],
+        [None, pa.py_buffer(off_tok.astype(np.int32)), pa.py_buffer(cleaned[~seps])],
     )
-    denc = tokens_arr.dictionary_encode()
+    return np.repeat(np.arange(n_rows), slots), pos, tokens
+
+
+def _spec_tokens(rows, texts):
+    """The spec token source: :func:`typesense_spark.tokenizer.tokenize`
+    per text (rows holding non-ASCII bytes, whose unicode fold the LUT
+    cannot do) → (row, pos, tokens) like :func:`_ascii_tokens`."""
+    import pyarrow as pa
+
+    from typesense_spark.tokenizer import tokenize
+
+    row: list[int] = []
+    pos: list[int] = []
+    terms: list[str] = []
+    for r, text in zip(rows, texts):
+        for t, p in tokenize(text):
+            row.append(r)
+            pos.append(p)
+            terms.append(t)
+    return (
+        np.asarray(row, dtype=np.int64),
+        np.asarray(pos, dtype=np.int64),
+        pa.array(terms, type=pa.utf8()),
+    )
+
+
+def _group_tokens(n_docs, token_doc, pos, tokens):
+    """The one (doc, term) grouping every token source feeds: drop
+    empty slots → dictionary-encode → stable fused-key argsort-group by
+    (doc, term code). Positions arrive ascending per doc, so the stable
+    sort keeps them ascending per group.
+
+    Returns None (no tokens) or the group dict the TF batch builder
+    (:func:`_tf_batch`) and the partial-stats builder
+    (:func:`_stats_batch`) share. Output equivalence with the pinned
+    Python tokenizer is asserted end to end (tests/test_index_build.py
+    route tests; the engine↔oracle tests in tests/test_search.py index
+    through this path and the oracle tokenizes with
+    :func:`typesense_spark.tokenizer.tokenize`).
+    """
+    tok_off = _binary_buffers(tokens)[0]
+    nonempty = tok_off[1:] != tok_off[:-1]
+    denc = tokens.dictionary_encode()
     codes = denc.indices.to_numpy().astype(np.int64)
     dictionary = denc.dictionary
 
-    nonempty = token_lens > 0
     doc = token_doc[nonempty]
     code = codes[nonempty]
     pos = pos[nonempty]
@@ -337,6 +374,56 @@ def _tokenize_groups_ascii(doc_ids_np, offsets, values):
     }
 
 
+def _column_group(col):
+    """One batch's text column → :func:`_group_tokens` group (or None).
+
+    A ``list<string>`` column flattens into its elements, each tokenized
+    as a text row and mapped back to its doc row; positions become
+    ``elem_idx * ELEM_STRIDE + slot`` (null elements still take an
+    element index; null and empty arrays emit nothing). Null texts fill
+    to "". Rows holding any byte >= 0x80 take the spec source — for a
+    list, the doc's every element, so each doc's tokens come from one
+    source in position order; the ASCII rest — the overwhelmingly
+    common case — takes the byte-LUT source.
+    """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n_docs = len(col)
+    elem_doc = None
+    if pa.types.is_list(col.type):
+        elem_doc = pc.list_parent_indices(col).to_numpy()
+        col = col.flatten()
+        if not len(col):
+            return None
+    if col.null_count:
+        col = pc.fill_null(col, "")
+    offsets, values = _binary_buffers(col)
+    offsets = offsets.astype(np.int64)
+    # the per-row localisation only runs when the whole batch has at
+    # least one byte >= 0x80 (one cheap reduction otherwise)
+    drop = None
+    if (values >= 0x80).any():
+        hi = np.zeros(values.size + 1, dtype=np.int64)
+        np.cumsum(values >= 0x80, out=hi[1:])
+        drop = (hi[offsets[1:]] - hi[offsets[:-1]]) > 0
+        if elem_doc is not None:
+            drop = np.isin(elem_doc, elem_doc[drop])
+    row, pos, tokens = _ascii_tokens(offsets, values, drop)
+    if drop is not None:
+        idx = np.flatnonzero(drop)
+        s_row, s_pos, s_tokens = _spec_tokens(idx, col.take(idx).to_pylist())
+        row = np.concatenate([row, s_row])
+        pos = np.concatenate([pos, s_pos])
+        tokens = pa.concat_arrays([tokens, s_tokens])
+    if elem_doc is not None:
+        # element index = rank within its doc's (contiguous) run
+        elem_idx = np.arange(elem_doc.size) - np.searchsorted(elem_doc, elem_doc)
+        pos = elem_idx[row] * ELEM_STRIDE + pos
+        row = elem_doc[row]
+    return _group_tokens(n_docs, row, pos, tokens)
+
+
 def _const_str_array(s: str, n: int):
     """Arrow StringArray of ``s`` repeated ``n`` times, built from raw
     buffers (no per-row Python strings)."""
@@ -354,14 +441,11 @@ def _const_str_array(s: str, n: int):
     )
 
 
-def _tokenize_batch_ascii(doc_ids_np, offsets, values, store_positions, fld):
-    """All-ASCII Arrow batch → TF_SCHEMA RecordBatch (tf / dl /
+def _tf_batch(doc_ids_np, g, store_positions, fld):
+    """One batch's group → TF_SCHEMA RecordBatch (tf / dl /
     delta-packed positions via ``varint_encode_offsets``)."""
     import pyarrow as pa
 
-    g = _tokenize_groups_ascii(doc_ids_np, offsets, values)
-    if g is None:
-        return None
     dictionary, dl = g["dictionary"], g["dl"]
     sp, newgrp, grp_idx = g["sp"], g["newgrp"], g["grp_idx"]
     n_groups, tf = g["n_groups"], g["tf"]
@@ -425,15 +509,12 @@ STATS_SCHEMA = T.StructType(
 )
 
 
-def _stats_batch_ascii(doc_ids_np, offsets, values, scores_np, fld):
-    """All-ASCII Arrow batch → (doc rows, term rows) partial-stats
+def _stats_batch(doc_ids_np, g, scores_np, fld):
+    """One batch's group → (doc rows, term rows) partial-stats
     RecordBatches (see STATS_SCHEMA); ``scores_np`` optional (max_score
     support for score_col indexes)."""
     import pyarrow as pa
 
-    g = _tokenize_groups_ascii(doc_ids_np, offsets, values)
-    if g is None:
-        return []
     dictionary, dl = g["dictionary"], g["dl"]
     tf, grp_doc, grp_code = g["tf"], g["grp_doc"], g["grp_code"]
     n_dict = len(dictionary)
@@ -494,80 +575,16 @@ def _stats_batch_ascii(doc_ids_np, offsets, values, scores_np, fld):
     return out
 
 
-def _stats_rows_python(doc_ids, texts, scores, fld):
-    """Per-row fallback (non-ASCII rows): emit per-doc dl rows and
-    per-(doc, term) UN-aggregated term partials (df=1, cf=tf,
-    max_tf=tf) — valid partials for the same downstream aggregation."""
-    import pyarrow as pa
-
-    from typesense_spark.tokenizer import tokenize
-
-    doc_rows: list[tuple] = []
-    term_rows: list[tuple] = []
-    for i, (doc_id, content) in enumerate(zip(doc_ids, texts)):
-        toks = tokenize(content or "")
-        if not toks:
-            continue
-        doc_rows.append((int(doc_id), len(toks)))
-        per: dict[str, int] = {}
-        for t, _p in toks:
-            per[t] = per.get(t, 0) + 1
-        sc = int(scores[i]) if scores is not None else None
-        for t, tf in per.items():
-            term_rows.append((t, tf, sc))
-    if not doc_rows:
-        return []
-    out = []
-    out.append(
-        pa.RecordBatch.from_arrays(
-            [
-                pa.array([fld] * len(doc_rows), type=pa.string()),
-                pa.array([r[0] for r in doc_rows], type=pa.int64()),
-                pa.nulls(len(doc_rows), pa.string()),
-                pa.array([r[1] for r in doc_rows], type=pa.int64()),
-                pa.nulls(len(doc_rows), pa.int64()),
-                pa.nulls(len(doc_rows), pa.int64()),
-                pa.nulls(len(doc_rows), pa.int64()),
-                pa.nulls(len(doc_rows), pa.int64()),
-            ],
-            names=[f.name for f in STATS_SCHEMA.fields],
-        )
-    )
-    out.append(
-        pa.RecordBatch.from_arrays(
-            [
-                pa.array([fld] * len(term_rows), type=pa.string()),
-                pa.nulls(len(term_rows), pa.int64()),
-                pa.array([r[0] for r in term_rows], type=pa.string()),
-                pa.nulls(len(term_rows), pa.int64()),
-                pa.array([1] * len(term_rows), type=pa.int64()),
-                pa.array([r[1] for r in term_rows], type=pa.int64()),
-                pa.array([r[1] for r in term_rows], type=pa.int64()),
-                pa.array([r[2] for r in term_rows], type=pa.int64()),
-            ],
-            names=[f.name for f in STATS_SCHEMA.fields],
-        )
-    )
-    return out
-
-
 def _text_routes(batches, has_side: bool):
-    """The per-batch router the tokenize and stats mappers share, over
-    (doc_id, text[, side]) Arrow batches → (doc_ids, texts, offsets,
-    values, side) work items. Null texts fill to ""; a non-string
-    column goes whole to the per-row fallback (``texts`` set), as do
-    the rows holding any byte >= 0x80, which preserves the full
-    unicode-fold spec; the ASCII rest — the overwhelmingly common case
-    — goes to the vectorized path as its Arrow ``offsets``/``values``
-    buffers (``texts`` None). ``side`` is the optional third column
-    (the static score) as int64, sliced alongside the doc ids; a null
-    in it raises :func:`_null_score` for the first such doc."""
-    import pyarrow as pa
-
+    """The per-batch front half the tokenize and stats mappers share,
+    over (doc_id, text[, side]) Arrow batches of any text field type
+    (string or ``list<string>``, ASCII or not) → (doc_ids, side, group)
+    work items, the group from :func:`_column_group`. ``side`` is the
+    optional third column (the static score) as int64; a null in it
+    raises :func:`_null_score` for the first such doc."""
     for batch in batches:
         if not batch.num_rows:
             continue
-        arr = batch.column(1)
         doc_ids_np = batch.column(0).to_numpy(zero_copy_only=False)
         side = None
         if has_side:
@@ -576,300 +593,70 @@ def _text_routes(batches, has_side: bool):
                 first = col.is_null().to_numpy(zero_copy_only=False).argmax()
                 raise ValueError(_null_score(batch.schema.names[2], doc_ids_np[first]))
             side = col.to_numpy(zero_copy_only=False).astype(np.int64)
-        if arr.null_count:
-            import pyarrow.compute as pc
-
-            arr = pc.fill_null(arr, "")
-        if not pa.types.is_string(arr.type):
-            yield doc_ids_np, arr.to_pylist(), None, None, side
-            continue
-        offsets, values = _binary_buffers(arr)
-        offsets = offsets.astype(np.int64)
-        # the per-row localisation only runs when the whole batch has
-        # at least one byte >= 0x80 (one cheap reduction otherwise)
-        if not (values >= 0x80).any():
-            row_hi = None
-        else:
-            hi = np.zeros(values.size + 1, dtype=np.int64)
-            np.cumsum(values >= 0x80, out=hi[1:])
-            row_hi = (hi[offsets[1:]] - hi[offsets[:-1]]) > 0
-        if row_hi is not None and row_hi.any():
-            idx = np.flatnonzero(row_hi)
-            texts = [arr[int(i)].as_py() for i in idx]
-            yield doc_ids_np[idx], texts, None, None, (
-                side[idx] if side is not None else None
-            )
-            ascii_idx = np.flatnonzero(~row_hi)
-            if ascii_idx.size == 0:
-                continue
-            sub = arr.take(pa.array(ascii_idx, type=pa.int64()))
-            offsets, values = _binary_buffers(sub)
-            offsets = offsets.astype(np.int64)
-            doc_ids_np = doc_ids_np[ascii_idx]
-            if side is not None:
-                side = side[ascii_idx]
-        yield doc_ids_np, None, offsets, values, side
+        g = _column_group(batch.column(1))
+        if g is not None:
+            yield doc_ids_np, side, g
 
 
 def _null_score(score_col: str, doc_id) -> str:
     """The build's error for a doc without a static score (the reference
     likewise rejects a doc missing its default sorting field): raised in
-    the stats mapper (scalar fields) or by ``raise_error`` (array
-    fields), then re-raised by ``build_index`` as a ValueError."""
+    the stats mapper for every field type, then re-raised by
+    ``build_index`` as a ValueError."""
     return f"score_col {score_col!r} is null for doc_id {doc_id}"
 
 
 _NULL_SCORE_RE = re.compile(r"score_col '[^']*' is null for doc_id -?\d+")
 
 
-def stats_mapper_arrow(fld: str, has_score: bool):
-    """mapInArrow partial-stats mapper over (doc_id, fld[, score])
-    batches — the r6 stats/dictionary pass (see STATS_SCHEMA note),
-    routed by :func:`_text_routes`."""
-
-    def gen(batches):
-        for doc_ids, texts, offsets, values, scores in _text_routes(batches, has_score):
-            if texts is not None:
-                yield from _stats_rows_python(doc_ids, texts, scores, fld)
-            else:
-                yield from _stats_batch_ascii(doc_ids, offsets, values, scores, fld)
-
-    return gen
-
-
 def stats_rows(docs: DataFrame, fld: str, score_col: str | None) -> DataFrame:
-    """``docs[fld]`` → STATS_SCHEMA partial rows (scalar string fields:
-    vectorized mapper; array fields: TF rows aggregated JVM-side into
-    the same shape)."""
-    if dict(docs.dtypes).get(fld, "").startswith("array"):
-        tfa = tokenize_tf(docs, fld, False)
-        if score_col is not None:
-            sc = F.col(score_col)
-            msg = F.concat(
-                F.lit(_null_score(score_col, "")), F.col("doc_id").cast("string")
-            )
-            tfa = tfa.join(
-                docs.select(
-                    "doc_id",
-                    F.when(sc.isNull(), F.raise_error(msg))
-                    .otherwise(sc.cast("long"))
-                    .alias("_sc"),
-                ),
-                "doc_id",
-            )
-        doc_rows = (
-            tfa.groupBy("field", "doc_id")
-            .agg(F.max("dl").alias("dl"))
-            .select(
-                "field",
-                "doc_id",
-                F.lit(None).cast("string").alias("term"),
-                "dl",
-                F.lit(None).cast("long").alias("df"),
-                F.lit(None).cast("long").alias("cf"),
-                F.lit(None).cast("long").alias("max_tf"),
-                F.lit(None).cast("long").alias("max_score"),
-            )
-        )
-        aggs = [
-            F.count("*").alias("df"),
-            F.sum("tf").alias("cf"),
-            F.max("tf").alias("max_tf"),
-        ]
-        if score_col is not None:
-            aggs.append(F.max("_sc").alias("max_score"))
-        term_rows = (
-            tfa.groupBy("field", "term")
-            .agg(*aggs)
-            .select(
-                "field",
-                F.lit(None).cast("long").alias("doc_id"),
-                "term",
-                F.lit(None).cast("long").alias("dl"),
-                "df",
-                "cf",
-                "max_tf",
-                F.col("max_score")
-                if score_col is not None
-                else F.lit(None).cast("long").alias("max_score"),
-            )
-        )
-        return doc_rows.unionByName(term_rows)
-    cols = ["doc_id", fld]
+    """``docs[fld]`` → STATS_SCHEMA partial rows: one ``mapInArrow``
+    pass (routed by :func:`_text_routes`) pre-aggregating each batch's
+    group into per-doc dl rows and per-term partials — the r6
+    stats/dictionary pass (see STATS_SCHEMA note), for every field
+    type."""
+    cols = [F.col("doc_id"), F.col(fld)]
     if score_col is not None:
-        cols.append(score_col)
-    src = docs.select(*[F.col(c) for c in cols[:2]], *(
-        [F.col(score_col).cast("long").alias(score_col)] if score_col is not None else []
-    ))
-    return src.mapInArrow(
-        stats_mapper_arrow(fld, score_col is not None), schema=STATS_SCHEMA
-    )
-
-
-def _tokenize_rows_python(doc_ids, texts, store_positions, fld):
-    """Per-row fallback (non-ASCII rows): the pinned Python tokenizer,
-    grouped per (doc, term) with delta+varint packed positions."""
-    import pyarrow as pa
-
-    from typesense_spark.tokenizer import tokenize
-
-    doc_out: list[int] = []
-    terms: list[str] = []
-    tfs: list[int] = []
-    dls: list[int] = []
-    flat_vals: list[int] = []
-    counts: list[int] = []
-    for doc_id, content in zip(doc_ids, texts):
-        toks = tokenize(content or "")
-        dl = len(toks)
-        if dl == 0:
-            continue
-        per: dict[str, list[int]] = {}
-        for t, p in toks:
-            per.setdefault(t, []).append(p)
-        for t, ps in per.items():
-            doc_out.append(int(doc_id))
-            terms.append(t)
-            tfs.append(len(ps))
-            dls.append(dl)
-            if store_positions:
-                counts.append(len(ps) + 1)
-                flat_vals.append(len(ps))
-                flat_vals.append(ps[0])
-                for a, b in zip(ps, ps[1:]):
-                    flat_vals.append(b - a)
-    if not terms:
-        return None
-    if store_positions:
-        pos_bins = codec.varint_encode_split(
-            np.asarray(flat_vals, dtype=np.uint64),
-            np.asarray(counts, dtype=np.int64),
-        )
-    else:
-        pos_bins = [b""] * len(terms)
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array([fld] * len(terms), type=pa.string()),
-            pa.array(doc_out, type=pa.int64()),
-            pa.array(terms, type=pa.string()),
-            pa.array(tfs, type=pa.int64()),
-            pa.array(dls, type=pa.int64()),
-            pa.array(pos_bins, type=pa.binary()),
-        ],
-        names=[f.name for f in TF_SCHEMA.fields],
-    )
-
-
-def tokenize_mapper_arrow(fld: str, store_positions: bool):
-    """mapInArrow tokenize + per-doc grouping + position packing.
-
-    ASCII rows — the overwhelmingly common case — run the fully vectorized
-    :func:`_tokenize_batch_ascii` (byte LUT + Arrow buffer slicing +
-    dictionary-encode grouping); rows containing any non-ASCII byte
-    fall back per row to the pinned Python tokenizer, preserving the
-    full unicode-fold spec (the split is :func:`_text_routes`).
-    Tokenization, (doc, term) grouping, tf, dl and position packing all
-    happen in this one pass over the corpus scan, so no doc-level
-    shuffle exists anywhere in the build.
-    """
+        cols.append(F.col(score_col).cast("long").alias(score_col))
 
     def gen(batches):
-        for doc_ids, texts, offsets, values, _ in _text_routes(batches, False):
-            out = (
-                _tokenize_rows_python(doc_ids, texts, store_positions, fld)
-                if texts is not None
-                else _tokenize_batch_ascii(doc_ids, offsets, values, store_positions, fld)
-            )
-            if out is not None:
-                yield out
+        for doc_ids, scores, g in _text_routes(batches, score_col is not None):
+            yield from _stats_batch(doc_ids, g, scores, fld)
 
-    return gen
+    return docs.select(*cols).mapInArrow(gen, schema=STATS_SCHEMA)
 
 
 def tokenize_tf(docs: DataFrame, fld: str, store_positions: bool) -> DataFrame:
-    """``docs[fld]`` → TF rows via the vectorized Arrow tokenizer
-    (scalar string fields) or the array mapper — the one entry point
-    every tokenize consumer (build, streaming append, maintain,
-    checkpoint groups) shares, so they all ride the r6 fast path."""
-    if dict(docs.dtypes).get(fld, "").startswith("array"):
-        return docs.select("doc_id", fld).mapInPandas(
-            tokenize_mapper_array(fld, store_positions), schema=TF_SCHEMA
-        )
-    return docs.select("doc_id", fld).mapInArrow(
-        tokenize_mapper_arrow(fld, store_positions), schema=TF_SCHEMA
-    )
-
-
-def tokenize_mapper_array(fld: str, store_positions: bool):
-    """B5 array-string tokenize: one Arrow-batched pass like
-    :func:`tokenize_mapper_arrow`, but positions restart per element and are
-    stored as ``elem_idx * ELEM_STRIDE + local_pos`` (see ELEM_STRIDE).
-    dl / tf / df aggregate jointly across elements (pinned — the
-    reference's tf is per-token occurrences over the whole array too)."""
-    from typesense_spark.tokenizer import tokenize
+    """``docs[fld]`` → TF rows: one ``mapInArrow`` pass doing tokenize,
+    (doc, term) grouping, tf, dl and position packing over the corpus
+    scan (routed by :func:`_text_routes`), so no doc-level shuffle
+    exists anywhere in the build. It is the one entry point every
+    tokenize consumer (build, streaming append, maintain, snapshots,
+    checkpoint groups) shares, for every field type."""
 
     def gen(batches):
-        for pdf in batches:
-            doc_ids: list[int] = []
-            terms: list[str] = []
-            tfs: list[int] = []
-            dls: list[int] = []
-            flat_vals: list[int] = []
-            counts: list[int] = []
-            for doc_id, elems in zip(pdf["doc_id"], pdf[fld]):
-                per: dict[str, list[int]] = {}
-                dl = 0
-                if elems is not None:
-                    for ei, content in enumerate(elems):
-                        toks = tokenize(content or "")
-                        dl += len(toks)
-                        off = ei * ELEM_STRIDE
-                        for t, p in toks:
-                            per.setdefault(t, []).append(off + p)
-                if dl == 0:
-                    continue
-                for t, ps in per.items():  # ps ascending by construction
-                    doc_ids.append(int(doc_id))
-                    terms.append(t)
-                    tfs.append(len(ps))
-                    dls.append(dl)
-                    if store_positions:
-                        counts.append(len(ps) + 1)
-                        flat_vals.append(len(ps))
-                        flat_vals.append(ps[0])
-                        for a, b in zip(ps, ps[1:]):
-                            flat_vals.append(b - a)
-            if store_positions and terms:
-                pos_bins = codec.varint_encode_split(
-                    np.asarray(flat_vals, dtype=np.uint64),
-                    np.asarray(counts, dtype=np.int64),
-                )
-            else:
-                pos_bins = [b""] * len(terms)
-            yield pd.DataFrame(
-                {
-                    "field": fld,
-                    "doc_id": pd.array(doc_ids, dtype="int64"),
-                    "term": terms,
-                    "tf": pd.array(tfs, dtype="int64"),
-                    "dl": pd.array(dls, dtype="int64"),
-                    "pos_bin": pos_bins,
-                }
-            )
+        for doc_ids, _, g in _text_routes(batches, False):
+            yield _tf_batch(doc_ids, g, store_positions, fld)
 
-    return gen
+    return docs.select("doc_id", fld).mapInArrow(gen, schema=TF_SCHEMA)
 
 
 def _binary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
     """Arrow Binary/StringArray → (offsets[int32], values[uint8]) as
-    numpy views over the Arrow buffers, corrected for the array's
-    slice offset — NO per-row Python objects are created."""
+    numpy views over the Arrow buffers, corrected for the array's slice
+    offset and rebased so ``offsets[0] == 0`` and ``values`` spans
+    exactly the array's bytes (a slice, or a flattened list child, may
+    start and end inside its value buffer) — NO per-row Python objects
+    are created."""
     bufs = arr.buffers()
     offsets = np.frombuffer(bufs[1], dtype=np.int32)[
         arr.offset : arr.offset + len(arr) + 1
     ]
     values = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else np.empty(0, np.uint8)
-    return offsets, values
+    base = int(offsets[0])
+    if base:
+        offsets = offsets - base
+    return offsets, values[base : base + int(offsets[-1])]
 
 
 def _group_change(batch) -> np.ndarray:
@@ -939,16 +726,10 @@ def _pack_batch_arrow(batch, block_size: int, store_positions: bool, fld: str):
         # blocks are contiguous runs of rows, so the block offsets into
         # the (shared) position value buffer are themselves an Arrow
         # offsets array — zero copies, zero Python slices
-        blk_off = offs[np.append(starts, n)].astype(np.int64)
-        base = int(blk_off[0])
         pos_arr = pa.Array.from_buffers(
             pa.binary(),
             starts.size,
-            [
-                None,
-                pa.py_buffer((blk_off - base).astype(np.int32)),
-                pa.py_buffer(vals[base : int(blk_off[-1])]),
-            ],
+            [None, pa.py_buffer(offs[np.append(starts, n)]), pa.py_buffer(vals)],
         )
     else:
         pos_arr = pa.Array.from_buffers(
@@ -1114,9 +895,9 @@ def _flat_varints(batch, col: str, count: int | None = None) -> np.ndarray:
     recovered afterwards from value counts (``n_docs``), never by
     iterating rows. Zero per-row Python objects: the stream is one
     numpy slice of the Arrow VALUE buffer."""
-    offs, vals = _binary_buffers(batch.column(col))
-    stream = vals[offs[0] : offs[-1]].tobytes()
-    return codec.varint_decode(stream, count=count)
+    return codec.varint_decode(
+        _binary_buffers(batch.column(col))[1].tobytes(), count=count
+    )
 
 
 def _decode_batch_arrow(batch):
@@ -1337,7 +1118,7 @@ def build_index(
         docs = docs.withColumn("content_sha", F.sha2(content_str, 256))
 
     # persist_light: cache ONLY the narrow relations (docs handle,
-    # position-free tf, dictionary aggs) so a dictionary-only caller
+    # stats partials, dictionary aggs) so a dictionary-only caller
     # (the checkpoint dict stage) runs ONE tokenize pass instead of
     # one per consumer action — without triggering the pack pipeline
     # the way persist=True does. Wide tf rows are never cached
@@ -1423,7 +1204,8 @@ def build_index(
         if null_score is None:
             raise
         raise ValueError(null_score.group(0)) from None
-    stats: dict[str, FieldStats] = {}
+    # a field with no tokens on any doc has no doc_attrs rows
+    stats = {fld: FieldStats(n_docs=0, sum_dl=0) for fld in fields}
     for r in probe_rows:
         if r["_src"] == "attrs":
             stats[r["field"]] = FieldStats(n_docs=int(r["n"]), sum_dl=int(r["s"]))

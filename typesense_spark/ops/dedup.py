@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from typesense_spark.ops import spread_small_input
-from typesense_spark.tokenizer import explode_tokens
+from typesense_spark.tokenizer import SPLIT_PATTERN, explode_tokens, spark_term
 
 # pinned MinHash parameters (mirrored literally in the oracle SQL)
 MINHASH_PRIME = 2147483647  # 2^31 - 1
@@ -70,7 +70,9 @@ def exact_duplicates(
 def token_shingles(docs: DataFrame, text_col: str, id_col: str = "doc_id", k: int = SHINGLE_K) -> DataFrame:
     """Distinct token k-gram shingles per doc: (doc_id, shingle).
 
-    Tokenization is the engine's pinned tokenizer (JVM expressions);
+    Tokenization is the engine's pinned tokenizer (the JVM term
+    expression :func:`~typesense_spark.tokenizer.spark_term`, the same
+    one :func:`explode_tokens` applies, unicode folds included);
     shingle = k consecutive terms joined by a single space, sliced out
     of the per-doc token ARRAY with transform/sequence — entirely
     map-side. (The r2 form exploded tokens and ran a ``lead()`` window
@@ -78,14 +80,9 @@ def token_shingles(docs: DataFrame, text_col: str, id_col: str = "doc_id", k: in
     for an operation that is embarrassingly parallel per doc. Same
     output, proven in tests and by the unchanged dedup oracles.)
     """
-    from typesense_spark.tokenizer import SPLIT_PATTERN, STRIP_PATTERN
-
     docs = spread_small_input(docs)
     toks = F.filter(
-        F.transform(
-            F.split(F.col(text_col), SPLIT_PATTERN, -1),
-            lambda raw: F.regexp_replace(F.lower(raw), STRIP_PATTERN, ""),
-        ),
+        F.transform(F.split(F.col(text_col), SPLIT_PATTERN, -1), spark_term),
         lambda t: t != F.lit(""),
     )
     base = docs.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))

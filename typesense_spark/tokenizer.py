@@ -1,4 +1,4 @@
-"""Pinned tokenizer — ONE spec, three interchangeable implementations.
+"""Pinned tokenizer — ONE spec, three implementations.
 
 Reference parity (``/root/reference/src/tokenizer.cpp:4-112``):
 
@@ -26,26 +26,26 @@ Reference parity (``/root/reference/src/tokenizer.cpp:4-112``):
   ``keep_empty`` (the indexing path, ``src/index.cpp:530-545``) empty
   tokens consume positions but are not emitted.
 
-Implementations (proven identical by ``tests/test_tokenizer.py``):
+Implementations (proven identical by ``tests/test_tokenizer.py`` and
+the build route tests in ``tests/test_index_build.py``):
 
-1. :func:`tokenize` — pure Python, shared by the oracle and the engine
-   driver (query parsing), and by the index build's per-row fallback
-   for non-ASCII rows and array fields (``build.tokenize_tf``; ASCII
-   rows take its byte-LUT numpy fast path to the same tokens).
-2. :func:`explode_tokens` — pure Spark SQL expressions (JVM whole-stage
-   codegen; the ops hot path). Folding uses a 1:1 char translate table
+1. :func:`tokenize` — the Python spec, shared by the oracle, the
+   engine driver (query parsing) and the index build's fallback for
+   rows holding non-ASCII bytes.
+2. The build's vectorized route (``index.build.tokenize_tf`` /
+   ``stats_rows``): a byte-LUT numpy tokenizer for ASCII rows, feeding
+   the same (doc, term) grouping as the :func:`tokenize` fallback, for
+   scalar and ``array<string>`` fields alike.
+3. The JVM expression (:func:`spark_term` over :func:`explode_tokens`'s
+   split; the ops hot path). Folding uses a 1:1 char translate table
    generated from the SAME ``_fold_char`` (see :func:`fold_table`);
    multi-char decompositions (ﬁ → fi) are the one pinned divergence —
    they pass through on this path (rare enough that the ops gates stay
-   exact on every tested corpus; corpora heavy in such forms should
-   route through the pandas path).
-3. :func:`tokenize_pandas` — vectorized pandas path (Arrow-batched; no
-   per-row Python in the Spark plan), delegating to :func:`tokenize`.
+   exact on every tested corpus).
 
 DuckDB-oracle equivalent (same spec, used by ``__spark_entry__``):
 :func:`duckdb_tokenize_expr` — the same translate table + RE2 class
-``[^a-z0-9\\p{L}\\p{N}\\p{M}]``; the legacy pure-ASCII form remains
-:data:`DUCKDB_TOKENIZE_SQL` (identical on ASCII corpora).
+``[^a-z0-9\\p{L}\\p{N}\\p{M}]``.
 """
 
 from __future__ import annotations
@@ -53,8 +53,6 @@ from __future__ import annotations
 import re
 import unicodedata
 from functools import lru_cache
-
-import pandas as pd
 
 _SPLIT_RE = re.compile(r"[ \n]")
 _STRIP_RE = re.compile(r"[^a-z0-9]")
@@ -90,7 +88,7 @@ def _fold_ascii(raw: str) -> str:
     )
 
 
-def tokenize(text: str, fold_unicode: bool = True) -> list[tuple[str, int]]:
+def tokenize(text: str) -> list[tuple[str, int]]:
     """text → [(term, position)]; positions count raw tokens (keep_empty)."""
     if text is None:
         return []
@@ -101,7 +99,7 @@ def tokenize(text: str, fold_unicode: bool = True) -> list[tuple[str, int]]:
         ]
     out: list[tuple[str, int]] = []
     for pos, raw in enumerate(_SPLIT_RE.split(text)):
-        if raw.isascii() or not fold_unicode:
+        if raw.isascii():
             term = _STRIP_RE.sub("", raw.lower())
         else:
             term = _fold_ascii(raw)
@@ -115,21 +113,10 @@ def tokenize_terms(text: str) -> list[str]:
     return [t for t, _ in tokenize(text)]
 
 
-def tokenize_pandas(texts: pd.Series) -> pd.Series:
-    """Vectorized batch tokenizer: Series[str] → Series[list[(term,pos)]].
-
-    Used inside mapInPandas for non-ASCII corpora; identical output to
-    :func:`tokenize` by construction (it calls it per value — the work
-    is regex-bound, amortized by Arrow batching).
-    """
-    return texts.map(lambda t: tokenize(t) if t is not None else [])
-
-
 # ---------------------------------------------------------------- Spark SQL
 
 # split pattern keeps empty tokens so array index == reference position
 SPLIT_PATTERN = "[ \\n]"
-STRIP_PATTERN = "[^a-z0-9]"
 # post-translate strip: ASCII non-alnum goes; non-ASCII letters/numbers/
 # marks stay (the passthrough branch); non-ASCII punctuation/symbols/
 # separators go. Valid Java regex AND RE2 (DuckDB) — shared verbatim.
@@ -141,13 +128,13 @@ UNICODE_STRIP_PATTERN = "[^a-z0-9\\p{L}\\p{N}\\p{M}]"
 # deletes on the Python path but survived as \p{N} on the JVM/DuckDB
 # path). Scanning 65k codepoints runs once per process (~0.1 s, cached).
 # Remaining documented divergence classes of the JVM/DuckDB paths vs
-# the authoritative Python/pandas path:
+# the authoritative Python path:
 #   - multi-char ASCII decompositions (ﬁ→fi, ㎞→km) — translate() is
 #     1:1, so these pass through (pre-existing pinned divergence);
 #   - non-BMP codepoints (𝐀→a, 🄰) — Spark's translate operates on
 #     UTF-16 code units, so supplementary-plane entries cannot be
 #     expressed safely in the shared table; they pass through verbatim.
-# Corpora heavy in either class should route through the pandas path.
+# Corpora heavy in either class should route through the Python spec.
 # surrogate block EXCLUDED: lone surrogates cannot be UTF-8-encoded,
 # so putting them in the translate table kills the py4j call that
 # ships it to the JVM (they can never appear in valid parquet/UTF-8
@@ -184,6 +171,18 @@ def fold_table() -> tuple[str, str]:
     return "".join(src_keep) + "".join(src_del), "".join(dst)
 
 
+def spark_term(raw):
+    """JVM expression: raw token Column → pinned term — translate over
+    the shared fold table (lowercase + accent folds + fold-away
+    deletions), then the unicode-aware strip. The one term expression
+    of every Spark-side tokenizer (:func:`explode_tokens`, the dedup
+    shingles); empty for tokens that fold away entirely."""
+    from pyspark.sql import functions as F
+
+    matching, replace = fold_table()
+    return F.regexp_replace(F.translate(raw, matching, replace), UNICODE_STRIP_PATTERN, "")
+
+
 def explode_tokens(df, content_col: str, doc_id_col: str = "doc_id", extra_cols=()):
     """JVM-side tokenize: df → (doc_id, [extra], pos, term), term != ''.
 
@@ -195,35 +194,14 @@ def explode_tokens(df, content_col: str, doc_id_col: str = "doc_id", extra_cols=
     """
     from pyspark.sql import functions as F
 
-    matching, replace = fold_table()
     cols = [doc_id_col, *extra_cols]
     toks = df.select(
         *cols,
         F.posexplode(F.split(F.col(content_col), SPLIT_PATTERN, -1)).alias("pos", "raw"),
     )
-    return toks.select(
-        *cols,
-        "pos",
-        F.regexp_replace(
-            F.translate(F.col("raw"), matching, replace),
-            UNICODE_STRIP_PATTERN,
-            "",
-        ).alias("term"),
-    ).where(F.col("term") != "")
-
-
-DUCKDB_TOKENIZE_SQL = (
-    "SELECT {cols}, regexp_replace(lower(tok), '[^a-z0-9]', '', 'g') AS term "
-    "FROM {table}, unnest(string_split_regex({content}, '[ \\n]')) AS _u(tok) "
-    "WHERE regexp_replace(lower(tok), '[^a-z0-9]', '', 'g') <> ''"
-)
-
-
-def duckdb_tokenize_sql(table: str, content: str, cols: str) -> str:
-    """The same tokenizer as ANSI-ish SQL DuckDB runs for the oracle
-    (legacy pure-ASCII form — identical to the pinned spec on ASCII
-    corpora, which every driver-generated testdata table is)."""
-    return DUCKDB_TOKENIZE_SQL.format(table=table, content=content, cols=cols)
+    return toks.select(*cols, "pos", spark_term(F.col("raw")).alias("term")).where(
+        F.col("term") != ""
+    )
 
 
 def duckdb_tokenize_expr(tok_expr: str) -> str:
