@@ -399,8 +399,8 @@ def headline_queries(sf_dir: str, cores: int) -> tuple[dict, float, float]:
         batch_qps = round(len(qs) / batch_dt, 1) if n_rows >= 0 else 0.0
 
         # typo-tolerant batch (num_typos=2): every unique token expands
-        # in ONE length-bucketed join plan (expand_tokens_batch) — the
-        # r2 bench only measured the typo-free path
+        # in one call of the expansion router (engine._expand) — the r2
+        # bench only measured the typo-free path
         tqs = []
         for i in range(1000):
             base = vocab[(i * 2654435761) % len(vocab)]

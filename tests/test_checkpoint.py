@@ -73,6 +73,22 @@ def test_load_checkpointed_queryable(spark, corpus_df, tmp_path):
     assert rows[0]["score_milli"] > 0
 
 
+def test_load_checkpointed_keeps_block_size(spark, corpus_df, tmp_path):
+    """A checkpointed index loads with the block_size it was built with
+    (WAND's block-count estimate divides df by it), before and after an
+    in-place delete, and its postings carry no commit-group column."""
+    from typesense_spark.index.maintain import delete_docs
+
+    out = str(tmp_path / "bs")
+    built = checkpointed_build(spark, corpus_df, out, **BUILD_KW)
+    assert built.block_size == load_checkpointed(spark, out).block_size == 32
+    victim = built.docs.select("doc_id").first()["doc_id"]
+    delete_docs(spark, out, [victim], fields=BUILD_KW["fields"])
+    ix = load_checkpointed(spark, out)
+    assert ix.block_size == 32
+    assert "group" not in ix.postings.columns
+
+
 def test_resume_with_changed_lineage_raises(spark, corpus_df, tmp_path):
     from typesense_spark.index.checkpoint import checkpointed_build
 

@@ -1,13 +1,20 @@
 """Scale-path variants must agree with the driver-path defaults:
-Spark-join typo expansion vs driver dict, WAND pruning actually prunes,
-corpus validation splits."""
+the folded Spark expansion route vs the driver dict, WAND pruning
+actually prunes, corpus validation splits."""
+
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
 from typesense_spark.index.validate import split_valid
 from typesense_spark.oracle import expand_token
-from typesense_spark.search.expand import _candidates_plan, expand_tokens_batch
+from typesense_spark.search.expand import (
+    TermDict,
+    _survivor_plan,
+    expand_query,
+    expand_tokens_batch,
+)
 
 
 def test_spark_expander_matches_expand_token(built_index):
@@ -89,11 +96,12 @@ def test_split_valid(spark):
     ]
 
 
-def test_spark_expand_routing_matches_driver_path(built_index):
-    """Forcing the Spark-join expansion route (threshold 0) must produce
+def test_spark_expand_routing_matches_driver_path(built_index, monkeypatch):
+    """Forcing the scale expansion route (threshold 0) must produce
     byte-identical search results to the driver-dict default, including
     typo, prefix, OR, drop-tokens, and batch queries — the auto-switch
     is a pure physical-plan decision."""
+    from typesense_spark.search import engine
     from typesense_spark.search.batch import batch_search
     from typesense_spark.search.engine import SearchRequest, search
 
@@ -112,18 +120,15 @@ def test_spark_expand_routing_matches_driver_path(built_index):
     driver_batch = [
         tuple(r) for r in batch_search(built_index, queries, fields=("content",)).collect()
     ]
-    built_index.expand_collect_threshold = 0
-    try:
-        spark_hits = [
-            [tuple(r) for r in search(built_index, SearchRequest(fields=("content",), **kw)).hits.collect()]
-            for kw in reqs
-        ]
-        spark_batch = [
-            tuple(r)
-            for r in batch_search(built_index, queries, fields=("content",)).collect()
-        ]
-    finally:
-        del built_index.expand_collect_threshold
+    monkeypatch.setattr(engine, "EXPAND_COLLECT_THRESHOLD", 0)
+    spark_hits = [
+        [tuple(r) for r in search(built_index, SearchRequest(fields=("content",), **kw)).hits.collect()]
+        for kw in reqs
+    ]
+    spark_batch = [
+        tuple(r)
+        for r in batch_search(built_index, queries, fields=("content",)).collect()
+    ]
     assert spark_hits == driver_hits
     assert sorted(spark_batch) == sorted(driver_batch)
 
@@ -143,6 +148,47 @@ def test_spark_expander_matches_expand_query(built_index):
     term_df = {r["term"]: r["df"] for r in terms_df.collect()}
     specs = [("impor", False), ("retur", False), ("zygo", True)]
     assert expand_tokens_batch(terms_df, specs, 2) == expand_query(specs, term_df, 2)
+
+
+@pytest.mark.parametrize("seed,n_parts,batch_rows", [(0, 1, 3), (1, 5, 5), (2, 16, 7)])
+def test_fold_expander_matches_term_dict(spark, seed, n_parts, batch_rows):
+    """The scale route's fold over Arrow batches equals the TermDict
+    kernel over the whole dictionary: both distances, num_typos 0-2,
+    prefix on and off, df and max_score ranks. Batches of 3-7 rows make
+    the fold span many batches and split rank ties (few distinct rank
+    values, int64 extremes among them) across them; hashing on term
+    length into up to 16 partitions leaves some partitions empty."""
+    rng = random.Random(seed)
+    alphabet = "abcdé中𝔸"
+    terms = sorted(
+        {"".join(rng.choice(alphabet) for _ in range(rng.randint(1, 6))) for _ in range(300)}
+    )
+    ranks = [0, 1, 2, 2, 2**63 - 1, -(2**63)]
+    df = [rng.choice(ranks) for _ in terms]
+    ms = [rng.choice(ranks) for _ in terms]
+    td = TermDict(terms, df, ms)
+    sdf = spark.createDataFrame(
+        list(zip(terms, df, ms)), "term string, df long, max_score long"
+    ).repartition(n_parts, F.length("term"))
+
+    def typo(t):
+        i = rng.randrange(len(t))
+        return t[:i] + rng.choice(alphabet) + t[i + 1 :]
+
+    toks = [typo(rng.choice(terms)) for _ in range(6)] + [rng.choice(terms)[:2], "a", "zz"]
+    specs = [(t, rng.random() < 0.5) for t in toks] + [(toks[0], True), (toks[0], False)]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(batch_rows))
+    try:
+        for distance in ("levenshtein", "osa"):
+            for num_typos in (0, 1, 2):
+                for rank in ("df", "max_score"):
+                    got = expand_tokens_batch(sdf, specs, num_typos, distance, rank)
+                    want = expand_query(specs, td, num_typos, distance, rank)
+                    assert got == want, (distance, num_typos, rank)
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_osa_matches_duckdb_damerau_at_cost_1():
@@ -195,7 +241,7 @@ def test_osa_spark_expansion_matches_driver(built_index):
 
 
 def test_rank_tokens_by_max_score_parity(spark):
-    """MAX_SCORE candidate ordering: driver dict vs Spark join agree,
+    """MAX_SCORE candidate ordering: driver dict vs scale route agree,
     and the chosen candidate set actually differs from FREQUENCY when
     the rankings disagree."""
     from pyspark.sql import functions as F
@@ -230,11 +276,12 @@ def test_rank_tokens_by_max_score_parity(spark):
     assert by_score != by_freq
 
 
-def test_spark_expand_empty_tokens(built_index):
+def test_spark_expand_empty_tokens(built_index, monkeypatch):
     """Exclusion-only queries promote to wildcard-minus-excludes
     (reference src/collection.cpp:1189-1192) and must behave identically
     on the Spark-expansion route: the doc universe minus every doc
     containing the excluded term, never a crash or a silent empty."""
+    from typesense_spark.search import engine
     from typesense_spark.search.engine import SearchRequest, search
 
     total = built_index.docs.count()
@@ -242,34 +289,80 @@ def test_spark_expand_empty_tokens(built_index):
         built_index.decoded(["import"], ["content"]).select("doc_id").distinct().count()
     )
     assert 0 < with_term < total  # premise: 'import' splits the corpus
-    built_index.expand_collect_threshold = 0
-    try:
-        res = search(
-            built_index,
-            SearchRequest(q="-import", fields=("content",), num_typos=0, per_page=250),
-        )
-        assert res.found == total - with_term
-    finally:
-        del built_index.expand_collect_threshold
+    monkeypatch.setattr(engine, "EXPAND_COLLECT_THRESHOLD", 0)
+    res = search(
+        built_index,
+        SearchRequest(q="-import", fields=("content",), num_typos=0, per_page=250),
+    )
+    assert res.found == total - with_term
+
+
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assert_one_map_in_arrow(terms, specs, num_typos):
+    """The scale route runs the TermDict kernel in ONE ``mapInArrow``
+    over the terms relation and adds nothing else to it: no window, no
+    JVM levenshtein and no per-row or pandas Python UDF. Windows in the
+    terms relation's own lineage (the build's doc-id assignment) must
+    each carry a partition spec: a physical Window prints
+    ``Window [exprs], [partitionSpec], [orderSpec]``, and an empty
+    partition spec (the single-partition shape) prints ``], [], [``."""
+    base = _physical(terms)
+    for distance in ("levenshtein", "osa"):
+        plan = _physical(_survivor_plan(terms, specs, num_typos, distance, "df"))
+        # the root under AdaptiveSparkPlan, reading the terms relation
+        assert "MapInArrow" in plan.splitlines()[1], plan
+        assert plan.count("MapInArrow") == base.count("MapInArrow") + 1, plan
+        for banned in ("Window", "levenshtein", "ArrowEvalPython", "BatchEvalPython"):
+            assert plan.count(banned) == base.count(banned), (banned, plan)
+        for line in plan.splitlines():
+            if "Window [" in line:
+                assert "], [], [" not in line, f"global window found: {line}"
 
 
 def test_prefix_expansion_no_global_window(built_index):
     """The prefix top-K on the scale path is never a single-partition
-    row_number window (r2 VERDICT #5): every window in the plan must
-    carry a partition spec (the prefix windows partition by token)."""
-    terms_df = built_index.terms.where(F.col("field") == "content")
-    plan = (
-        _candidates_plan(terms_df, [("zygo", True)], 0, "levenshtein", "df")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    window: it is a per-partition top-10 inside the one ``mapInArrow``
+    fold, so the plan adds no window at all over the terms relation."""
+    from typesense_spark.search.engine import _terms_agg
+
+    terms = _terms_agg(built_index, ("content",))
+    _assert_one_map_in_arrow(terms, [("zygo", True)], 0)
+    _assert_one_map_in_arrow(terms, [("improt", False), ("zygo", True), ("import", False)], 2)
+
+
+def test_spark_expander_two_phase_cost_window(built_index):
+    """A one-token fuzzy expansion caps candidates in two phases: each
+    partition's fold keeps at most 3 candidates per cost level (plus the
+    exact hit), and only those reach the final expansion on the driver,
+    which never sees the full survivor set. Both phases rank by the same
+    (cost, -df, term) order, so the result equals the whole dictionary's
+    expansion. Neither phase is a Spark window."""
+    from typesense_spark.search.engine import _terms_agg
+    from typesense_spark.search.expand import MAX_CANDIDATES, levenshtein
+
+    tok, num_typos, n_parts = "merge", 2, 4
+    terms = _terms_agg(built_index, ("content",))
+    _assert_one_map_in_arrow(terms, [(tok, False)], num_typos)
+
+    rows = terms.select("term", "df").collect()
+    near = [r["term"] for r in rows if levenshtein(tok, r["term"]) <= num_typos]
+    cap = 1 + MAX_CANDIDATES * num_typos
+    assert len(near) > n_parts * cap  # premise: the local cap must bite
+    split = terms.repartition(n_parts, F.col("term"))
+    local = (
+        _survivor_plan(split, [(tok, False)], num_typos, "levenshtein", "df")
+        .rdd.glom()
+        .map(len)
+        .collect()
     )
-    assert "Window [" in plan
-    # physical Window prints `Window [exprs], [partitionSpec], [orderSpec]`;
-    # an empty partition spec (the single-partition shape) prints `], [], [`
-    for line in plan.splitlines():
-        if "Window [" in line:
-            assert "], [], [" not in line, f"global window found: {line}"
+    assert len(local) == n_parts and max(local) <= cap, local
+    assert sum(local) < len(near)
+    td = TermDict([r["term"] for r in rows], [r["df"] for r in rows])
+    want = expand_query([(tok, False)], td, num_typos)
+    assert expand_tokens_batch(split, [(tok, False)], num_typos) == want
 
 
 def test_jaccard_plan_no_global_distinct(spark, built_index):
@@ -288,28 +381,14 @@ def test_jaccard_plan_no_global_distinct(spark, built_index):
 
 
 def test_batch_exact_expansion_skips_levenshtein(spark, built_index):
-    """Cost-0 tokens resolve via a plain term equi-join (r3): a
-    typo-free batch expansion must not evaluate levenshtein anywhere."""
+    """A typo-free batch expansion returns only exact hits at cost 0
+    (the plan itself is pinned by
+    test_prefix_expansion_no_global_window)."""
     from typesense_spark.search.engine import _terms_agg
-    from typesense_spark.search.expand import expand_tokens_batch
 
     terms = _terms_agg(built_index, ("content",))
-    # rebuild the exact branch the way expand_tokens_batch does and
-    # assert its physical join shape, then check the public API output
-    from pyspark.sql import functions as F
-
-    et = terms.sparkSession.createDataFrame([("import",), ("merge0",)], schema="tok string")
-    plan = (
-        terms.join(F.broadcast(et), F.col("term") == F.col("tok"))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan and "levenshtein" not in plan
-    # and the public API agrees with the per-token expander
     out = expand_tokens_batch(terms, [("import", False), ("merge0", False)], num_typos=0)
-    assert out[("import", False)] and out[("merge0", False)]
-    assert all(c == 0 for _, c in out[("import", False)])
+    assert out == {("import", False): [("import", 0)], ("merge0", False): [("merge0", 0)]}
 
 
 def test_wand_engagement_no_count_job(built_index, monkeypatch):
@@ -345,24 +424,6 @@ def test_wand_engagement_no_count_job(built_index, monkeypatch):
     )
     assert calls == [], "engagement decision ran a count job"
     assert "max_contrib" in blocks.columns  # unpruned blocks relation
-
-
-def test_spark_expander_two_phase_cost_window(built_index):
-    """r3 VERDICT #5: a one-token fuzzy expansion caps candidates with a
-    local (tok, cost, physical-partition) phase before the final
-    (tok, cost) window, so the ≤3-partition window never sees the full
-    survivor set. Both windows must carry a partition spec."""
-    terms_df = built_index.terms.where(F.col("field") == "content")
-    df = _candidates_plan(terms_df, [("improt", False)], 2, "levenshtein", "df")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "SPARK_PARTITION_ID()" in plan
-    windows = [line for line in plan.splitlines() if "Window [" in line]
-    for line in windows:
-        assert "], [], [" not in line, f"global window found: {line}"
-    # the tree prints top-down: the final cap (rn2) sits above the local
-    # per-partition phase (rn1) it reads from
-    caps = [w for w in windows if "AS rn1#" in w or "AS rn2#" in w]
-    assert ["AS rn2#" in w for w in caps] == [True, False], caps
 
 
 def test_batch_deepening_no_driver_actions(built_index, monkeypatch):

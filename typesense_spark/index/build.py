@@ -980,6 +980,9 @@ class Index:
     # collected term dictionaries (expand.TermDict) per sorted field set,
     # filled on first use by engine._get_term_df
     term_dicts: dict = dc_field(default_factory=dict, init=False, repr=False, compare=False)
+    # distinct-term counts per sorted field set, filled on first use by
+    # engine._n_terms (the expansion route's signal)
+    term_counts: dict = dc_field(default_factory=dict, init=False, repr=False, compare=False)
 
     def candidate_postings(self, terms: list[str], fields: list[str]) -> DataFrame:
         """Partition-pruned scan: term_bucket IN (...) AND term IN (...)."""
@@ -1017,6 +1020,11 @@ class Index:
         self.terms.write.mode("overwrite").parquet(os.path.join(out_dir, "terms"))
         self.doc_attrs.write.mode("overwrite").parquet(os.path.join(out_dir, "doc_attrs"))
         self.docs.write.mode("overwrite").parquet(os.path.join(out_dir, "docs"))
+        self.save_meta(out_dir)
+
+    def save_meta(self, out_dir: str) -> None:
+        """``stats.json``: what :meth:`load` needs besides the tables —
+        also written by the checkpointed build's dictionary stage."""
         with open(os.path.join(out_dir, "stats.json"), "w") as f:
             json.dump(
                 {
@@ -1029,19 +1037,26 @@ class Index:
 
     @classmethod
     def load(cls, spark: SparkSession, out_dir: str) -> "Index":
-        with open(os.path.join(out_dir, "stats.json")) as f:
-            meta = json.load(f)
+        meta = read_meta(out_dir)
         return cls(
             spark=spark,
             docs=spark.read.parquet(os.path.join(out_dir, "docs")),
             doc_attrs=spark.read.parquet(os.path.join(out_dir, "doc_attrs")),
             terms=spark.read.parquet(os.path.join(out_dir, "terms")),
             postings=spark.read.parquet(os.path.join(out_dir, "postings")),
-            stats={k: FieldStats(**v) for k, v in meta["stats"].items()},
+            stats=meta["stats"],
             num_buckets=meta["num_buckets"],
-            block_size=meta.get("block_size", 128),
+            block_size=meta["block_size"],
             out_dir=out_dir,
         )
+
+
+def read_meta(out_dir: str) -> dict:
+    """The record :meth:`Index.save_meta` wrote, stats as FieldStats."""
+    with open(os.path.join(out_dir, "stats.json")) as f:
+        meta = json.load(f)
+    meta["stats"] = {k: FieldStats(**v) for k, v in meta["stats"].items()}
+    return meta
 
 
 def _term_bucket_py(term: str, num_buckets: int) -> int:
@@ -1053,6 +1068,21 @@ def _term_bucket_py(term: str, num_buckets: int) -> int:
 
 def term_bucket_expr(term_col, num_buckets: int):
     return F.pmod(F.crc32(term_col.cast("binary")), F.lit(num_buckets)).cast("int")
+
+
+def touched_buckets(rows_df: DataFrame, fields: list[str], num_buckets: int) -> set[int]:
+    """Term buckets a (small) set of doc rows touches — tokenize only
+    them (the delete paths rebuild just those buckets' groups)."""
+    out: set[int] = set()
+    for fld in fields:
+        tf = tokenize_tf(rows_df, fld, False)
+        rows = (
+            tf.select(term_bucket_expr(F.col("term"), num_buckets).alias("b"))
+            .distinct()
+            .collect()
+        )
+        out |= {int(r["b"]) for r in rows}
+    return out
 
 
 def build_index(
@@ -1068,7 +1098,6 @@ def build_index(
     store_positions: bool = True,
     persist: bool = True,
     persist_light: bool = False,
-    bucket_group: tuple[int, int] | None = None,
     score_col: str | None = None,
 ) -> Index:
     """Build the inverted index over ``fields`` of ``docs``.
@@ -1152,13 +1181,6 @@ def build_index(
         # shared by the doc_attrs / terms / stats-probe consumers
         srows = srows.persist()
     tf_all = _tf(store_positions)  # pack pass
-    if bucket_group is not None:
-        # checkpoint-group slice, applied MAP-SIDE before the pack
-        # shuffle so total shuffle volume across groups stays 1x
-        n_groups, g = bucket_group
-        tf_all = tf_all.where(
-            F.pmod(term_bucket_expr(F.col("term"), num_buckets), F.lit(n_groups)) == g
-        )
 
     # per-doc dl rows pass through; the term dictionary is one narrow
     # agg over the mapper's partials (map-side combine on top)

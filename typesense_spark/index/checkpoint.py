@@ -34,7 +34,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from typesense_spark.index.build import Index, build_index
+from typesense_spark.index.build import Index, build_index, read_meta
 
 
 def _marker_path(out_dir: str, stage: str) -> str:
@@ -153,17 +153,7 @@ def checkpointed_build(
         )
         ix.terms.write.mode("overwrite").parquet(os.path.join(out_dir, "terms"))
         ix.doc_attrs.write.mode("overwrite").parquet(os.path.join(out_dir, "doc_attrs"))
-        with open(os.path.join(out_dir, "stats.json"), "w") as f:
-            json.dump(
-                {
-                    "num_buckets": ix.num_buckets,
-                    "stats": {
-                        k: {"n_docs": v.n_docs, "sum_dl": v.sum_dl}
-                        for k, v in ix.stats.items()
-                    },
-                },
-                f,
-            )
+        ix.save_meta(out_dir)
         _write_marker(
             out_dir,
             "dict",
@@ -180,11 +170,8 @@ def checkpointed_build(
     # later stages ALWAYS use the committed dictionary + stats from disk
     # (FROZEN): a resumed or partially-rebuilt index must score every
     # group with the same constants the committed groups used
-    from typesense_spark.index.build import FieldStats
-
-    with open(os.path.join(out_dir, "stats.json")) as f:
-        meta = json.load(f)
-    frozen_stats = {k: FieldStats(**v) for k, v in meta["stats"].items()}
+    meta = read_meta(out_dir)
+    frozen_stats = meta["stats"]
     num_buckets = meta["num_buckets"]
 
     # ---- stage 2..: postings, in independently-committed groups ----
@@ -306,18 +293,8 @@ def checkpointed_build(
 
 
 def load_checkpointed(spark: SparkSession, out_dir: str) -> Index:
-    from typesense_spark.index.build import FieldStats
-
-    with open(os.path.join(out_dir, "stats.json")) as f:
-        meta = json.load(f)
-    return Index(
-        spark=spark,
-        docs=spark.read.parquet(os.path.join(out_dir, "docs")),
-        doc_attrs=spark.read.parquet(os.path.join(out_dir, "doc_attrs")),
-        terms=spark.read.parquet(os.path.join(out_dir, "terms")),
-        postings=spark.read.parquet(os.path.join(out_dir, "postings")).drop("group"),
-        stats={k: FieldStats(**v) for k, v in meta["stats"].items()},
-        num_buckets=meta["num_buckets"],
-        block_size=meta.get("block_size", 128),
-        out_dir=out_dir,
-    )
+    """:meth:`Index.load` of the checkpoint layout, whose postings
+    directory is partitioned by commit group."""
+    ix = Index.load(spark, out_dir)
+    ix.postings = ix.postings.drop("group")
+    return ix

@@ -29,7 +29,7 @@ import shutil
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from typesense_spark.index.build import term_bucket_expr, tokenize_tf
+from typesense_spark.index.build import tokenize_tf, touched_buckets
 from typesense_spark.index.checkpoint import (
     _has_marker,
     _marker_path,
@@ -43,20 +43,6 @@ def _lineage(out_dir: str) -> tuple[int, dict, int]:
         lineage = json.load(f)["lineage"]
     build_kw = lineage["build_kw"]
     return lineage["n_groups"], build_kw, build_kw.get("num_buckets", 16)
-
-
-def _touched_buckets(rows_df, fields: list[str], num_buckets: int) -> set[int]:
-    """Term buckets a (small) set of doc rows touches — tokenize only them."""
-    out: set[int] = set()
-    for fld in fields:
-        tf = tokenize_tf(rows_df, fld, False)
-        rows = (
-            tf.select(term_bucket_expr(F.col("term"), num_buckets).alias("b"))
-            .distinct()
-            .collect()
-        )
-        out |= {int(r["b"]) for r in rows}
-    return out
 
 
 def _swap_dir(write_df, out_dir: str, name: str) -> None:
@@ -131,7 +117,7 @@ def delete_docs(
     docs = spark.read.parquet(os.path.join(out_dir, "docs"))
     ids = [int(d) for d in doc_ids]
     victims = docs.where(F.col("doc_id").isin(ids))
-    affected_buckets = _touched_buckets(victims, fields, num_buckets)
+    affected_buckets = touched_buckets(victims, fields, num_buckets)
 
     _swap_dir(docs.where(~F.col("doc_id").isin(ids)), out_dir, "docs")
     n_survivors = spark.read.parquet(os.path.join(out_dir, "docs")).count()
@@ -201,7 +187,7 @@ def upsert_docs(
     key = [F.col(c) for c in key_cols]
 
     matched_old = docs.join(new_rows.select(*key_cols), key_cols, "left_semi")
-    affected = _touched_buckets(matched_old, fields, num_buckets)
+    affected = touched_buckets(matched_old, fields, num_buckets)
 
     # id assignment: reuse matched doc_id; new keys rank after max id
     id_map = docs.select(*key_cols, "doc_id")
@@ -218,7 +204,7 @@ def upsert_docs(
     incoming = upd_part.unionByName(new_part)
     if "content" in incoming.columns:
         incoming = incoming.withColumn("content_sha", F.sha2(F.col("content"), 256))
-    affected |= _touched_buckets(incoming, fields, num_buckets)
+    affected |= touched_buckets(incoming, fields, num_buckets)
 
     # terms the frozen dictionary has never seen must still be findable:
     # append them with batch-local df/cf/max_tf BEFORE the group rebuild

@@ -304,6 +304,7 @@ def delete_docs_versioned(
         pack_pipeline,
         term_bucket_expr,
         tokenize_tf,
+        touched_buckets,
     )
 
     m = read_manifest(root)
@@ -324,15 +325,7 @@ def delete_docs_versioned(
     ids = [int(d) for d in doc_ids]
     victims = t["docs"].where(F.col("doc_id").isin(ids))
 
-    touched: set[int] = set()
-    for fld in fields:
-        tf = tokenize_tf(victims, fld, False)
-        rows = (
-            tf.select(term_bucket_expr(F.col("term"), num_buckets).alias("b"))
-            .distinct()
-            .collect()
-        )
-        touched |= {int(r["b"]) for r in rows}
+    touched = touched_buckets(victims, fields, num_buckets)
     groups = sorted({b % n_groups for b in touched})
 
     frozen = {k: FieldStats(**v) for k, v in meta["stats"].items()}

@@ -9,9 +9,11 @@ expansion, scoring and set logic with plain dicts/loops — no Spark, no
 SQL, no numpy in the scoring path (``math`` doubles are the same IEEE
 ops the pack UDF uses; exactness comes from the int64 quantization,
 scoring.py). :func:`expand_token` is the expansion spec: a linear scan
-of the whole dictionary, one DP per term, which both engine expanders
-(``expand.TermDict`` and ``expand.expand_tokens_batch``) are tested
-against; the engine never calls it.
+of the whole dictionary, one DP per term, which the engine's one
+expansion kernel (``expand.TermDict``) is tested against on both its
+routes (``expand.expand_query`` on the driver, the
+``expand.expand_tokens_batch`` fold on executors); the engine never
+calls it.
 """
 
 from __future__ import annotations
@@ -69,7 +71,7 @@ def expand_token(
         )[:MAX_CANDIDATES_PREFIX]
         for _, t in pref:
             # a term reachable both ways keeps the MIN cost (prefix = 0),
-            # like expand_tokens_batch's prefix merge
+            # like TermDict.expand
             out[t] = 0
     return sorted(out.items())
 

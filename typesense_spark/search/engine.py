@@ -46,9 +46,10 @@ MAX_HITS = 250  # reference: src/core_api.cpp:324-329
 PER_PAGE_MAX = 250  # reference: include/collection.h:414
 GROUP_LIMIT_MAX = 99  # reference: include/collection.h:416
 MAX_SORT_FIELDS = 3  # reference: src/collection.cpp:726-731
-# above this many distinct terms the driver-dict expansion path would
-# collect a dictionary that belongs on executors (SCALE.md: 5e8-5e9
-# terms at 100 TB) — _expand routes through expand_tokens_batch instead
+# above this many distinct terms the driver route would collect a
+# dictionary that belongs on executors (SCALE.md: 5e8-5e9 terms at
+# 100 TB) — _expand routes through expand_tokens_batch instead, which
+# folds the same TermDict kernel over the terms table on executors
 EXPAND_COLLECT_THRESHOLD = 2_000_000
 
 
@@ -282,21 +283,17 @@ def _terms_agg(index: Index, fields: tuple[str, ...]) -> DataFrame:
 
 
 def _n_terms(index: Index, fields: tuple[str, ...]) -> int:
-    """Dictionary size for the queried fields (cached per field set) —
-    the routing signal between driver-dict and Spark-join expansion."""
-    cache = getattr(index, "_n_terms_cache", None)
-    if cache is None:
-        cache = {}
-        index._n_terms_cache = cache
+    """Dictionary size for the queried fields (held per field set in
+    ``Index.term_counts``) — the routing signal between the driver and
+    scale expansion routes."""
     key = tuple(sorted(fields))
-    if key not in cache:
-        cache[key] = _terms_agg(index, fields).count()
-    return cache[key]
+    if key not in index.term_counts:
+        index.term_counts[key] = _terms_agg(index, fields).count()
+    return index.term_counts[key]
 
 
 def _use_spark_expand(index: Index, fields: tuple[str, ...]) -> bool:
-    threshold = getattr(index, "expand_collect_threshold", EXPAND_COLLECT_THRESHOLD)
-    return _n_terms(index, fields) > threshold
+    return _n_terms(index, fields) > EXPAND_COLLECT_THRESHOLD
 
 
 def _get_term_df(index: Index, fields: tuple[str, ...]) -> TermDict:
@@ -307,9 +304,9 @@ def _get_term_df(index: Index, fields: tuple[str, ...]) -> TermDict:
     benches; both candidate orderings expand over it.
 
     Only reachable below EXPAND_COLLECT_THRESHOLD; above it ``_expand``
-    routes expansion through ``expand.expand_tokens_batch`` (an
-    F.levenshtein join against the distributed terms table), so no
-    full-dictionary collect exists on the scale path.
+    routes expansion through ``expand.expand_tokens_batch`` (the same
+    kernel folded over the distributed terms table's Arrow batches), so
+    no full-dictionary collect exists on the scale path.
     """
     key = tuple(sorted(fields))
     if key not in index.term_dicts:
@@ -363,9 +360,10 @@ def _expand(
     drop-token attempts and erased vectors reuse earlier expansions.
     Below EXPAND_COLLECT_THRESHOLD the collected columnar dictionary
     expands every spec driver-side (``expand_query``: a bisect per
-    prefix, one vectorized DP per typo length bucket); above it one
-    Spark plan (``expand_tokens_batch``) expands them all without
-    collecting the dictionary."""
+    prefix, one vectorized DP per typo length bucket); above it
+    ``expand_tokens_batch`` runs the same kernel over the terms table's
+    Arrow batches in one ``mapInArrow`` and collects only the
+    candidates, never the dictionary."""
     missing = sorted(set(specs) - set(cand_map))
     if not missing:
         return cand_map
