@@ -1,5 +1,5 @@
 """The pack shuffle ships JVM-computed quantized BM25 contributions
-(build.pack_pipeline); this asserts the JVM expression is bit-identical
+(build.pack_postings); this asserts the JVM expression is bit-identical
 to the numpy form the oracle/codec path uses — over a structured sweep
 plus 50k random (tf, dl, df) triples. If an engine/libm ever diverged
 by one ULP at a .5 quantization boundary this test is the tripwire."""

@@ -489,7 +489,7 @@ def q_snapshot_travel(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="ts_snap_")
     bkw = dict(block_size=64, salt_threshold=200, n_salts=4)
     ix = build_index(spark, docs, fields=["text"], id_col="doc_id", num_buckets=8, **bkw)
-    snapshots.commit_index(root, ix, n_groups=2, build_kw=bkw)
+    snapshots.commit_index(root, ix, n_groups=2)
     snapshots.delete_docs_versioned(spark, root, list(range(10)), ["text"])
     parts = []
     for v in (1, 2):

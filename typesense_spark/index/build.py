@@ -37,7 +37,9 @@ import math
 import os
 import re
 import time
-from dataclasses import dataclass, field as dc_field
+from dataclasses import asdict, dataclass, field as dc_field, fields as dc_fields
+from functools import reduce
+
 import numpy as np
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -102,6 +104,50 @@ class BuildReport:
     @property
     def postings_per_sec(self) -> float:
         return self.n_postings / self.elapsed_sec if self.elapsed_sec else 0.0
+
+
+@dataclass(frozen=True)
+class BuildParams:
+    """The parameters an index was built with: the one record every
+    store writes (``stats.json``, the snapshot manifest's ``meta``) and
+    every repack, stream append and rebuild reads back, so a maintained
+    index keeps packing the way it was built."""
+
+    fields: tuple[str, ...]
+    num_buckets: int
+    block_size: int
+    salt_threshold: int
+    n_salts: int
+    store_positions: bool
+    score_col: str | None
+
+    def record(self) -> dict:
+        """JSON-ready form (also ``build_index``'s keyword arguments)."""
+        return asdict(self) | {"fields": list(self.fields)}
+
+    @classmethod
+    def from_record(cls, meta: dict, where: str) -> "BuildParams":
+        """The record inside a saved ``meta`` dict. A missing key fails,
+        naming it and ``where``: nothing is re-defaulted."""
+        names = [f.name for f in dc_fields(cls)]
+        for k in names:
+            if k not in meta:
+                raise ValueError(f"{where}: saved build record lacks {k!r}")
+        return cls(**{k: meta[k] for k in names} | {"fields": tuple(meta["fields"])})
+
+    def check(self, given: dict, what: str) -> None:
+        """Caller-passed build parameters are checks against the record:
+        the first one that disagrees raises, naming it (``fields``
+        compare as sets)."""
+        mine = self.record()
+        for k, v in given.items():
+            if k not in mine:
+                raise ValueError(f"{what}: {k!r} is not a build parameter")
+            want = mine[k]
+            if k == "fields":
+                v, want = sorted(v), sorted(want)
+            if v != want:
+                raise ValueError(f"{what}: {k} {v!r} != indexed {k} {want!r}")
 
 
 _KEY_SEP = "\x01"
@@ -641,6 +687,14 @@ def tokenize_tf(docs: DataFrame, fld: str, store_positions: bool) -> DataFrame:
     return docs.select("doc_id", fld).mapInArrow(gen, schema=TF_SCHEMA)
 
 
+def tokenize_fields(docs: DataFrame, fields, store_positions: bool) -> DataFrame:
+    """:func:`tokenize_tf` of every field in ``fields``, unioned in
+    field order."""
+    return reduce(
+        DataFrame.unionByName, [tokenize_tf(docs, fld, store_positions) for fld in fields]
+    )
+
+
 def _binary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
     """Arrow Binary/StringArray → (offsets[int32], values[uint8]) as
     numpy views over the Arrow buffers, corrected for the array's slice
@@ -769,24 +823,25 @@ def _pack_batch_arrow(batch, block_size: int, store_positions: bool, fld: str):
     )
 
 
-def pack_pipeline(
+def pack_postings(
     spark: SparkSession,
-    tf_all: DataFrame,
+    docs: DataFrame,
     terms: DataFrame,
     stats: "dict[str, FieldStats]",
-    fields: list[str],
-    num_buckets: int,
-    block_size: int,
-    salt_threshold: int,
-    n_salts: int,
-    store_positions: bool,
+    params: BuildParams,
+    group: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """tf rows + term dictionary → packed posting blocks.
+    """docs + term dictionary + corpus stats → packed posting blocks of
+    every field in ``params.fields``, packed as ``params`` says.
+
+    The one pack route: the build, every group repack against a frozen
+    dictionary (checkpoint groups, maintain, snapshot deletes) and the
+    stream appends. ``group=(g, n_groups)`` keeps only the terms of
+    commit group ``g`` (``term_bucket % n_groups == g``), filtered
+    map-side before the shuffle.
 
     ONE wide shuffle: hash by (term, salt), sort groups + doc order
-    within partitions, stream-pack (see _make_pack_fn). Factored out so
-    the checkpointed build can replay it per bucket group against the
-    on-disk dictionary without recomputing stats.
+    within partitions, stream-pack (see _make_pack_fn).
 
     Shuffle rows are SLIM (r2): the quantized BM25 contribution is
     computed JVM-side before the shuffle (bit-identical to the numpy
@@ -794,9 +849,15 @@ def pack_pipeline(
     the constant field string never cross the wire; each row is
     (term, salt, doc_id, tf, contrib, pos_bytes).
     """
+    tf_all = tokenize_fields(docs, params.fields, params.store_positions)
+    if group is not None:
+        g, n_groups = group
+        tf_all = tf_all.where(
+            F.pmod(term_bucket_expr(F.col("term"), params.num_buckets), F.lit(n_groups)) == g
+        )
     n_pack = int(spark.conf.get("spark.sql.shuffle.partitions"))
     packed_parts = []
-    for fld in fields:
+    for fld in params.fields:
         fs = stats[fld]
         tf_f = tf_all.where(F.col("field") == fld)
         # dl already on the row — only the per-term df joins in
@@ -812,8 +873,8 @@ def pack_pipeline(
         slim = enriched.select(
             "term",
             F.when(
-                F.col("df") > salt_threshold,
-                F.pmod(F.col("doc_id"), F.lit(n_salts)).cast("int"),
+                F.col("df") > params.salt_threshold,
+                F.pmod(F.col("doc_id"), F.lit(params.n_salts)).cast("int"),
             )
             .otherwise(F.lit(0))
             .alias("salt"),
@@ -834,18 +895,15 @@ def pack_pipeline(
             slim.repartition(n_pack, "term", "salt")
             .sortWithinPartitions("term", "salt", "doc_id")
             .mapInArrow(
-                _make_pack_fn(block_size, store_positions, fld),
+                _make_pack_fn(params.block_size, params.store_positions, fld),
                 schema=POSTINGS_SCHEMA,
             )
         )
         packed_parts.append(packed)
-    postings = packed_parts[0]
-    for p in packed_parts[1:]:
-        postings = postings.unionByName(p)
     # term_bucket rides as a COLUMN; files keep term-sorted row groups,
     # so parquet min/max stats prune scans on term and bucket filters
-    return postings.withColumn(
-        "term_bucket", term_bucket_expr(F.col("term"), num_buckets).cast("int")
+    return reduce(DataFrame.unionByName, packed_parts).withColumn(
+        "term_bucket", term_bucket_expr(F.col("term"), params.num_buckets).cast("int")
     )
 
 
@@ -971,18 +1029,30 @@ class Index:
     terms: DataFrame  # (field, term, df, cf, max_tf)
     postings: DataFrame  # POSTINGS_SCHEMA + term_bucket
     stats: dict[str, FieldStats]
-    num_buckets: int
+    params: BuildParams
     report: BuildReport | None = None
     out_dir: str | None = None
-    # block packing granularity, recorded so the query side can estimate
-    # block counts from df alone (WAND engagement heuristic — no count job)
-    block_size: int = 128
     # collected term dictionaries (expand.TermDict) per sorted field set,
     # filled on first use by engine._get_term_df
     term_dicts: dict = dc_field(default_factory=dict, init=False, repr=False, compare=False)
     # distinct-term counts per sorted field set, filled on first use by
     # engine._n_terms (the expansion route's signal)
     term_counts: dict = dc_field(default_factory=dict, init=False, repr=False, compare=False)
+    # the build's stats partials behind terms/doc_attrs (persisted with
+    # them), kept so a caller can release them
+    stats_partials: DataFrame | None = dc_field(
+        default=None, init=False, repr=False, compare=False
+    )
+
+    @property
+    def num_buckets(self) -> int:
+        return self.params.num_buckets
+
+    @property
+    def block_size(self) -> int:
+        """Lets the query side estimate block counts from df alone (WAND
+        engagement heuristic — no count job)."""
+        return self.params.block_size
 
     def candidate_postings(self, terms: list[str], fields: list[str]) -> DataFrame:
         """Partition-pruned scan: term_bucket IN (...) AND term IN (...)."""
@@ -1022,41 +1092,45 @@ class Index:
         self.docs.write.mode("overwrite").parquet(os.path.join(out_dir, "docs"))
         self.save_meta(out_dir)
 
+    def meta(self) -> dict:
+        """The build record beside the corpus stats: what a store keeps
+        besides the tables (``stats.json``, the snapshot manifest)."""
+        return self.params.record() | {
+            "stats": {k: {"n_docs": v.n_docs, "sum_dl": v.sum_dl} for k, v in self.stats.items()}
+        }
+
     def save_meta(self, out_dir: str) -> None:
         """``stats.json``: what :meth:`load` needs besides the tables —
         also written by the checkpointed build's dictionary stage."""
         with open(os.path.join(out_dir, "stats.json"), "w") as f:
-            json.dump(
-                {
-                    "num_buckets": self.num_buckets,
-                    "block_size": self.block_size,
-                    "stats": {k: {"n_docs": v.n_docs, "sum_dl": v.sum_dl} for k, v in self.stats.items()},
-                },
-                f,
-            )
+            json.dump(self.meta(), f)
 
     @classmethod
     def load(cls, spark: SparkSession, out_dir: str) -> "Index":
-        meta = read_meta(out_dir)
+        params, stats = read_meta(out_dir)
         return cls(
             spark=spark,
             docs=spark.read.parquet(os.path.join(out_dir, "docs")),
             doc_attrs=spark.read.parquet(os.path.join(out_dir, "doc_attrs")),
             terms=spark.read.parquet(os.path.join(out_dir, "terms")),
             postings=spark.read.parquet(os.path.join(out_dir, "postings")),
-            stats=meta["stats"],
-            num_buckets=meta["num_buckets"],
-            block_size=meta["block_size"],
+            stats=stats,
+            params=params,
             out_dir=out_dir,
         )
 
 
-def read_meta(out_dir: str) -> dict:
-    """The record :meth:`Index.save_meta` wrote, stats as FieldStats."""
-    with open(os.path.join(out_dir, "stats.json")) as f:
-        meta = json.load(f)
-    meta["stats"] = {k: FieldStats(**v) for k, v in meta["stats"].items()}
-    return meta
+def parse_meta(meta: dict, where: str) -> "tuple[BuildParams, dict[str, FieldStats]]":
+    """(build record, corpus stats) out of a saved :meth:`Index.meta`."""
+    stats = {k: FieldStats(**v) for k, v in meta["stats"].items()}
+    return BuildParams.from_record(meta, where), stats
+
+
+def read_meta(out_dir: str) -> "tuple[BuildParams, dict[str, FieldStats]]":
+    """What :meth:`Index.save_meta` wrote at ``out_dir``."""
+    path = os.path.join(out_dir, "stats.json")
+    with open(path) as f:
+        return parse_meta(json.load(f), path)
 
 
 def _term_bucket_py(term: str, num_buckets: int) -> int:
@@ -1073,16 +1147,38 @@ def term_bucket_expr(term_col, num_buckets: int):
 def touched_buckets(rows_df: DataFrame, fields: list[str], num_buckets: int) -> set[int]:
     """Term buckets a (small) set of doc rows touches — tokenize only
     them (the delete paths rebuild just those buckets' groups)."""
-    out: set[int] = set()
-    for fld in fields:
-        tf = tokenize_tf(rows_df, fld, False)
-        rows = (
-            tf.select(term_bucket_expr(F.col("term"), num_buckets).alias("b"))
-            .distinct()
-            .collect()
-        )
-        out |= {int(r["b"]) for r in rows}
-    return out
+    rows = (
+        tokenize_fields(rows_df, fields, False)
+        .select(term_bucket_expr(F.col("term"), num_buckets).alias("b"))
+        .distinct()
+        .collect()
+    )
+    return {int(r["b"]) for r in rows}
+
+
+def dictionary(
+    docs: DataFrame, fields, score_col: str | None
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The stats/dictionary pass over every field of ``docs`` →
+    (partials, doc_attrs, terms). It ships no tf rows: the mapper
+    pre-aggregates per batch (STATS_SCHEMA partials: per-doc dl rows +
+    per-term df/cf/max_tf[/max_score] partials), cutting the Python→JVM
+    transfer and aggregation input ~50x (guide §2.3 "aggregate before
+    you shuffle"; measured 26s → 4s of the 2-core 100k-doc build).
+    Per-doc dl rows pass through as doc_attrs; the term dictionary is
+    one narrow agg over the partials (map-side combine on top)."""
+    srows = reduce(
+        DataFrame.unionByName, [stats_rows(docs, fld, score_col) for fld in fields]
+    )
+    doc_attrs = srows.where(F.col("term").isNull()).select("field", "doc_id", "dl")
+    aggs = [F.sum("df").alias("df"), F.sum("cf").alias("cf"), F.max("max_tf").alias("max_tf")]
+    if score_col is not None:
+        # MAX_SCORE token ordering support (reference ART leaf
+        # max_score, include/art.h:49-55): the mapper already folded the
+        # per-doc score into per-term partial maxima
+        aggs.append(F.max("max_score").alias("max_score"))
+    terms = srows.where(F.col("doc_id").isNull()).groupBy("field", "term").agg(*aggs)
+    return srows, doc_attrs, terms
 
 
 def build_index(
@@ -1156,50 +1252,15 @@ def build_index(
         # docs feed both tokenize passes + query-time joins
         docs = docs.persist()
 
-    def _tf(with_positions: bool) -> DataFrame:
-        parts = [tokenize_tf(docs, fld, with_positions) for fld in fields]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
     # Two tokenize passes instead of caching the (huge) tf relation:
     # the map-side tokenizer is cheap and embarrassingly parallel,
     # while caching tens of millions of tf rows thrashed the heap and
     # made the build ANTI-scale with cores. Recompute > cache here.
-    # r6: the dictionary/stats pass no longer ships tf rows at all —
-    # the mapper pre-aggregates per batch (STATS_SCHEMA partials:
-    # per-doc dl rows + per-term df/cf/max_tf[/max_score] partials),
-    # cutting the Python→JVM transfer and aggregation input ~50x
-    # (guide §2.3 "aggregate before you shuffle"; measured 26s → 4s of
-    # the 2-core 100k-doc build).
-    srows = stats_rows(docs, fields[0], score_col)
-    for fld in fields[1:]:
-        srows = srows.unionByName(stats_rows(docs, fld, score_col))
+    srows, doc_attrs, terms = dictionary(docs, fields, score_col)
     if persist or persist_light:
-        # small relation (one row per doc + per-batch term partials),
+        # srows is small (one row per doc + per-batch term partials),
         # shared by the doc_attrs / terms / stats-probe consumers
-        srows = srows.persist()
-    tf_all = _tf(store_positions)  # pack pass
-
-    # per-doc dl rows pass through; the term dictionary is one narrow
-    # agg over the mapper's partials (map-side combine on top)
-    doc_attrs = srows.where(F.col("term").isNull()).select("field", "doc_id", "dl")
-    term_part = srows.where(F.col("doc_id").isNull())
-    aggs = [
-        F.sum("df").alias("df"),
-        F.sum("cf").alias("cf"),
-        F.max("max_tf").alias("max_tf"),
-    ]
-    if score_col is not None:
-        # MAX_SCORE token ordering support (reference ART leaf
-        # max_score, include/art.h:49-55): the mapper already folded the
-        # per-doc score into per-term partial maxima
-        aggs.append(F.max("max_score").alias("max_score"))
-    terms = term_part.groupBy("field", "term").agg(*aggs)
-    if persist or persist_light:
-        doc_attrs = doc_attrs.persist()
-        terms = terms.persist()
+        srows, doc_attrs, terms = srows.persist(), doc_attrs.persist(), terms.persist()
 
     # corpus stats (exact longs → avgdl division pinned in Python,
     # mirrored exactly by the DuckDB oracle). When the dictionary
@@ -1235,18 +1296,16 @@ def build_index(
             report.n_terms += int(r["n"])
     report.stages["tokenize_stats_sec"] = round(time.time() - t_stats, 3)
 
-    postings = pack_pipeline(
-        spark,
-        tf_all,
-        terms,
-        stats,
-        fields,
+    params = BuildParams(
+        fields=tuple(fields),
         num_buckets=num_buckets,
         block_size=block_size,
         salt_threshold=salt_threshold,
         n_salts=n_salts,
         store_positions=store_positions,
+        score_col=score_col,
     )
+    postings = pack_postings(spark, docs, terms, stats, params)  # pack pass
 
     report.n_docs = max((s.n_docs for s in stats.values()), default=0)
     if persist:
@@ -1267,9 +1326,8 @@ def build_index(
         terms=terms,
         postings=postings,
         stats=stats,
-        num_buckets=num_buckets,
+        params=params,
         report=report,
-        block_size=block_size,
     )
-    ix._tf_light = srows  # handle for callers that unpersist mid-job
+    ix.stats_partials = srows
     return ix

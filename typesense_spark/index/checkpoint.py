@@ -23,6 +23,13 @@ Scale note: groups are slices of the term-bucket space
 (``term_bucket % n_groups``), so each group's write is a
 partition-pruned subset of the (persisted) packed postings — a crashed
 1000-executor job resumes by paying only for the missing groups.
+
+Build parameters: the dictionary stage saves the Index's one build
+record (:class:`~typesense_spark.index.build.BuildParams`) in
+``stats.json``; every group stage packs with the record read back from
+disk (``build.pack_postings``), never with defaults of its own. The
+lineage's ``build_kw`` (the kwargs the caller passed) only decides
+whether a marker may be resumed.
 """
 
 from __future__ import annotations
@@ -34,7 +41,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from typesense_spark.index.build import Index, build_index, read_meta
+from typesense_spark.index.build import Index, build_index, pack_postings, read_meta
 
 
 def _marker_path(out_dir: str, stage: str) -> str:
@@ -164,50 +171,25 @@ def checkpointed_build(
                 "lineage": lineage,
             },
         )
-        for h in (ix.terms, ix.doc_attrs, ix._tf_light, ix.docs):
+        for h in (ix.terms, ix.doc_attrs, ix.stats_partials, ix.docs):
             h.unpersist()
 
     # later stages ALWAYS use the committed dictionary + stats from disk
     # (FROZEN): a resumed or partially-rebuilt index must score every
     # group with the same constants the committed groups used
-    meta = read_meta(out_dir)
-    frozen_stats = meta["stats"]
-    num_buckets = meta["num_buckets"]
+    params, frozen_stats = read_meta(out_dir)
 
     # ---- stage 2..: postings, in independently-committed groups ----
     # each group re-runs only: map-side tokenize (cheap) filtered to its
     # bucket slice BEFORE the shuffle + its slice of the pack shuffle,
     # joined against the ON-DISK dictionary — total shuffle volume
     # across all groups stays 1x, and every group commit is independent
-    from typesense_spark.index.build import pack_pipeline, tokenize_tf, term_bucket_expr
-
     terms_disk = spark.read.parquet(os.path.join(out_dir, "terms"))
 
     def _build_group(g: int) -> None:
         stage = f"postings_group_{g}"
         tg = time.time()
-        tf_parts = [
-            tokenize_tf(docs, fld, build_kw.get("store_positions", True))
-            for fld in fields
-        ]
-        tf_g = tf_parts[0]
-        for p in tf_parts[1:]:
-            tf_g = tf_g.unionByName(p)
-        tf_g = tf_g.where(
-            F.pmod(term_bucket_expr(F.col("term"), num_buckets), F.lit(n_groups)) == g
-        )
-        part = pack_pipeline(
-            spark,
-            tf_g,
-            terms_disk,
-            frozen_stats,
-            fields,
-            num_buckets=num_buckets,
-            block_size=build_kw.get("block_size", 128),
-            salt_threshold=build_kw.get("salt_threshold", 100_000),
-            n_salts=build_kw.get("n_salts", 8),
-            store_positions=build_kw.get("store_positions", True),
-        )
+        part = pack_postings(spark, docs, terms_disk, frozen_stats, params, (g, n_groups))
         from pyspark.sql import Observation
 
         gobs = Observation()
@@ -265,11 +247,7 @@ def checkpointed_build(
         # concurrent groups keeps executors busy without oversubscribing
         # tiny clusters (4 concurrent groups on local[2] thrash)
         dp = spark.sparkContext.defaultParallelism
-        workers = min(
-            int(os.environ.get("SPARK_GRAFT_GROUP_PARALLELISM", "0"))
-            or max(1, min(4, dp // 2)),
-            len(pending),
-        )
+        workers = min(max(1, min(4, dp // 2)), len(pending))
         with ThreadPoolExecutor(max_workers=workers) as exe:
             # list() re-raises the first group failure, like the loop
             list(exe.map(_build_group, pending))

@@ -12,6 +12,12 @@ scrubbing its postings in place (``/root/reference/src/index.cpp:
 - updates = delete + streaming append (or delete + group rebuild with
   the new rows in the docs table).
 
+Every op packs with the index's one build record (``stats.json``, read
+by :func:`~typesense_spark.index.build.read_meta`); a caller's
+``fields`` is a check against it. ``doc_attrs`` follows the docs table
+by the rule the snapshot store uses: drop the rows of removed or
+replaced docs, append the incoming docs' lengths.
+
 Pinned semantics (same as streaming appends): corpus statistics
 (N, avgdl, df) stay FROZEN at base-build values — exact BM25 under
 deletion would require rescoring every posting as df drifts, which is
@@ -29,20 +35,16 @@ import shutil
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from typesense_spark.index.build import tokenize_tf, touched_buckets
-from typesense_spark.index.checkpoint import (
-    _has_marker,
-    _marker_path,
-    checkpointed_build,
-    load_checkpointed,
-)
+from typesense_spark.index.build import BuildParams, dictionary, read_meta, touched_buckets
+from typesense_spark.index.checkpoint import _has_marker, _marker_path, checkpointed_build
 
 
-def _lineage(out_dir: str) -> tuple[int, dict, int]:
-    with open(os.path.join(out_dir, "manifest.json")) as f:
-        lineage = json.load(f)["lineage"]
-    build_kw = lineage["build_kw"]
-    return lineage["n_groups"], build_kw, build_kw.get("num_buckets", 16)
+def _record(out_dir: str, fields: list[str] | None, what: str) -> BuildParams:
+    """The index's build record; a caller's ``fields`` must match it."""
+    params, _ = read_meta(out_dir)
+    if fields is not None:
+        params.check({"fields": fields}, what)
+    return params
 
 
 def _swap_dir(write_df, out_dir: str, name: str) -> None:
@@ -58,31 +60,28 @@ def _swap_dir(write_df, out_dir: str, name: str) -> None:
     write_df.sparkSession.catalog.refreshByPath(tmp)
 
 
-def _refresh_doc_attrs(spark: SparkSession, out_dir: str, fields: list[str]) -> None:
-    """doc_attrs follows the docs table; terms/stats stay FROZEN."""
-    new_docs = spark.read.parquet(os.path.join(out_dir, "docs"))
-    tf_parts = [tokenize_tf(new_docs, fld, False) for fld in fields]
-    tf_all = tf_parts[0]
-    for p in tf_parts[1:]:
-        tf_all = tf_all.unionByName(p)
-    _swap_dir(
-        tf_all.groupBy("field", "doc_id").agg(F.max("dl").alias("dl")),
-        out_dir,
-        "doc_attrs",
-    )
+def _swap_doc_attrs(spark: SparkSession, out_dir: str, removed, added=None) -> None:
+    """doc_attrs follows the docs table (terms/stats stay FROZEN): drop
+    the rows of the ``removed`` doc ids (a ``doc_id`` DataFrame), then
+    append ``added`` (field, doc_id, dl) rows."""
+    attrs = spark.read.parquet(os.path.join(out_dir, "doc_attrs"))
+    attrs = attrs.join(removed, "doc_id", "left_anti")
+    _swap_dir(attrs if added is None else attrs.unionByName(added), out_dir, "doc_attrs")
 
 
 def _rebuild_groups(
     spark: SparkSession,
     out_dir: str,
     affected_buckets: set[int],
-    fields: list[str],
-    n_groups: int,
-    build_kw: dict,
 ) -> list[int]:
     """Invalidate the markers/data of affected groups and resume the
     checkpointed build — only those groups recompute, against the
-    frozen on-disk dictionary."""
+    frozen on-disk dictionary and the saved build record. The lineage's
+    ``build_kw`` is passed back only so the resume check recognises the
+    committed stages."""
+    with open(os.path.join(out_dir, "manifest.json")) as f:
+        lineage = json.load(f)["lineage"]
+    n_groups = lineage["n_groups"]
     affected_groups = sorted({b % n_groups for b in affected_buckets})
     for g in affected_groups:
         stage = f"postings_group_{g}"
@@ -96,11 +95,11 @@ def _rebuild_groups(
         spark,
         docs,
         out_dir,
-        fields=fields,
+        fields=lineage["fields"],
         id_col="doc_id",
         n_groups=n_groups,
         resume=True,
-        **build_kw,
+        **lineage["build_kw"],
     )
     return affected_groups
 
@@ -109,20 +108,21 @@ def delete_docs(
     spark: SparkSession,
     out_dir: str,
     doc_ids: list[int],
-    fields: list[str],
+    fields: list[str] | None = None,
 ) -> dict:
     """Delete ``doc_ids`` from the index at ``out_dir``. Returns a
     summary {deleted, affected_buckets, rebuilt_groups}."""
-    n_groups, build_kw, num_buckets = _lineage(out_dir)
+    params = _record(out_dir, fields, "delete_docs")
+    fields = list(params.fields)
     docs = spark.read.parquet(os.path.join(out_dir, "docs"))
     ids = [int(d) for d in doc_ids]
     victims = docs.where(F.col("doc_id").isin(ids))
-    affected_buckets = touched_buckets(victims, fields, num_buckets)
+    affected_buckets = touched_buckets(victims, fields, params.num_buckets)
 
+    _swap_doc_attrs(spark, out_dir, victims.select("doc_id"))  # before the docs swap
     _swap_dir(docs.where(~F.col("doc_id").isin(ids)), out_dir, "docs")
     n_survivors = spark.read.parquet(os.path.join(out_dir, "docs")).count()
-    _refresh_doc_attrs(spark, out_dir, fields)
-    rebuilt = _rebuild_groups(spark, out_dir, affected_buckets, fields, n_groups, build_kw)
+    rebuilt = _rebuild_groups(spark, out_dir, affected_buckets)
     return {
         "deleted": len(ids),
         "survivors": n_survivors,
@@ -135,7 +135,7 @@ def delete_docs_by_filter(
     spark: SparkSession,
     out_dir: str,
     filter_by: str,
-    fields: list[str],
+    fields: list[str] | None = None,
     max_victims: int | None = None,
 ) -> dict:
     """S7 delete by ``filter_by`` DSL (reference ``del_remove_documents``
@@ -173,7 +173,7 @@ def upsert_docs(
     out_dir: str,
     new_rows,
     key_cols: list[str],
-    fields: list[str],
+    fields: list[str] | None = None,
 ) -> dict:
     """Upsert by natural key (S8): rows matching an existing key REPLACE
     that doc (doc_id stable); unmatched rows get fresh ids after the
@@ -182,7 +182,8 @@ def upsert_docs(
     as in :func:`delete_docs` (the reference's analogue diffs old vs
     new and reindexes changed fields, src/collection.cpp:219-238).
     """
-    n_groups, build_kw, num_buckets = _lineage(out_dir)
+    params = _record(out_dir, fields, "upsert_docs")
+    fields, num_buckets = list(params.fields), params.num_buckets
     docs = spark.read.parquet(os.path.join(out_dir, "docs"))
     key = [F.col(c) for c in key_cols]
 
@@ -207,53 +208,25 @@ def upsert_docs(
     affected |= touched_buckets(incoming, fields, num_buckets)
 
     # terms the frozen dictionary has never seen must still be findable:
-    # append them with batch-local df/cf/max_tf BEFORE the group rebuild
-    # so packing and query expansion agree on df. Computed BEFORE the
-    # docs swap — `incoming` still references the pre-swap docs files.
+    # append them with batch-local df/cf/max_tf[/max_score] BEFORE the
+    # group rebuild so packing and query expansion agree on df. They and
+    # the incoming docs' doc_attrs rows come from the build's dictionary
+    # pass, run BEFORE the docs swap (`incoming` still references the
+    # pre-swap docs files); like the build, it needs the record's
+    # score_col on every new row.
     terms_path = os.path.join(out_dir, "terms")
-    existing_terms = spark.read.parquet(terms_path)
-    tf_parts = [tokenize_tf(incoming, fld, False) for fld in fields]
-    tf_inc = tf_parts[0]
-    for p in tf_parts[1:]:
-        tf_inc = tf_inc.unionByName(p)
-    new_terms = (
-        tf_inc.groupBy("field", "term")
-        .agg(
-            F.count("*").alias("df"),
-            F.sum("tf").alias("cf"),
-            F.max("tf").alias("max_tf"),
-        )
-        .join(existing_terms.select("field", "term"), ["field", "term"], "left_anti")
+    _, attrs_inc, terms_inc = dictionary(incoming, fields, params.score_col)
+    new_terms = terms_inc.join(
+        spark.read.parquet(terms_path).select("field", "term"), ["field", "term"], "left_anti"
     )
-    if "max_score" in existing_terms.columns:
-        # keep the dictionary schema intact (appending files without
-        # max_score silently forks the parquet schema and breaks
-        # rank_tokens_by='max_score'); compute it batch-locally when the
-        # build's score_col is known, else 0 (ranks last)
-        sc = build_kw.get("score_col")
-        if sc and sc in incoming.columns:
-            msc = (
-                tf_inc.join(
-                    incoming.select("doc_id", F.col(sc).cast("long").alias("_sc")),
-                    "doc_id",
-                )
-                .groupBy("field", "term")
-                .agg(F.max("_sc").alias("max_score"))
-            )
-            new_terms = new_terms.join(msc, ["field", "term"], "left").withColumn(
-                "max_score", F.coalesce("max_score", F.lit(0))
-            )
-        else:
-            new_terms = new_terms.withColumn("max_score", F.lit(0).cast("long"))
-    n_new_terms = new_terms.count()
-    if n_new_terms:
+    if new_terms.count():
         new_terms.write.mode("append").parquet(terms_path)
         spark.catalog.refreshByPath(terms_path)
 
+    _swap_doc_attrs(spark, out_dir, incoming.select("doc_id"), attrs_inc)
     keep = docs.join(new_rows.select(*key_cols), key_cols, "left_anti")
     _swap_dir(keep.unionByName(incoming, allowMissingColumns=True), out_dir, "docs")
-    _refresh_doc_attrs(spark, out_dir, fields)
-    rebuilt = _rebuild_groups(spark, out_dir, affected, fields, n_groups, build_kw)
+    rebuilt = _rebuild_groups(spark, out_dir, affected)
     return {
         "upserted": new_rows.count(),
         "affected_buckets": sorted(affected),

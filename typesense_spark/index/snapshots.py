@@ -26,6 +26,11 @@ minimally — no external library in this container):
 Scale: manifests hold one entry per table (dozens), not per file —
 listing and planning stay O(tables) on the driver; the data itself is
 parquet read by executors as usual.
+
+An index snapshot's ``meta`` is :meth:`Index.meta` — the Index's one
+build record beside its corpus stats — plus ``n_groups``. Loads, deletes,
+stream appends and compaction read their parameters from it; a
+parameter a caller passes is a check against it.
 """
 
 from __future__ import annotations
@@ -208,12 +213,14 @@ def commit_index(
 ) -> int:
     """Snapshot a built Index: docs/terms/doc_attrs plus postings split
     into ``n_groups`` group tables (term_bucket % n_groups) so later
-    incremental commits can inherit untouched groups. ``build_kw``
-    (block_size / salt_threshold / n_salts / store_positions) is
-    recorded in the manifest so incremental commits repack affected
-    groups with the SAME parameters as the original build."""
+    incremental commits can inherit untouched groups. The manifest's
+    ``meta`` carries the Index's build record, so incremental commits
+    repack affected groups with the SAME parameters as the original
+    build. ``build_kw`` is a check: a value that disagrees with the
+    record raises ValueError naming it."""
     from pyspark.sql import functions as F
 
+    ix.params.check(build_kw or {}, "commit_index build_kw")
     tables: dict[str, DataFrame] = {
         "docs": ix.docs,
         "terms": ix.terms,
@@ -223,22 +230,7 @@ def commit_index(
         tables[f"{POSTINGS_PREFIX}{g}"] = ix.postings.where(
             F.pmod(F.col("term_bucket"), F.lit(n_groups)) == g
         )
-    meta = {
-        "num_buckets": ix.num_buckets,
-        "n_groups": n_groups,
-        # the indexed fields, recorded so maintenance commits rebuild
-        # postings for the SAME field set the index was built with
-        # (callers can't silently drop a field's postings)
-        "fields": sorted(ix.stats.keys()),
-        "build_kw": {
-            "block_size": 128,
-            "salt_threshold": 100_000,
-            "n_salts": 8,
-            "store_positions": True,
-            **(build_kw or {}),
-        },
-        "stats": {k: {"n_docs": v.n_docs, "sum_dl": v.sum_dl} for k, v in ix.stats.items()},
-    }
+    meta = ix.meta() | {"n_groups": n_groups}
     return commit(root, tables, op, meta, drop_prefixes=drop_prefixes)
 
 
@@ -252,9 +244,10 @@ def load_index(spark: SparkSession, root: str, version: int | None = None):
     one coherent index."""
     from functools import reduce
 
-    from typesense_spark.index.build import FieldStats, Index
+    from typesense_spark.index.build import Index, parse_meta
 
     m = read_manifest(root, version)
+    params, stats = parse_meta(m["meta"], _manifest_path(root, m["version"]))
     t = load_tables(spark, root, version)
 
     def _union(base_name: str) -> DataFrame:
@@ -265,16 +258,14 @@ def load_index(spark: SparkSession, root: str, version: int | None = None):
         ]
         return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
-    meta = m["meta"]
     return Index(
         spark=spark,
         docs=_union("docs"),
         doc_attrs=_union("doc_attrs"),
         terms=t["terms"],
         postings=_union("postings"),
-        stats={k: FieldStats(**v) for k, v in meta["stats"].items()},
-        num_buckets=meta["num_buckets"],
-        block_size=meta.get("build_kw", {}).get("block_size", 128),
+        stats=stats,
+        params=params,
         out_dir=root,
     )
 
@@ -288,9 +279,10 @@ def delete_docs_versioned(
     queryable (time travel), unlike the in-place ``maintain.delete_docs``.
     Frozen-stats semantics match maintain (terms/stats unchanged).
 
-    The field set comes from the manifest (``commit_index`` records it),
-    so a caller can't silently drop a field's postings from the rebuilt
-    groups; a caller-supplied ``fields`` is validated against it.
+    Every repack reads the manifest's build record (fields, packing
+    parameters), so a caller can't silently drop a field's postings from
+    the rebuilt groups; a caller-supplied ``fields`` is a check against
+    it.
 
     Stream appendices (``docs/stream=*`` … written by
     ``snapshotted_index_stream``) are first-class: every docs/doc_attrs
@@ -299,56 +291,20 @@ def delete_docs_versioned(
     a victim — untouched stream batches inherit unchanged."""
     from pyspark.sql import functions as F
 
-    from typesense_spark.index.build import (
-        FieldStats,
-        pack_pipeline,
-        term_bucket_expr,
-        tokenize_tf,
-        touched_buckets,
-    )
+    from typesense_spark.index.build import pack_postings, parse_meta, touched_buckets
 
     m = read_manifest(root)
     meta = m["meta"]
     n_groups = meta["n_groups"]
-    num_buckets = meta["num_buckets"]
-    manifest_fields = meta.get("fields")
-    if manifest_fields is None:
-        if fields is None:
-            raise ValueError("manifest records no fields; pass fields explicitly")
-        manifest_fields = list(fields)
-    elif fields is not None and sorted(fields) != sorted(manifest_fields):
-        raise ValueError(
-            f"fields {sorted(fields)} != indexed fields {sorted(manifest_fields)}"
-        )
-    fields = list(manifest_fields)
+    params, frozen = parse_meta(meta, _manifest_path(root, m["version"]))
+    if fields is not None:
+        params.check({"fields": fields}, "delete_docs_versioned")
     t = load_tables(spark, root)
     ids = [int(d) for d in doc_ids]
     victims = t["docs"].where(F.col("doc_id").isin(ids))
 
-    touched = touched_buckets(victims, fields, num_buckets)
+    touched = touched_buckets(victims, params.fields, params.num_buckets)
     groups = sorted({b % n_groups for b in touched})
-
-    frozen = {k: FieldStats(**v) for k, v in meta["stats"].items()}
-    bk = meta["build_kw"]
-
-    def _repack(docs_df: DataFrame, group: int | None) -> DataFrame:
-        """Survivor docs → packed postings against the FROZEN dictionary
-        (optionally restricted to one commit group's buckets)."""
-        tf_parts = [tokenize_tf(docs_df, fld, True) for fld in fields]
-        tf_g = tf_parts[0]
-        for p in tf_parts[1:]:
-            tf_g = tf_g.unionByName(p)
-        if group is not None:
-            tf_g = tf_g.where(
-                F.pmod(term_bucket_expr(F.col("term"), num_buckets), F.lit(n_groups))
-                == group
-            )
-        return pack_pipeline(
-            spark, tf_g, t["terms"], frozen, fields,
-            num_buckets=num_buckets, block_size=bk["block_size"],
-            salt_threshold=bk["salt_threshold"], n_salts=bk["n_salts"],
-            store_positions=bk["store_positions"],
-        )
 
     new_tables: dict[str, DataFrame] = {
         "docs": t["docs"].where(~F.col("doc_id").isin(ids)),
@@ -359,7 +315,9 @@ def delete_docs_versioned(
     # from the surviving BASE docs (stream docs live in their own tables)
     base_survivors = new_tables["docs"]
     for g in groups:
-        new_tables[f"{POSTINGS_PREFIX}{g}"] = _repack(base_survivors, g)
+        new_tables[f"{POSTINGS_PREFIX}{g}"] = pack_postings(
+            spark, base_survivors, t["terms"], frozen, params, (g, n_groups)
+        )
 
     # stream appendices (ADVICE r3: inherited stream tables previously
     # kept deleted docs searchable): a batch containing a victim gets
@@ -380,7 +338,9 @@ def delete_docs_versioned(
                 f"doc_attrs/stream={sid}"
             ].where(~F.col("doc_id").isin(ids))
         if f"postings/stream={sid}" in t:
-            new_tables[f"postings/stream={sid}"] = _repack(surv, None)
+            new_tables[f"postings/stream={sid}"] = pack_postings(
+                spark, surv, t["terms"], frozen, params
+            )
         rebuilt_streams.append(sid)
 
     v = commit(root, new_tables, op=f"delete {len(ids)} docs", meta=meta)

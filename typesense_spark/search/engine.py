@@ -219,8 +219,21 @@ class SearchResult:
 # attempts a best-effort unpersist (ADVICE r4 — the other session may
 # still be LIVE), with failures swallowed so a stopped/replaced session
 # (test suites, long-lived processes) can't make a later search raise.
+# Within a session the registry holds one handle per plan: Spark caches
+# by plan, so a repeated query's handle shares its predecessor's cache
+# entry, and unpersisting that predecessor would drop the current one.
 _SCORE_CACHE_KEEP = 8
 _score_cache: dict[int, list[DataFrame]] = {}
+# semanticHash of each handle, in _score_cache's order (kept apart so the
+# registry stays a list of handles for the probes that release them)
+_score_plans: dict[int, list[int]] = {}
+
+
+def _release(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # session died under the handle — nothing to release
 
 
 def _persist_scored(df: DataFrame) -> DataFrame:
@@ -232,19 +245,23 @@ def _persist_scored(df: DataFrame) -> DataFrame:
         # leak each other's persisted score relations. Try to unpersist
         # each evicted handle; a stopped session's JVM call just fails
         # into the except (the old behavior).
+        _score_plans.pop(k, None)
         for old in _score_cache.pop(k):
-            try:
-                old.unpersist()
-            except Exception:
-                pass  # session died under the handle — nothing to release
+            _release(old)
     cache = _score_cache.setdefault(key, [])
+    plans = _score_plans.setdefault(key, [])
+    plan = df.semanticHash()
+    for i, old in enumerate(cache):
+        if plans[i] == plan and old.sameSemantics(df):
+            # a repeat: its handle replaces the older one, whose cache
+            # entry is now this search's — so it is dropped, not released
+            del cache[i], plans[i]
+            break
     cache.append(df)
+    plans.append(plan)
     while len(cache) > _SCORE_CACHE_KEEP:
-        old = cache.pop(0)
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # session died under the handle — nothing to release
+        plans.pop(0)
+        _release(cache.pop(0))
     return df
 
 

@@ -14,14 +14,30 @@ with the corpus statistics (N, avgdl, df) FROZEN at base-build time —
 exact BM25 would require rescoring old postings as df drifts. This is
 the standard near-real-time search design (segment-style appends +
 periodic full rebuild); the periodic rebuild is `checkpointed_build`.
+
+Appends and compaction take their parameters from the base index's one
+build record (``Index.params``): a batch packs with the base's
+``block_size`` and ``store_positions`` (salting off — micro-batches are
+small), and compaction rebuilds with the whole record. A ``block_size``
+a caller passes is a check against the record.
 """
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from typesense_spark.index.build import Index
+from typesense_spark.index.build import BuildParams, Index, dictionary, pack_postings
+
+
+def _append_params(params: BuildParams, content_field: str, block_size, what: str):
+    """The base record, as a stream batch packs with it: one field, no
+    salting. A caller's ``block_size`` must match the base's."""
+    if block_size is not None:
+        params.check({"block_size": block_size}, what)
+    return replace(params, fields=(content_field,), salt_threshold=2**62, n_salts=1)
 
 
 def incremental_index_stream(
@@ -30,37 +46,25 @@ def incremental_index_stream(
     content_field: str,
     out_postings_dir: str,
     checkpoint_dir: str,
-    block_size: int = 128,
+    block_size: int | None = None,
 ):
     """readStream of new docs → appended posting blocks via foreachBatch.
 
     ``new_docs_stream`` must carry ``doc_id`` (allocated upstream, e.g.
-    max existing id + stream offset) and the content field. Returns the
-    StreamingQuery; caller awaits/processes it.
+    max existing id + stream offset) and the content field. Batches pack
+    with ``index``'s build record; ``block_size``, if given, must match
+    it (ValueError otherwise). Returns the StreamingQuery; caller
+    awaits/processes it.
     """
-    from typesense_spark.index.build import pack_pipeline, tokenize_tf
-
     spark = index.spark
+    params = _append_params(index.params, content_field, block_size, "incremental_index_stream")
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        tf = tokenize_tf(batch_df, content_field, True)
         # FROZEN base stats: df from the base dictionary (new terms get
-        # df=1 via pack_pipeline's left join), N/avgdl from the base
-        # build; salting off (micro-batches are small)
-        packed = pack_pipeline(
-            spark,
-            tf,
-            index.terms,
-            index.stats,
-            [content_field],
-            num_buckets=index.num_buckets,
-            block_size=block_size,
-            salt_threshold=2**62,
-            n_salts=1,
-            store_positions=True,
-        )
+        # df=1 via pack_postings' left join), N/avgdl from the base build
+        packed = pack_postings(spark, batch_df, index.terms, index.stats, params)
         packed.write.mode("append").partitionBy("term_bucket").parquet(
             out_postings_dir
         )
@@ -200,32 +204,13 @@ def compact_snapshots(
     s = snapshot_staleness(root)
     if not force and s["appended_fraction"] < threshold:
         return {**s, "compacted": False}
-    m = snapshots.read_manifest(root)
-    meta = m["meta"]
-    fields = meta.get("fields")
-    if not fields:
-        # legacy manifest without recorded fields: fail loudly like
-        # delete_docs_versioned does, not with build_index's obscure
-        # empty-fields IndexError (r4 ADVICE)
-        raise ValueError("manifest records no fields; cannot compact")
-    bk = dict(meta["build_kw"])
-    store_pos = bk.pop("store_positions", True)
     ix_old = snapshots.load_index(spark, root)
-    ix_new = build_index(
-        spark,
-        ix_old.docs,
-        fields=list(fields),
-        id_col="doc_id",
-        num_buckets=meta["num_buckets"],
-        store_positions=store_pos,
-        **bk,
-    )
+    ix_new = build_index(spark, ix_old.docs, id_col="doc_id", **ix_old.params.record())
     v = snapshots.commit_index(
         root,
         ix_new,
         op=f"compaction (appended_fraction={s['appended_fraction']})",
-        n_groups=meta["n_groups"],
-        build_kw={**bk, "store_positions": store_pos},
+        n_groups=snapshots.read_manifest(root)["meta"]["n_groups"],
         drop_prefixes=("docs/stream=", "doc_attrs/stream=", "postings/stream="),
     )
     return {**s, "compacted": True, "new_version": v}
@@ -236,7 +221,7 @@ def snapshotted_index_stream(
     new_docs_stream: DataFrame,
     content_field: str,
     checkpoint_dir: str,
-    block_size: int = 128,
+    block_size: int | None = None,
 ):
     """Streaming ingest with Iceberg-style ATOMIC per-batch visibility.
 
@@ -252,10 +237,15 @@ def snapshotted_index_stream(
     in the next manifest instead of duplicating postings.
 
     Frozen-stats semantics as :func:`incremental_index_stream`; the
-    base dictionary/stats come from ``root``'s snapshot meta.
+    base dictionary, stats and build record come from ``root``'s
+    snapshot meta, and ``block_size``, if given, must match the record
+    (ValueError otherwise).
     """
     from typesense_spark.index import snapshots
-    from typesense_spark.index.build import pack_pipeline, tokenize_tf
+    from typesense_spark.index.build import parse_meta
+
+    base_params, _ = parse_meta(snapshots.read_manifest(root)["meta"], root)
+    params = _append_params(base_params, content_field, block_size, "snapshotted_index_stream")
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -263,20 +253,8 @@ def snapshotted_index_stream(
         spark = batch_df.sparkSession
         base = snapshots.load_index(spark, root)
         meta = snapshots.read_manifest(root)["meta"]
-        tf = tokenize_tf(batch_df, content_field, True)
-        packed = pack_pipeline(
-            spark,
-            tf,
-            base.terms,
-            base.stats,
-            [content_field],
-            num_buckets=base.num_buckets,
-            block_size=block_size,
-            salt_threshold=2**62,  # micro-batches are small: no salting
-            n_salts=1,
-            store_positions=True,
-        )
-        attrs = tf.groupBy("field", "doc_id").agg(F.max("dl").alias("dl"))
+        packed = pack_postings(spark, batch_df, base.terms, base.stats, params)
+        _, attrs, _ = dictionary(batch_df, params.fields, None)
         snapshots.commit(
             root,
             {
