@@ -46,12 +46,14 @@ def _assert_record(ix) -> None:
     assert _max_block(ix.postings) <= 32
 
 
-def _stream_source(spark, tmp_path, base_ix, n: int, seed: int, start: int):
-    """``n`` fresh docs with ids after the base's, as a parquet stream."""
+def _stream_source(spark, tmp_path, base_ix, n: int, seed: int, start: int, path=None):
+    """``n`` fresh docs with ids after the base's, as a parquet stream;
+    ``path`` replaces every doc's path."""
     base_max = base_ix.docs.agg(F.max("doc_id")).first()[0]
-    df = _with_stars(
-        spark.createDataFrame(generate_rows(n, seed=seed, start=start), schema=CORPUS_SCHEMA)
-    ).withColumn(
+    df = spark.createDataFrame(generate_rows(n, seed=seed, start=start), schema=CORPUS_SCHEMA)
+    if path is not None:
+        df = df.withColumn("path", F.lit(path))
+    df = _with_stars(df).withColumn(
         "doc_id",
         (F.lit(base_max + 1) + F.row_number().over(Window.orderBy("path")) - 1).cast("long"),
     )
@@ -116,13 +118,28 @@ def test_build_record_round_trips(spark, corpus_df, tmp_path, store):
     snapshots.delete_docs_versioned(spark, root, [victim])
     _assert_record(snapshots.load_index(spark, root))
 
-    _, stream = _stream_source(spark, tmp_path, ix, 6, seed=9, start=8000)
+    # every streamed doc shares a base doc's path, so the path field's
+    # (frozen) dictionary holds its term
+    path = ix.docs.orderBy("doc_id").collect()[1]["path"]
+    new_df, stream = _stream_source(spark, tmp_path, ix, 6, seed=9, start=8000, path=path)
     with pytest.raises(ValueError, match="block_size"):
         snapshotted_index_stream(root, stream, "content", str(tmp_path / "ck_bad"), block_size=64)
+    with pytest.raises(ValueError, match="title"):
+        snapshotted_index_stream(root, stream, "title", str(tmp_path / "ck_bad2"))
     q = snapshotted_index_stream(root, stream, "content", str(tmp_path / "ck"))
     q.awaitTermination(120)
     assert snapshots.head_version(root) == 3
-    _assert_record(snapshots.load_index(spark, root))
+    streamed = snapshots.load_index(spark, root)
+    _assert_record(streamed)
+    # the batch packs every field of the record, before any delete
+    # touches its tables
+    tables = snapshots.load_tables(spark, root)
+    for t in ("postings/stream=0", "doc_attrs/stream=0"):
+        got = {r["field"] for r in tables[t].select("field").distinct().collect()}
+        assert got == {"content", "path"}, t
+    req = SearchRequest(q=path, fields=("path",), num_typos=0, prefix_last=False, per_page=50)
+    hits = {r["doc_id"] for r in search(streamed, req).hits.collect()}
+    assert {r["doc_id"] for r in new_df.collect()} <= hits
     out = compact_snapshots(spark, root, force=True)
     assert out["compacted"]
     _assert_record(snapshots.load_index(spark, root))
@@ -170,6 +187,54 @@ def test_compaction_keeps_score_col(spark, corpus_df, tmp_path):
     )
     got = [tuple(r) for r in search(snapshots.load_index(spark, root), req).hits.collect()]
     assert got == [tuple(r) for r in search(fresh, req).hits.collect()] and got
+
+
+def test_compaction_keeps_content_sha(spark, corpus_df, tmp_path):
+    """A snapshot store holding one streamed batch compacts to docs whose
+    content_sha is set on every row and is the one content hash rule's."""
+    from typesense_spark.streaming import compact_snapshots, snapshotted_index_stream
+
+    ix = build_index(spark, corpus_df.limit(60), fields=["content"], key_cols=KEY_COLS,
+                     num_buckets=4)
+    root = str(tmp_path / "sha")
+    snapshots.commit_index(root, ix, n_groups=2)
+    _, stream = _stream_source(spark, tmp_path, ix, 4, seed=3, start=7000)
+    snapshotted_index_stream(root, stream, "content", str(tmp_path / "ck")).awaitTermination(120)
+    assert compact_snapshots(spark, root, force=True)["compacted"]
+
+    docs = snapshots.load_index(spark, root).docs
+    assert docs.count() == 64
+    assert docs.where(F.col("content_sha").isNull()).count() == 0
+    from typesense_spark.index.build import with_content_sha
+
+    want = with_content_sha(docs).select("doc_id", F.col("content_sha").alias("want"))
+    assert docs.join(want, "doc_id").where(F.col("content_sha") != F.col("want")).count() == 0
+
+
+def test_upsert_docs_array_content(spark, corpus_df, tmp_path):
+    """upsert_docs works on an index whose content field is
+    array<string>: the upserted doc is searchable and its content_sha
+    hashes the space-joined elements, as the build's does."""
+    import hashlib
+
+    from typesense_spark.index.checkpoint import checkpointed_build, load_checkpointed
+    from typesense_spark.index.maintain import upsert_docs
+
+    docs = corpus_df.limit(40).withColumn("content", F.split("content", "\n"))
+    out = str(tmp_path / "arr")
+    checkpointed_build(spark, docs, out, fields=["content"], key_cols=KEY_COLS, n_groups=2,
+                       num_buckets=4)
+    old = load_checkpointed(spark, out).docs.orderBy("doc_id").first()
+    new_rows = spark.createDataFrame(
+        [(old["repo"], old["path"], old["commit"], old["lang"], ["zzarray upserted", "tail"])],
+        schema="repo string, path string, commit string, lang string, content array<string>",
+    )
+    upsert_docs(spark, out, new_rows, KEY_COLS)
+    ix = load_checkpointed(spark, out)
+    req = SearchRequest(q="zzarray", fields=("content",), num_typos=0, prefix_last=False)
+    assert [r["doc_id"] for r in search(ix, req).hits.collect()] == [old["doc_id"]]
+    row = ix.docs.where(F.col("doc_id") == old["doc_id"]).first()
+    assert row["content_sha"] == hashlib.sha256(b"zzarray upserted tail").hexdigest()
 
 
 def test_maintain_doc_attrs_follow_docs(spark, corpus_df, tmp_path):

@@ -531,13 +531,21 @@ def _logical_nodes(df) -> list:
     return out
 
 
+# perfbench's three interactive shapes, over the test corpus
+INTERACTIVE_SHAPES = {
+    "and2_facet": dict(q="import return", num_typos=0, prefix_last=False, facet_by=("lang",)),
+    "or3_filter": dict(q="import return merge0", mode="or", num_typos=0, prefix_last=False,
+                       filter_by="lang := python"),
+    "typo_prefix": dict(q="improt", num_typos=2, prefix_last=True),
+}
+
+
 @pytest.mark.parametrize(
     "kw,n_aggs",
     [
-        (dict(q="import return", num_typos=0, prefix_last=False, facet_by=("lang",)), 2),
-        (dict(q="import return merge0", mode="or", num_typos=0, prefix_last=False,
-              filter_by="lang := python"), 2),
-        (dict(q="improt", num_typos=2, prefix_last=True), 1),
+        (INTERACTIVE_SHAPES["and2_facet"], 2),
+        (INTERACTIVE_SHAPES["or3_filter"], 2),
+        (INTERACTIVE_SHAPES["typo_prefix"], 1),
     ],
     ids=["and2_facet", "or3_filter", "typo_prefix"],
 )
@@ -564,6 +572,89 @@ def test_search_matched_plan_shape(built_index, kw, n_aggs):
     assert not {"LocalRelation", "LogicalRDD"} & set(names), lines
     assert not [x for x in lines if x.startswith("Join") and "broadcast" in x], lines
     assert any(x.startswith("Generate explode(element_at(map(") for x in lines), lines
+
+
+# py4j commands one search() sends the gateway per interactive shape at
+# drop_tokens_threshold=0, so that no Spark job runs inside search():
+# building a request's plans is all driver round-trips. The budgets are
+# the counts of the code before the response layer was shared; a
+# change must not raise them.
+PY4J_BUDGET = {"and2_facet": 581, "or3_filter": 532, "typo_prefix": 383}
+
+
+@pytest.mark.parametrize("shape", sorted(PY4J_BUDGET))
+def test_search_py4j_budget(spark, built_index, monkeypatch, shape):
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from typesense_spark.search import SearchRequest, search
+
+    req = SearchRequest(fields=("content",), drop_tokens_threshold=0, **INTERACTIVE_SHAPES[shape])
+    search(built_index, req)  # warms the per-Index dictionary caches
+    client = spark.sparkContext._gateway._gateway_client
+    orig, calls = client.send_command, []
+
+    def spy(command, *a, **kw):
+        # releases of JVM handles that Python let go of run whenever
+        # their finalizers do, so they are not this call's round trips
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls.append(1)
+        return orig(command, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", spy)
+        res = search(built_index, req)
+    assert len(calls) <= PY4J_BUDGET[shape], len(calls)
+    assert res.hits.collect()
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _physical_nodes(df) -> list:
+    """(node, its subtree's node names) for every node of the physical
+    plan down to its leaves — a cached relation is a leaf, so the index
+    tables' build lineage is not included."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.inputPlan()
+
+    def walk(node):
+        kids = node.children()
+        below = [walk(kids.apply(i)) for i in range(kids.size())]
+        names = {node.nodeName()}.union(*[n for _, n in below]) if below else {node.nodeName()}
+        out.append((node, names))
+        return node, names
+
+    out: list = []
+    walk(root)
+    return out
+
+
+def test_search_topk_plans_take_ordered(built_index):
+    """A one-query search without grouping takes its top-k with
+    TakeOrderedAndProject: the only Window numbers the <= top_n rows
+    above it, none runs over the matched set."""
+    from typesense_spark.search import SearchRequest, search
+
+    for kw in INTERACTIVE_SHAPES.values():
+        hits = search(built_index, SearchRequest(fields=("content",), **kw)).hits
+        nodes = _physical_nodes(hits)
+        assert any(n.nodeName() == "TakeOrderedAndProject" for n, _ in nodes), _plan(hits)
+        for n, below in nodes:
+            if n.nodeName() == "Window":
+                assert "TakeOrderedAndProject" in below, _plan(hits)
+
+
+def test_batch_topk_plans_per_qid_window(built_index):
+    """A batch's top-k is one window per qid: every Window carries a
+    partition spec and none is keyed by the physical partition."""
+    from typesense_spark.search.batch import batch_search
+
+    qs = [("a", "import return"), ("b", "merge0"), ("c", "class")]
+    phys = _plan(batch_search(built_index, qs, fields=("content",), k=5))
+    _assert_no_global_window(phys)
+    assert "SPARK_PARTITION_ID" not in phys.upper(), phys
 
 
 def test_engine_deepening_one_probe_job(built_index, monkeypatch):

@@ -1181,6 +1181,22 @@ def dictionary(
     return srows, doc_attrs, terms
 
 
+def with_content_sha(docs: DataFrame) -> DataFrame:
+    """B3: the per-row content invariant vs the source (input_hint:
+    "content sha256 equality"), carried on the docs table as
+    ``content_sha`` = sha256 of ``content``; array content hashes its
+    space-joined logical string. The one rule for every route by which
+    docs enter a store (build, checkpoint, upsert, stream batch), so a
+    table unioned from several routes holds no null or stale hash. Docs
+    without a ``content`` column pass through."""
+    if "content" not in docs.columns:
+        return docs
+    content = F.col("content")
+    if dict(docs.dtypes)["content"].startswith("array"):
+        content = F.array_join(content, " ")
+    return docs.withColumn("content_sha", F.sha2(content, 256))
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -1219,28 +1235,7 @@ def build_index(
         docs = docs.withColumn("doc_id", F.col(id_col).cast("long"))
     docs = docs.withColumn("doc_id", F.col("doc_id").cast("long"))
 
-    # B5: string-array fields tokenize per ELEMENT with stride-encoded
-    # positions (elem_idx * ELEM_STRIDE + local_pos — see ELEM_STRIDE):
-    # proximity windows can never span an element boundary AND the
-    # stored postings can name which element matched, completing the
-    # reference's per-element offset encoding at rest
-    # (src/index.cpp:590-598, decode populate_token_positions
-    # :1977-2017). tf/df stay joint across elements (pinned; tested).
-    schema_types = dict(docs.dtypes)
-    array_fields = [
-        fld for fld in fields if schema_types.get(fld, "").startswith("array")
-    ]
-
-    # B3: per-row content invariant vs the source (input_hint:
-    # "content sha256 equality"), carried on the docs table; array
-    # content hashes its plain-joined logical string
-    if "content" in docs.columns and "content_sha" not in docs.columns:
-        content_str = (
-            F.array_join(F.col("content"), " ")
-            if "content" in array_fields
-            else F.col("content")
-        )
-        docs = docs.withColumn("content_sha", F.sha2(content_str, 256))
+    docs = with_content_sha(docs)
 
     # persist_light: cache ONLY the narrow relations (docs handle,
     # stats partials, dictionary aggs) so a dictionary-only caller

@@ -41,7 +41,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from typesense_spark.index.build import Index, build_index, pack_postings, read_meta
+from typesense_spark.index.build import (
+    Index, build_index, pack_postings, read_meta, with_content_sha,
+)
 
 
 def _marker_path(out_dir: str, stage: str) -> str:
@@ -127,7 +129,7 @@ def checkpointed_build(
         from pyspark.sql import Observation
 
         obs = Observation()
-        with_ids.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+        with_content_sha(with_ids).observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
             "overwrite"
         ).parquet(os.path.join(out_dir, "docs"))
         n_docs = int(obs.get["n"])  # counted DURING the write - no read-back pass

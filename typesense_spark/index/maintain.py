@@ -35,7 +35,9 @@ import shutil
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from typesense_spark.index.build import BuildParams, dictionary, read_meta, touched_buckets
+from typesense_spark.index.build import (
+    BuildParams, dictionary, read_meta, touched_buckets, with_content_sha,
+)
 from typesense_spark.index.checkpoint import _has_marker, _marker_path, checkpointed_build
 
 
@@ -202,9 +204,7 @@ def upsert_docs(
         .withColumn("doc_id", (F.row_number().over(w) + max_id).cast("long"))
     )
     upd_part = with_ids.where(F.col("doc_id").isNotNull())
-    incoming = upd_part.unionByName(new_part)
-    if "content" in incoming.columns:
-        incoming = incoming.withColumn("content_sha", F.sha2(F.col("content"), 256))
+    incoming = with_content_sha(upd_part.unionByName(new_part))
     affected |= touched_buckets(incoming, fields, num_buckets)
 
     # terms the frozen dictionary has never seen must still be findable:

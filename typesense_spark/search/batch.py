@@ -53,15 +53,15 @@ map expression (a batch broadcast-joins them), qids are integer
 surrogates inside the plan, and scoring groups only by the vector keys
 that vary, so a one-query plan groups by doc alone.
 
-The layers above the matched set are shared the same way: grouping
-ranks through ``engine._rank_groups``; curation (:func:`batch_curated`,
-:func:`batch_grouped_curated`) resolves rules per query driver-side
-(pure string matching, like the reference's populate_overrides), joins
-hidden docs to the narrowing relation, and runs
-``curation.splice_hits`` / ``curation.splice_groups`` over ONE
-collected per-query page; the Match re-rank (:func:`batch_rerank_proximity`,
-:func:`batch_rerank_text_match`) is ``match.match_rescore`` over every
-query's spec list in one union decode pass.
+The layers above the matched set are shared the same way: every
+``batch_*`` entry point is a thin wrapper that picks response options
+and output columns of ``engine._respond``, the one response layer
+``engine.search`` also runs (keyed by qid here, by nothing there):
+per-qid top-k, facets, group ranking and the curated splices over ONE
+collected per-query page. Curation resolves rules per query
+driver-side and joins hidden docs to the narrowing relation; the Match
+re-rank is ``match.match_rescore`` over every query's spec list in one
+union decode pass.
 
 WAND block pruning applies to one-query calls only (``search()``'s
 ``use_wand``): it prunes a single query's scan, while a batch
@@ -74,15 +74,16 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from typesense_spark.index.build import Index, decode_postings, sql_literal
-from typesense_spark.search.curation import claimants, splice_groups, splice_hits
 from typesense_spark.search.engine import (
     MAX_HITS,
+    SearchRequest,
     _aggregate_scores,
     _attempt_plan,
     _expand,
     _field_weights,
     _persist_scored,
-    _rank_groups,
+    _resolve_curation,
+    _respond,
     _specs,
     parse_query,
 )
@@ -611,6 +612,20 @@ def _batch_matched(
     return _done(_narrow(scored), levels)
 
 
+def _batch_respond(index, queries, req, *args, rule=None, curation=None, hits=True, **kw):
+    """Every batch entry point's body: the matched set (``args``/``kw``:
+    :func:`_batch_matched`'s) through ``engine._respond`` keyed by qid."""
+    matched = _batch_matched(index, queries, *args, _rescore=rule, **kw)
+    return _respond(index, matched, req, ["qid"], rule, curation, hits)
+
+
+def _ranked(index, queries, k: int, rule: str | None, cols: list[str], *args, **kw) -> DataFrame:
+    """(qid, rank, doc_id, *cols), rank ≤ k per qid."""
+    req = SearchRequest("", per_page=k)
+    hits = _batch_respond(index, queries, req, *args, rule=rule, **kw).hits
+    return hits.select("qid", F.col("rank").cast("long").alias("rank"), "doc_id", *cols)
+
+
 def batch_search(
     index: Index,
     queries: list[tuple[str, str]],
@@ -630,42 +645,18 @@ def batch_search(
     """[(qid, q)] → (qid, rank, doc_id, score_milli), rank ≤ k per qid.
 
     Full engine surface per query (see module docstring): drop-tokens
-    fallback (``drop_tokens_threshold``; None/0 disables, like the
-    legacy batch path), synonym windows (``synonym_store``) and
-    single-token alternates (``synonyms``), per-field weights
-    (``query_by_weights``, parallel to ``fields``), '-token' exclusions
-    parsed from each query string, and per-query attribute filters
-    (``filters``: {qid: filter_by DSL} — each DISTINCT filter string
-    compiles to one Catalyst predicate over the docs table; N queries
-    sharing F filters cost F doc scans, not N), and typo deepening
-    (``typo_tokens_threshold`` — per-vector cost-level stop rule with
-    narrowed probe counts, see module docstring). A wildcard query
-    (``*``, or excludes only) matches every doc not excluded, scored
-    0."""
-    merged = _batch_matched(
-        index, queries, fields, num_typos, prefix_last, mode, typo_distance,
-        query_by_weights, synonyms, synonym_store, drop_tokens_threshold,
+    fallback (``drop_tokens_threshold``; None/0 disables), synonym
+    windows (``synonym_store``) and single-token alternates
+    (``synonyms``), per-field weights (``query_by_weights``, parallel to
+    ``fields``), '-token' exclusions, per-query attribute filters
+    (``filters``: {qid: filter_by DSL}; N queries sharing F distinct
+    filters cost F doc scans) and typo deepening
+    (``typo_tokens_threshold``). A wildcard query (``*``, or excludes
+    only) matches every doc not excluded, scored 0."""
+    return _ranked(
+        index, queries, k, None, ["score_milli"], fields, num_typos, prefix_last, mode,
+        typo_distance, query_by_weights, synonyms, synonym_store, drop_tokens_threshold,
         filters, typo_tokens_threshold,
-    )
-    # ---- per-query top-k, two-phase (r6) ------------------------------------
-    # phase 1 prunes each physical partition to its local top-k per qid
-    # (no exchange — a sort within the aggregation's output partitions),
-    # so the global per-qid window shuffles ≤ k·n_partitions rows per
-    # query instead of every matched row (the full matched set is
-    # typically 10-1000x larger). Row-identical: a doc outside its
-    # partition's local top-k cannot be in the global top-k.
-    order = [F.col("score_milli").desc(), F.col("doc_id").desc()]
-    w1 = Window.partitionBy("qid", F.spark_partition_id()).orderBy(*order)
-    pruned = (
-        merged.withColumn("_rn1", F.row_number().over(w1))
-        .where(F.col("_rn1") <= k)
-        .drop("_rn1")
-    )
-    w = Window.partitionBy("qid").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "score_milli")
     )
 
 
@@ -680,37 +671,14 @@ def batch_search_chunked(
     (r4 VERDICT #2, the sf1 soak's one measured scale cliff).
 
     One mega-plan's aggregation state grows with Σ df(token) over the
-    WHOLE query log — unbounded in query count, which at 1M docs ×
-    4000 queries spilled ~300 GB. Chunking bounds in-flight state at
-    any log size: each chunk is still ONE set-oriented plan (scan →
-    decode → score → top-k), and chunks run as SEPARATE actions, so
-    executor memory holds one chunk's aggregation state at a time.
-    Per-chunk results are per-qid independent, so the concatenation is
-    row-identical to the unchunked call (asserted in tests). Size
-    chunks so (avg df × chunk_queries × row width) fits the executors'
-    aggregate memory; the postings scan stays term-pruned per chunk, so
-    total scan volume matches the unchunked plan."""
+    WHOLE query log (1M docs × 4000 queries spilled ~300 GB). Each chunk
+    is still ONE set-oriented plan, run as a SEPARATE action, so
+    executors hold one chunk's state at a time; per-qid independence
+    makes the concatenation row-identical to the unchunked call
+    (asserted in tests). Size chunks so (avg df × chunk_queries × row
+    width) fits the executors' aggregate memory."""
     for i in range(0, len(queries), chunk_queries):
         yield batch_search(index, queries[i : i + chunk_queries], **kw)
-
-
-def _batch_rerank(
-    index: Index, queries: list[tuple[str, str]], k: int, rule: str, cols: list[str], **kw
-) -> DataFrame:
-    """The one batch re-rank body: the matched set with its
-    ``match_score`` under ``rule``, ranked per qid by match_score DESC,
-    then BM25 DESC, then doc_id DESC → (qid, rank, doc_id, *cols)."""
-    merged = _batch_matched(index, queries, _rescore=rule, **kw)
-    w = Window.partitionBy("qid").orderBy(
-        F.col("match_score").desc(),
-        F.col("score_milli").desc(),
-        F.col("doc_id").desc(),
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", *cols)
-    )
 
 
 def batch_rerank_proximity(
@@ -719,16 +687,11 @@ def batch_rerank_proximity(
     k: int = 10,
     **kw,
 ) -> DataFrame:
-    """Per-query proximity re-rank (the engine's Q11 second stage,
-    batched): (qid, rank, doc_id, score_milli), ordered per qid by the
-    packed Match score DESC, then BM25 DESC, doc_id DESC — the
-    reference's primary relevance key (match_score.h:49-57).
-
-    The heavy second stage — block pruning + position decode — runs
-    ONCE over the union of every query's exact terms
-    (:func:`typesense_spark.search.match.match_rescore`) instead of
-    once per query. Accepts every :func:`batch_search` keyword."""
-    return _batch_rerank(index, queries, k, "proximity", ["score_milli"], **kw)
+    """The engine's Q11 proximity re-rank, batched: (qid, rank, doc_id,
+    score_milli), per qid by the packed Match score DESC, then BM25,
+    then doc_id DESC (match_score.h:49-57). Accepts every
+    :func:`batch_search` keyword."""
+    return _ranked(index, queries, k, "proximity", ["score_milli"], **kw)
 
 
 def batch_rerank_text_match(
@@ -737,37 +700,13 @@ def batch_rerank_text_match(
     k: int = 10,
     **kw,
 ) -> DataFrame:
-    """Per-query text-match-PRIMARY ranking (the engine's
-    ``rank_by_text_match`` parity mode, batched): (qid, rank, doc_id,
-    match_score, score_milli), ordered per qid by the FULL packed score
-    — ``(words<<16)|(255-typo_cost)<<8|proximity``, the reference's
-    default primary key incl. the typo-cost byte
-    (src/collection.cpp:713-728, match_score.h:49-57) — then BM25,
-    then doc_id DESC.
-
-    One decode pass over the union of every query's typo/prefix
-    candidates (:func:`match.match_rescore` under the text-match rule);
-    specs come from the batch expansion itself (attempt-0 vectors,
-    costs carrying the +1 length-extension adjustment, candidates above
-    the vector's typo-deepening stop level left out). Accepts every
-    :func:`batch_search` keyword."""
-    return _batch_rerank(
-        index, queries, k, "text_match", ["match_score", "score_milli"], **kw
-    )
-
-
-def _resolve_curation(queries, override_store, pinned, hidden, ids_per_pos):
-    """Per-query effective ({qid: {doc_id: position}}, {qid: hidden})
-    — the engine's override resolution, once per query."""
-    res_pin: dict[str, dict[int, int]] = {}
-    res_hid: dict[str, tuple[int, ...]] = {}
-    for qid, q in queries:
-        p = dict((pinned or {}).get(qid, {}))
-        h = tuple((hidden or {}).get(qid, ()))
-        if override_store is not None:
-            p, h = override_store.resolve(q, p, h, ids_per_pos=ids_per_pos)
-        res_pin[qid], res_hid[qid] = p, h
-    return res_pin, res_hid
+    """The engine's ``rank_by_text_match`` parity mode, batched: (qid,
+    rank, doc_id, match_score, score_milli), per qid by the FULL packed
+    score incl. the typo-cost byte (src/collection.cpp:713-728), then
+    BM25, then doc_id DESC; candidates above a vector's typo-deepening
+    stop level are left out. Accepts every :func:`batch_search`
+    keyword."""
+    return _ranked(index, queries, k, "text_match", ["match_score", "score_milli"], **kw)
 
 
 def batch_curated(
@@ -779,55 +718,16 @@ def batch_curated(
     hidden: dict[str, tuple[int, ...]] | None = None,
     **kw,
 ) -> DataFrame:
-    """Per-query curation/overrides (the engine's Q20, batched):
-    (qid, rank, doc_id, score_milli, curated), rank ≤ k per qid.
-
-    Stored override rules resolve per query DRIVER-SIDE (string match
-    over an O(rules) dict — no Spark job, same as the engine and the
-    reference's populate_overrides, src/collection.cpp:427-493);
-    resolved hidden docs join the batch narrowing relation (excluded
-    before ranking AND inside the typo-deepening probe), and the heavy
-    part — scoring + ranking every query — stays ONE Spark plan. The
-    positional splice is the engine's own (``curation.splice_hits``:
-    first claimant per position wins; a pin past the organic tail
-    appends in position order, src/collection.cpp:897-922) over the
-    collected per-query top (k + n_pins) page — O(N·k) driver rows for
-    an N-query batch, the same driver-scale materialization the
-    engine's per-query splice does once.
-
-    ``pinned``: {qid: {doc_id: 1-based position}} explicit pins (win
-    over rule adds, like the engine); ``hidden``: {qid: (doc_ids...)}.
-    Accepts every :func:`batch_search` keyword."""
-    res_pin, res_hid = _resolve_curation(queries, override_store, pinned, hidden, 1)
-    merged = _batch_matched(index, queries, hidden=res_hid, **kw)
-
-    # one ranking job for the whole batch: per qid keep the top
-    # (k + n_pins) rows — at least the slice the engine collects
-    max_pins = max((len(p) for p in res_pin.values()), default=0)
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score_milli").desc(), F.col("doc_id").desc()
-    )
-    page = (
-        merged.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k + max_pins)
-        .collect()
-    )
-    by_qid: dict[str, list] = {}
-    for r in sorted(page, key=lambda r: r["rn"]):
-        by_qid.setdefault(r["qid"], []).append(r)
-    out_rows = [
-        (qid, pos, int(d), int(s or 0), cur)
-        for qid, _q in queries
-        for pos, d, s, cur in splice_hits(
-            {r["doc_id"]: r["score_milli"] for r in by_qid.get(qid, [])},
-            res_pin[qid],
-            k,
-        )
-    ]
-    return index.spark.createDataFrame(
-        out_rows,
-        schema="qid string, rank int, doc_id long, score_milli long, curated boolean",
-    )
+    """The engine's Q20 curation, batched: (qid, rank, doc_id,
+    score_milli, curated), rank ≤ k per qid. Hidden docs narrow inside
+    the ONE scoring plan (the typo-deepening probe included); the splice
+    reads O(N·k) collected driver rows. ``pinned``: {qid: {doc_id:
+    1-based position}} explicit pins (win over rule adds);
+    ``hidden``: {qid: (doc_ids...)}. Accepts every :func:`batch_search`
+    keyword."""
+    req = SearchRequest("", per_page=k)
+    res_pin, res_hid = _resolve_curation(queries, req, override_store, pinned, hidden)
+    return _batch_respond(index, queries, req, curation=res_pin, hidden=res_hid, **kw).hits
 
 
 def batch_grouped(
@@ -838,25 +738,15 @@ def batch_grouped(
     top_groups: int = 10,
     **kw,
 ) -> DataFrame:
-    """Per-query grouped top-k (the engine's Q15, batched): within each
-    (qid, group key) keep the best ``group_limit`` hits; groups rank per
-    qid by their TOP hit (score DESC, doc_id DESC — the reference sorts
-    groups by their top KV) and only the best ``top_groups`` groups per
-    qid survive. Output: (qid, *group_by, group_pos, group_rank,
-    doc_id, score_milli). Accepts every :func:`batch_search` keyword."""
-    merged = _batch_matched(index, queries, **kw)
-    hydrated = merged.join(
-        index.docs.select("doc_id", *group_by), "doc_id"
-    )
+    """The engine's Q15 grouped top-k, batched: (qid, *group_by,
+    group_pos, group_rank, doc_id, score_milli) for the best
+    ``top_groups`` groups per qid, each group's best ``group_limit``
+    hits. Accepts every :func:`batch_search` keyword."""
+    req = SearchRequest("", group_by=tuple(group_by), group_limit=group_limit)
     return (
-        _rank_groups(
-            hydrated, ["qid"], group_by,
-            [F.col("score_milli").desc(), F.col("doc_id").desc()], group_limit,
-        )
+        _batch_respond(index, queries, req, **kw).grouped
         .where(F.col("group_pos") <= top_groups)
-        .select(
-            "qid", *group_by, "group_pos", "group_rank", "doc_id", "score_milli"
-        )
+        .select("qid", *group_by, "group_pos", "group_rank", "doc_id", "score_milli")
     )
 
 
@@ -871,60 +761,19 @@ def batch_grouped_curated(
     hidden: dict[str, tuple[int, ...]] | None = None,
     **kw,
 ) -> DataFrame:
-    """Q20 under group_by, batched (the engine's grouped curation):
-    per query, up to ``group_limit`` claimants per position form a
-    SYNTHETIC curated group spliced at that GROUP position
-    (``curation.splice_groups``); organic groups exclude curated docs
-    and rank by their top hit (reference merge of override_result_kvs,
-    src/collection.cpp:890-922).
-
-    Output: (qid, group_pos, group_rank, doc_id, score_milli, curated).
-    Scoring + grouping for every query is ONE Spark plan; the splice
-    runs over the collected per-query group page (O(N·top_groups·
-    group_limit) driver rows) plus one bounded lookup of the curated
-    docs' scores. Accepts every :func:`batch_search` keyword."""
-    gl = max(1, group_limit)
-    res_pin, res_hid = _resolve_curation(queries, override_store, pinned, hidden, gl)
-    merged = _batch_matched(index, queries, hidden=res_hid, **kw)
-    spark = index.spark
-
-    by_pos_q = {qid: claimants(res_pin[qid], gl) for qid, _q in queries}
-    cur_pairs = sorted(
-        {(q, d) for q, bp in by_pos_q.items() for ds in bp.values() for d in ds}
+    """The engine's Q20 under group_by, batched: (qid, group_pos,
+    group_rank, doc_id, score_milli, curated) for ``top_groups`` group
+    positions per qid; up to ``group_limit`` claimants of a position
+    form its curated group. Scoring + grouping is ONE Spark plan, the
+    splice reads the collected group pages. Accepts every
+    :func:`batch_search` keyword."""
+    req = SearchRequest(
+        "", group_by=tuple(group_by), group_limit=group_limit, per_page=top_groups
     )
-    org = merged
-    scores: dict[str, dict[int, int]] = {}
-    if cur_pairs:
-        cp = spark.createDataFrame(cur_pairs, schema="qid string, doc_id long")
-        org = merged.join(F.broadcast(cp), ["qid", "doc_id"], "left_anti")
-        for r in merged.join(F.broadcast(cp), ["qid", "doc_id"], "left_semi").collect():
-            scores.setdefault(r["qid"], {})[r["doc_id"]] = r["score_milli"]
-
-    hydrated = org.join(index.docs.select("doc_id", *group_by), "doc_id")
-    lim = top_groups + max((len(bp) for bp in by_pos_q.values()), default=0)
-    rows_q: dict[str, list] = {}
-    for r in (
-        _rank_groups(
-            hydrated, ["qid"], group_by,
-            [F.col("score_milli").desc(), F.col("doc_id").desc()], gl,
-        )
-        .where(F.col("group_pos") <= lim)
-        .select("qid", "g_score", "g_doc", "group_rank", "doc_id", "score_milli")
-        .collect()
-    ):
-        rows_q.setdefault(r["qid"], []).append(tuple(r)[1:])
-    out = [
-        (qid, *g)
-        for qid, _q in queries
-        for g in splice_groups(
-            rows_q.get(qid, []), by_pos_q[qid], scores.get(qid, {}), top_groups
-        )
-    ]
-    return spark.createDataFrame(
-        out,
-        schema="qid string, group_pos int, group_rank int, doc_id long, "
-        "score_milli long, curated boolean",
-    )
+    res_pin, res_hid = _resolve_curation(queries, req, override_store, pinned, hidden)
+    return _batch_respond(
+        index, queries, req, curation=res_pin, hits=False, hidden=res_hid, **kw
+    ).grouped_hits
 
 
 def batch_facet_counts(
@@ -934,23 +783,9 @@ def batch_facet_counts(
     max_facet_values: int = 10,
     **kw,
 ) -> DataFrame:
-    """Per-query facet counts over the FULL matched set (the engine's
-    Q17 semantics, batched): (qid, facet_value, facet_count), top
-    ``max_facet_values`` per qid ordered (count DESC, value) — the
-    reference computes facets on every faceted request
-    (src/index.cpp:608-816); this is that shape for a whole query log
-    in ONE plan. Accepts every :func:`batch_search` keyword."""
-    merged = _batch_matched(index, queries, **kw)
-    counts = (
-        merged.join(index.docs.select("doc_id", facet_col), "doc_id")
-        .groupBy("qid", F.col(facet_col).alias("facet_value"))
-        .agg(F.count("*").alias("facet_count"))
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("facet_count").desc(), F.col("facet_value")
-    )
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= max_facet_values)
-        .select("qid", "facet_value", "facet_count")
-    )
+    """The engine's Q17 facet counts over the FULL matched set, batched
+    in ONE plan: (qid, facet_value, facet_count), the top
+    ``max_facet_values`` per qid by count DESC, value. Accepts every
+    :func:`batch_search` keyword."""
+    req = SearchRequest("", facet_by=(facet_col,), max_facet_values=max_facet_values)
+    return _batch_respond(index, queries, req, **kw).facets[facet_col]

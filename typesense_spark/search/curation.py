@@ -37,9 +37,9 @@ PinnedHitsGrouping).
 Scale note: overrides are a driver-side dict (O(10²-10³) rules in
 practice); resolution is pure string matching on the query — no Spark
 job. The resolved (pinned, hidden) feed the anti-filter paths and the
-splices below, which ``engine.search`` and the ``batch_*`` curation
-entry points share; each splice runs driver-side over one collected
-page per query.
+splices below, which the one response layer (``engine._respond``)
+runs for ``engine.search`` and the ``batch_*`` curation entry points
+alike; each splice runs driver-side over one collected page per query.
 """
 
 from __future__ import annotations
@@ -185,9 +185,10 @@ def splice_groups(
     n: int,
 ) -> list[tuple[int, int, int, int, bool]]:
     """Grouped pin splice → [(group_pos, group_rank, doc_id,
-    score_milli, curated)] for group positions 1..n. ``rows``: the
-    organic (g_score, g_doc, group_rank, doc_id, score_milli) rows of
-    ``engine._rank_groups``, curated docs already excluded — groups
+    score_milli, curated)] for group positions 1..n. ``rows``: one
+    query's organic (g_score, g_doc, group_rank, doc_id, score_milli)
+    rows from the response layer's group ranking
+    (``engine._curated_groups``), curated docs already excluded — groups
     rank by their top hit's (g_score, g_doc) DESC; ``by_pos``:
     :func:`claimants` under group_by, each position's claimants forming
     one synthetic curated group; ``scores``: the curated docs' scores

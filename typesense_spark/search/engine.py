@@ -10,14 +10,17 @@ Maps the reference's hand-rolled pipeline onto declarative Spark:
   ``batch._batch_matched``, which :func:`search` runs over a one-query
   batch; this module holds its shared layers (``_specs``,
   ``_attempt_plan``, ``_expand``, ``_aggregate_scores``),
-- Q13/Q14 sort + top-k = ``ORDER BY score DESC, doc_id DESC LIMIT k``
-  (Spark's ``TakeOrderedAndProject`` IS the distributed Topster,
-  ``/root/reference/include/topster.h:92-267``),
-- Q15 grouped top-k = window ``row_number() <= group_limit``,
-- Q17-Q19 facets = groupBy counts + min/max/sum/avg stats
-  (``/root/reference/src/index.cpp:608-816``),
-- Q22 pagination, Q24 projection, Q25 hydration = offset/limit +
-  ``select`` + join back to docs.
+- the response above it is ONE layer too, :func:`_respond`, keyed by
+  nothing for :func:`search` and by qid for every ``batch_*`` entry
+  point; only its top-k (:func:`_top`) branches on the keys:
+  ``ORDER BY … LIMIT k`` for one query (Spark's TakeOrderedAndProject
+  IS the distributed Topster, include/topster.h:92-267), one window
+  per qid for a batch. Q15 grouped top-k is a window
+  ``row_number() <= group_limit``, Q17-Q19 facets groupBy counts +
+  min/max/sum/avg stats (src/index.cpp:608-816), Q20 curation a
+  driver-side splice of each query's collected page (``curation.py``),
+  Q22/Q24/Q25 pagination, projection and hydration an offset, a
+  ``select`` and a join of the doc columns the response reads.
 
 Scoring: per-(term,doc) BM25 contributions are int64 milli values baked
 into the postings at build time (``scoring.py``); a doc's score for a
@@ -138,17 +141,11 @@ class SearchRequest:
     # Text-match-PRIMARY parity mode (r4 VERDICT #4): rank by the full
     # packed score INCLUDING the typo-cost byte —
     # (words<<16)|(255-total_cost)<<8|distance, the reference's DEFAULT
-    # primary key (_text_match injected at src/collection.cpp:713-728;
-    # packing include/match_score.h:49-57). Sort-field resolution
-    # follows src/collection.cpp:708-728: '_text_match' may appear
-    # ANYWHERE in sort_by (user-sort-primary when listed after user
-    # fields); absent and < 3 fields → appended last; sort_by empty →
-    # text_match leads with BM25 as the default_sorting_field stand-in.
-    # Unlike rerank_proximity (cost
-    # byte fixed at 255), the cost byte carries the sum of used
-    # candidates' typo costs +1 per length-extension match
-    # (src/index.cpp:2038-2040). Golden orderings from the reference's
-    # own collection_test.cpp are asserted in tests/test_match.py.
+    # primary key (src/collection.cpp:713-728, match_score.h:49-57). The
+    # cost byte sums the used candidates' typo costs, +1 per
+    # length-extension match (src/index.cpp:2038-2040); sort_by resolves
+    # around '_text_match' as the reference does (_order). Golden
+    # orderings from collection_test.cpp are in tests/test_match.py.
     rank_by_text_match: bool = False
 
 
@@ -550,20 +547,200 @@ def _rank_groups(
     )
 
 
+def _order(req: SearchRequest, rule: str | None) -> list:
+    """The hits order: a re-rank's Match score leads (match_score.h:49-57),
+    then sort_by, then score DESC, doc_id DESC (topster.h:254-257). In
+    text-match mode sort fields resolve like the reference's
+    (src/collection.cpp:708-728): ``_text_match`` may sit ANYWHERE in
+    sort_by, is APPENDED when absent and fewer than 3 fields are given,
+    and leads (BM25 standing in for default_sorting_field) when sort_by
+    is empty; BM25 never slips between sort_by ties and doc_id."""
+
+    def key(c: str, d: str):
+        # F.desc(name) is F.col(name).desc() in 1/8 of the py4j calls
+        c = "match_score" if c == TEXT_MATCH_FIELD else c
+        return F.desc(c) if d.lower() == "desc" else F.asc(c)
+
+    sort = list(req.sort_by)
+    if rule == "text_match" and sort:
+        if TEXT_MATCH_FIELD not in dict(sort) and len(sort) < 3:
+            sort.append((TEXT_MATCH_FIELD, "desc"))
+        return [key(c, d) for c, d in sort] + [F.desc("doc_id")]
+    lead = [F.desc("match_score")] if rule else []
+    user = [] if rule == "text_match" else [key(c, d) for c, d in sort if c != TEXT_MATCH_FIELD]
+    return lead + user + [F.desc("score_milli"), F.desc("doc_id")]
+
+
+def _projection(req: SearchRequest, columns: list[str]) -> tuple[str, ...]:
+    """The hits' doc columns: include_fields minus exclude_fields; a bare
+    exclude means every doc column but these (src/core_api.cpp:366-369)."""
+    if not req.exclude_fields:
+        return req.include_fields
+    base = req.include_fields or [c for c in columns if c not in ("doc_id", "content_sha")]
+    return tuple(c for c in base if c not in req.exclude_fields)
+
+
+def _hydrate(matched: DataFrame, docs: DataFrame, cols) -> DataFrame:
+    """Q25: the matched rows joined to the doc columns among ``cols``
+    (or the matched rows, when they name none)."""
+    need = [c for c in dict.fromkeys(cols) if c in docs.columns and c != "doc_id"]
+    return matched.join(docs.select("doc_id", *need), "doc_id") if need else matched
+
+
+def _top(df: DataFrame, keys: list[str], order: list, n: int, rank: bool = True) -> DataFrame:
+    """Q14 top-n per ``keys`` by ``order``, numbered in ``rank`` (dropped
+    when ``rank`` is False) — the one step that branches on the keys.
+    One query: TakeOrderedAndProject, then the ≤ n rows are numbered. A
+    batch: one window per qid, under which Spark keeps each partition's
+    per-qid top n before the shuffle (WindowGroupLimit)."""
+    if keys:
+        w = Window.partitionBy(*keys).orderBy(*order)
+        top = df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= n)
+        return top if rank else top.drop("rank")
+    top = df.orderBy(*order).limit(n)
+    return top.withColumn("rank", F.row_number().over(Window.orderBy(*order))) if rank else top
+
+
+def _facets(matched: DataFrame, docs: DataFrame, req: SearchRequest, keys: list[str]):
+    """Q17-Q19 over the FULL matched set (src/index.cpp:608-816): {col:
+    (facet_value, facet_count)} top max_facet_values by count DESC,
+    value; {col: stats}, integer-exact (avg micro-quantized)."""
+    mdocs = _hydrate(matched, docs, [*req.facet_by, *req.facet_stats_for])
+    order = [F.desc("facet_count"), F.asc("facet_value")]
+    facets = {
+        c: _top(
+            mdocs.groupBy(*keys, F.col(c).alias("facet_value"))
+            .agg(F.count("*").alias("facet_count")),
+            keys, order, req.max_facet_values, rank=False,
+        )
+        for c in req.facet_by
+    }
+    stats = {
+        c: mdocs.groupBy(*keys).agg(
+            F.min(c).cast("long").alias("stat_min"),
+            F.max(c).cast("long").alias("stat_max"),
+            F.sum(c).cast("long").alias("stat_sum"),
+            F.count(c).alias("stat_count"),
+        ).withColumn("stat_avg_micro", F.expr("stat_sum * 1000000 div stat_count"))
+        for c in req.facet_stats_for
+    }
+    return facets, stats
+
+
+def _resolve_curation(queries, req: SearchRequest, override_store, pinned, hidden):
+    """Q20 per query: override rules resolve DRIVER-SIDE (string match,
+    no Spark job, like populate_overrides, src/collection.cpp:427-493)
+    into ({qid: {doc_id: position}}, {qid: hidden}); explicit pins and
+    hides win. Under ``req.group_by`` up to group_limit claimants per
+    position survive, as a synthetic curated group."""
+    ids_per_pos = max(1, req.group_limit) if req.group_by else 1
+    res_pin, res_hid = {}, {}
+    for qid, q in queries:
+        p, h = dict((pinned or {}).get(qid, {})), tuple((hidden or {}).get(qid, ()))
+        if override_store is not None:
+            p, h = override_store.resolve(q, p, h, ids_per_pos=ids_per_pos)
+        res_pin[qid], res_hid[qid] = p, h
+    return res_pin, res_hid
+
+
+def _per_qid(keys: list[str], rows) -> dict[str, list]:
+    """Collected rows by qid ("" for one query)."""
+    out: dict[str, list] = {}
+    for r in rows:
+        out.setdefault(r["qid"] if keys else "", []).append(r)
+    return out
+
+
+def _frame(index: Index, keys: list[str], rows: list[tuple], ddl: str) -> DataFrame:
+    """Driver-side (qid, *values) rows as a DataFrame, without the qid
+    for one query."""
+    return index.spark.createDataFrame(
+        [r if keys else r[1:] for r in rows], "".join(f"{k} string, " for k in keys) + ddl
+    )
+
+
+def _curated_groups(index, matched, hydrated, keys, req, order, curation) -> DataFrame:
+    """Q20 under group_by (src/collection.cpp:890-922): per qid, up to
+    group_limit claimants of a position form a SYNTHETIC curated group
+    spliced at that GROUP position (``curation.splice_groups``) over
+    one collected page of organic groups, which exclude the curated
+    docs and rank by their top hit."""
+    by_pos = {q: claimants(p, req.group_limit) for q, p in curation.items()}
+    pairs = [(q, d) for q, bp in by_pos.items() for ds in bp.values() for d in ds]
+    scores: dict[str, dict] = {q: {} for q in curation}
+    if pairs:
+        cur = F.broadcast(_frame(index, keys, pairs, "doc_id long"))
+        hydrated = hydrated.join(cur, [*keys, "doc_id"], "left_anti")
+        rows = matched.join(cur, [*keys, "doc_id"], "left_semi").collect()
+        for q, rs in _per_qid(keys, rows).items():
+            scores[q] = {r["doc_id"]: r["score_milli"] for r in rs}
+    n = req.page * req.per_page
+    page = _per_qid(keys, (
+        _rank_groups(hydrated, keys, req.group_by, order, req.group_limit)
+        .where(F.col("group_pos") <= n + max(map(len, by_pos.values()), default=0))
+        .select(*keys, "g_score", "g_doc", "group_rank", "doc_id", "score_milli")
+        .collect()
+    ))
+    out = [
+        (q, *g)
+        for q in curation
+        for g in splice_groups([r[len(keys):] for r in page.get(q, [])], by_pos[q], scores[q], n)
+        if g[0] > n - req.per_page
+    ]
+    ddl = "group_pos int, group_rank int, doc_id long, score_milli long, curated boolean"
+    return _frame(index, keys, out, ddl)
+
+
+def _respond(index, matched, req, keys, rule=None, curation=None, hits=True) -> SearchResult:
+    """The ONE response layer over the matched set, keyed by ``keys``:
+    [] for :func:`search` (matched without qid), [qid] for a batch. It
+    reads ``req``'s response options only, and ``rule``, the Match
+    re-rank the matched set was scored under (its ``match_score``
+    follows doc_id in the hits, src/collection.cpp:713-728).
+    ``curation``: {qid ("" for one query): {doc_id: 1-based position}},
+    None when uncurated. ``hits`` False skips the hits page."""
+    docs = index.docs
+    order, include = _order(req, rule), _projection(req, docs.columns)
+    res = SearchResult(None, matched, *_facets(matched, docs, req, keys))
+    hydrated = _hydrate(matched, docs, [*dict(req.sort_by), *include, *req.group_by])
+    if req.group_by:
+        res.grouped = _rank_groups(hydrated, keys, req.group_by, order, req.group_limit)
+        if curation is not None:
+            res.grouped_hits = _curated_groups(index, matched, hydrated, keys, req, order, curation)
+    if not hits:
+        return res
+    cols = ["match_score", "score_milli"] if rule else ["score_milli"]
+    n = req.page * req.per_page
+    if curation is None:
+        res.hits = _top(hydrated, keys, order, n).where(F.col("rank") > n - req.per_page)
+        res.hits = res.hits.select(*keys, "rank", "doc_id", *cols, *include)
+        return res
+    # Q20 pinned hits: curation.splice_hits (src/collection.cpp:897-922)
+    # of each qid's top n + positions rows; `curated` marks the pins
+    n_pos = max((len(claimants(p)) for p in curation.values()), default=0)
+    top = sorted(_top(hydrated, keys, order, n + n_pos).collect(), key=lambda r: r["rank"])
+    page = _per_qid(keys, top)
+    out = [
+        (q, pos, d, *[0 if r is None else r[c] for c in cols], cur)
+        for q, pins in curation.items()
+        for pos, d, r, cur in splice_hits(
+            {r["doc_id"]: r for r in page.get(q, [])}, pins, n
+        )[n - req.per_page :]
+    ]
+    ddl = "rank int, doc_id long, " + "".join(f"{c} long, " for c in cols)
+    res.hits = _frame(index, keys, out, ddl + "curated boolean")
+    if include:
+        res.hits = res.hits.join(docs.select("doc_id", *include), "doc_id", "left")
+    res.hits = res.hits.select(*keys, "rank", "doc_id", *cols, *include, "curated")
+    return res
+
+
 def search(index: Index, req: SearchRequest) -> SearchResult:
     validate_request(req)
     tokens, excludes = parse_query(req.q)
-    docs = index.docs
-
-    # Q20: stored override rules resolve to effective pinned/hidden;
-    # under group_by, up to group_limit claimants per position survive
-    # (they form synthetic curated groups — curation.splice_groups)
-    pinned, hidden = req.pinned, req.hidden
-    if req.override_store is not None:
-        pinned, hidden = req.override_store.resolve(
-            req.q, req.pinned, req.hidden,
-            ids_per_pos=max(1, req.group_limit) if req.group_by else 1,
-        )
+    pinned, hidden = _resolve_curation(
+        [("", req.q)], req, req.override_store, {"": req.pinned}, {"": req.hidden}
+    )
 
     # WAND soundness: pruning is exact when (a) any post-search
     # narrowing is either absent or REFLECTED IN τ — attribute filters
@@ -577,7 +754,7 @@ def search(index: Index, req: SearchRequest) -> SearchResult:
     use_wand = (
         req.use_wand
         and req.mode == "or"
-        and not (hidden or excludes)
+        and not (hidden[""] or excludes)
         and not req.query_by_weights  # block maxima are unweighted
         and not req.sort_by
         and not req.rerank_proximity
@@ -585,23 +762,14 @@ def search(index: Index, req: SearchRequest) -> SearchResult:
         and not (req.facet_by or req.facet_stats_for or req.group_by)
         and req.page * req.per_page <= MAX_HITS
     )
-
-    # Second-stage Match re-rank over the candidate docs (match.py):
-    # text-match-primary mode scores the packed key incl. the typo-cost
-    # byte (see SearchRequest.rank_by_text_match; it takes precedence
-    # over rerank_proximity when both are set), Q11 proximity the packed
-    # Match score over the query tokens found in the dictionary. A
-    # wildcard has no query tokens to re-rank by.
+    # the second-stage Match re-rank (match.py): text-match-primary wins
+    # over proximity; a wildcard has no query tokens to re-rank by
     rule = None
-    if tokens != ["*"]:
-        if req.rank_by_text_match:
-            rule = "text_match"
-        elif req.rerank_proximity:
-            rule = "proximity"
+    if tokens != ["*"] and (req.rank_by_text_match or req.rerank_proximity):
+        rule = "text_match" if req.rank_by_text_match else "proximity"
 
-    # the matched set is a one-query batch: typo expansion, drop-tokens
-    # fallback, synonyms, deepening, excludes, Q9 filters and Q20 hidden
-    # docs all run in batch._batch_matched, the one implementation
+    # a one-query batch: the matched set is batch._batch_matched's, the
+    # response _respond's, keyed by nothing
     from typesense_spark.search.batch import _batch_matched
 
     attempts: list = []
@@ -610,177 +778,12 @@ def search(index: Index, req: SearchRequest) -> SearchResult:
         index, [("", req.q)], req.fields, req.num_typos, req.prefix_last,
         req.mode, req.typo_distance, req.query_by_weights, req.synonyms,
         req.synonym_store, req.drop_tokens_threshold,
-        {"": filt} if any(filt) else None, req.typo_tokens_threshold,
-        {"": tuple(hidden)} if hidden else None,
+        {"": filt} if any(filt) else None, req.typo_tokens_threshold, hidden,
         rank_tokens_by=req.rank_tokens_by, use_wand=use_wand, _rescore=rule,
         _attempts=attempts,
     ).drop("qid")
-
-    # Q17-Q19 facets over the FULL matched set (not just the page)
-    facets, facet_stats = {}, {}
-    if req.facet_by or req.facet_stats_for:
-        mdocs = matched.join(docs, "doc_id")
-        for col in req.facet_by:
-            facets[col] = (
-                mdocs.groupBy(F.col(col).alias("facet_value"))
-                .agg(F.count("*").alias("facet_count"))
-                .orderBy(F.col("facet_count").desc(), F.col("facet_value"))
-                .limit(req.max_facet_values)
-            )
-        for col in req.facet_stats_for:
-            # integer-exact stats; avg as micro-quantized integer division
-            # so the SQL oracle matches bit-for-bit
-            facet_stats[col] = mdocs.agg(
-                F.min(col).cast("long").alias("stat_min"),
-                F.max(col).cast("long").alias("stat_max"),
-                F.sum(col).cast("long").alias("stat_sum"),
-                F.count(col).alias("stat_count"),
-            ).select(
-                "stat_min",
-                "stat_max",
-                "stat_sum",
-                "stat_count",
-                F.expr("stat_sum * 1000000 div stat_count").alias("stat_avg_micro"),
-            )
-
-    # ordering: proximity re-rank leads when enabled (the reference's
-    # Match score is the PRIMARY relevance key, match_score.h:49-57),
-    # then explicit sort_by, then score DESC, doc_id DESC (reference
-    # tie-break, topster.h:254-257)
-    order = []
-    if rule == "text_match":
-        # Reference sort-field resolution (src/collection.cpp:708-728):
-        # the user may place `_text_match` ANYWHERE in sort_by
-        # (user-sort-primary: sort_by points ASC → [points asc,
-        # text_match desc] — CollectionSortingTest SortingOrder); when
-        # absent and fewer than 3 fields are given, text_match is
-        # APPENDED; with no sort_by at all it leads and BM25 plays the
-        # default_sorting_field role. Final tie = seq id DESC
-        # (topster.h:254-257) — BM25 (which the reference does not
-        # compute) must NOT slip between sort_by ties and the doc_id
-        # tie-break, or golden orderings like ExactSearchShouldBe-
-        # Stable's points-tied run diverge.
-        if req.sort_by:
-            keys = list(req.sort_by)
-            if TEXT_MATCH_FIELD not in [c for c, _ in keys] and len(keys) < 3:
-                keys.append((TEXT_MATCH_FIELD, "desc"))
-            for c, d in keys:
-                col = F.col("match_score") if c == TEXT_MATCH_FIELD else F.col(c)
-                order.append(col.desc() if d.lower() == "desc" else col.asc())
-            order.append(F.col("doc_id").desc())
-        else:
-            order += [
-                F.col("match_score").desc(),
-                F.col("score_milli").desc(),
-                F.col("doc_id").desc(),
-            ]
-    else:
-        if rule == "proximity":
-            order.append(F.col("match_score").desc())
-        order += [
-            (F.col(c).desc() if d.lower() == "desc" else F.col(c).asc())
-            for c, d in req.sort_by
-            if c != TEXT_MATCH_FIELD  # wildcard / BM25 modes: score 0 or N/A
-        ]
-        order += [F.col("score_milli").desc(), F.col("doc_id").desc()]
-
-    # reference exclude_fields: resolve the effective projection list
-    # (include minus exclude; bare exclude = all doc columns minus it)
-    include_fields = req.include_fields
-    if req.exclude_fields:
-        base_cols = include_fields or tuple(
-            c for c in docs.columns if c not in ("doc_id", "content_sha")
-        )
-        include_fields = tuple(
-            c for c in base_cols if c not in req.exclude_fields
-        )
-
-    hydrated = matched.join(docs, "doc_id") if (req.sort_by or include_fields or req.group_by) else matched
-
-    grouped = None
-    grouped_hits = None
-    if req.group_by:
-        # Q15 grouped top-k
-        grouped = _rank_groups(
-            hydrated, [], req.group_by, order, req.group_limit
-        ).select(*req.group_by, "doc_id", "score_milli", "group_rank")
-        if pinned:
-            # Q20 under group_by: curated docs leave the organic groups
-            # and form synthetic groups spliced at GROUP positions
-            # (curation.splice_groups) over ≤ page·per_page groups
-            by_pos = claimants(pinned, req.group_limit)
-            curated = [d for ds in by_pos.values() for d in ds]
-            n_groups = req.page * req.per_page
-            rows = (
-                _rank_groups(
-                    hydrated.where(~F.col("doc_id").isin(curated)), [],
-                    req.group_by, order, req.group_limit,
-                )
-                .select("g_score", "g_doc", "group_rank", "doc_id", "score_milli")
-                .orderBy(F.col("g_score").desc(), F.col("g_doc").desc(), "group_rank")
-                .limit((n_groups + len(by_pos)) * max(req.group_limit, 1))
-                .collect()
-            )
-            scores = {
-                r["doc_id"]: r["score_milli"]
-                for r in matched.where(F.col("doc_id").isin(curated)).collect()
-            }
-            grouped_hits = index.spark.createDataFrame(
-                [
-                    g
-                    for g in splice_groups(rows, by_pos, scores, n_groups)
-                    if g[0] > (req.page - 1) * req.per_page
-                ],
-                schema="group_pos int, group_rank int, doc_id long, "
-                "score_milli long, curated boolean",
-            )
-
-    # Q14/Q22: distributed top-k (TakeOrderedAndProject) then page slice
-    top_n = req.page * req.per_page
-    proj = ["rank", "doc_id", "score_milli", *include_fields]
-    if rule is not None:
-        # the reference returns the packed score with every hit
-        # (`text_match` in the result JSON, src/collection.cpp:713-728)
-        # — surface the ranking key, not just the order it induced
-        proj.insert(2, "match_score")
-    if pinned:
-        # Q20 pinned hits: driver-side positional splice of the (small)
-        # winner list, like the reference (src/collection.cpp:897-922;
-        # curation.splice_hits — the first claimant of a position wins).
-        # `curated` marks splice-pinned docs, like the reference's
-        # "curated": true hit annotation (src/collection.cpp:1027)
-        organic = hydrated.orderBy(*order).limit(top_n + len(claimants(pinned))).collect()
-        cols = ["match_score", "score_milli"] if rule is not None else ["score_milli"]
-        spliced = splice_hits({r["doc_id"]: r for r in organic}, pinned, top_n)
-        page_rows = [
-            (pos, d, *[0 if r is None else r[c] for c in cols], cur)
-            for pos, d, r, cur in spliced[(req.page - 1) * req.per_page :]
-        ]
-        hits = index.spark.createDataFrame(
-            page_rows,
-            schema="rank int, doc_id long, "
-            + "".join(f"{c} long, " for c in cols)
-            + "curated boolean",
-        )
-        if include_fields:
-            hits = hits.join(
-                docs.select("doc_id", *include_fields), "doc_id", "left"
-            )
-        hits = hits.select(*proj, "curated")
-    else:
-        top = hydrated.orderBy(*order).limit(top_n)
-        w = Window.orderBy(*order)  # ≤ page*per_page rows — driver-scale
-        hits = (
-            top.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") > (req.page - 1) * req.per_page)
-            .select(*proj)
-        )
-    return SearchResult(
-        hits=hits,
-        matched=matched,
-        facets=facets,
-        facet_stats=facet_stats,
-        attempts=attempts,
-        grouped=grouped,
-        grouped_hits=grouped_hits,
-    )
+    res = _respond(index, matched, req, [], rule, pinned if pinned[""] else None)
+    if res.grouped is not None:
+        res.grouped = res.grouped.select(*req.group_by, "doc_id", "score_milli", "group_rank")
+    res.attempts = attempts
+    return res

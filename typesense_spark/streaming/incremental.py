@@ -16,10 +16,11 @@ the standard near-real-time search design (segment-style appends +
 periodic full rebuild); the periodic rebuild is `checkpointed_build`.
 
 Appends and compaction take their parameters from the base index's one
-build record (``Index.params``): a batch packs with the base's
-``block_size`` and ``store_positions`` (salting off — micro-batches are
-small), and compaction rebuilds with the whole record. A ``block_size``
-a caller passes is a check against the record.
+build record (``Index.params``): a batch packs every field of the
+record with the base's ``block_size`` and ``store_positions`` (salting
+off — micro-batches are small), and compaction rebuilds with the whole
+record. A ``block_size`` or ``content_field`` a caller passes is a
+check against the record.
 """
 
 from __future__ import annotations
@@ -29,15 +30,30 @@ from dataclasses import replace
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from typesense_spark.index.build import BuildParams, Index, dictionary, pack_postings
+from typesense_spark.index.build import (
+    BuildParams, Index, dictionary, pack_postings, with_content_sha,
+)
 
 
-def _append_params(params: BuildParams, content_field: str, block_size, what: str):
-    """The base record, as a stream batch packs with it: one field, no
-    salting. A caller's ``block_size`` must match the base's."""
+def _append_params(
+    params: BuildParams, stream: DataFrame, content_field: str, block_size, what: str
+) -> BuildParams:
+    """The base record, as a stream batch packs with it: every field of
+    the record, no salting. ``content_field`` must be one of the
+    record's fields, the stream must carry a column for each, and a
+    caller's ``block_size`` must match the base's (ValueError
+    otherwise)."""
+    if content_field not in params.fields:
+        raise ValueError(
+            f"{what}: content_field {content_field!r} is not an indexed field "
+            f"{list(params.fields)}"
+        )
+    missing = [f for f in params.fields if f not in stream.columns]
+    if missing:
+        raise ValueError(f"{what}: the stream has no column {missing[0]!r}, an indexed field")
     if block_size is not None:
         params.check({"block_size": block_size}, what)
-    return replace(params, fields=(content_field,), salt_threshold=2**62, n_salts=1)
+    return replace(params, salt_threshold=2**62, n_salts=1)
 
 
 def incremental_index_stream(
@@ -51,13 +67,15 @@ def incremental_index_stream(
     """readStream of new docs → appended posting blocks via foreachBatch.
 
     ``new_docs_stream`` must carry ``doc_id`` (allocated upstream, e.g.
-    max existing id + stream offset) and the content field. Batches pack
-    with ``index``'s build record; ``block_size``, if given, must match
-    it (ValueError otherwise). Returns the StreamingQuery; caller
-    awaits/processes it.
+    max existing id + stream offset) and every indexed field. Batches
+    pack with ``index``'s build record; ``content_field`` must be one of
+    its fields and ``block_size``, if given, must match it (ValueError
+    otherwise). Returns the StreamingQuery; caller awaits/processes it.
     """
     spark = index.spark
-    params = _append_params(index.params, content_field, block_size, "incremental_index_stream")
+    params = _append_params(
+        index.params, new_docs_stream, content_field, block_size, "incremental_index_stream"
+    )
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -238,19 +256,24 @@ def snapshotted_index_stream(
 
     Frozen-stats semantics as :func:`incremental_index_stream`; the
     base dictionary, stats and build record come from ``root``'s
-    snapshot meta, and ``block_size``, if given, must match the record
-    (ValueError otherwise).
+    snapshot meta; ``content_field`` and ``block_size`` are checks
+    against the record, as there. The batch's docs table gets
+    ``content_sha`` like every other docs table
+    (``build.with_content_sha``).
     """
     from typesense_spark.index import snapshots
     from typesense_spark.index.build import parse_meta
 
     base_params, _ = parse_meta(snapshots.read_manifest(root)["meta"], root)
-    params = _append_params(base_params, content_field, block_size, "snapshotted_index_stream")
+    params = _append_params(
+        base_params, new_docs_stream, content_field, block_size, "snapshotted_index_stream"
+    )
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
+        batch_df = with_content_sha(batch_df)
         base = snapshots.load_index(spark, root)
         meta = snapshots.read_manifest(root)["meta"]
         packed = pack_postings(spark, batch_df, base.terms, base.stats, params)
